@@ -104,24 +104,22 @@ def incremental_cube(
     dim_country: DataFrame,
 ) -> DataFrame:
     """Incremental cube maintenance — the 100 TB evolution of the
-    reference's TRUNCATE + rebuild (warehouse.py:254-284): only NEW
-    fact rows (anti-joined on the deterministic fact_id) are joined
-    with the dims and appended.  Because the cube is a join (not an
-    aggregate), increment = append; the md5 surrogate makes the
-    operation idempotent under re-delivered deltas.
+    reference's TRUNCATE + rebuild (warehouse.py:254-284).  Returns
+    only the cube rows to APPEND: the fact rows whose deterministic
+    id is absent from the existing cube's fact_id, joined with the
+    dims.  Because the cube is a join (not an aggregate), increment =
+    append, and the 128-bit fact id makes a re-delivered delta come
+    back empty.
     """
-    from pyspark.sql import functions as F
-
     # dedup WITHIN the delta too: a batch containing the same fact row
     # twice (double-ingested file) must not append it twice
     new_rows = fact_delta.dropDuplicates(["id"]).join(
         existing_cube.select(F.col("fact_id").alias("id")), "id", "left_anti"
     )
-    delta_cube = build_cube(
+    return build_cube(
         new_rows, dim_product, dim_subcategory, dim_client,
         dim_date, dim_month, dim_year, dim_country,
     )
-    return existing_cube.unionByName(delta_cube)
 
 
 def register_cube_view(cube: DataFrame, name: str = "cube_view") -> None:

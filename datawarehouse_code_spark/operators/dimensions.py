@@ -7,13 +7,14 @@ region→dimcountry_subregion, orders.o_orderdate→dimdate(+month,+year).
 Where the reference loops per-row issuing point SELECT + INSERT
 (warehouse.py:76-169 — the N+1 pattern, ≥2 round-trips/row), each
 builder here is one declarative plan: distinct → derive → (optionally)
-anti-join against the existing target → append.  All dimension tables
-are small relative to the fact, so when joined later they broadcast.
+drop the keys the existing target already holds → append.  All
+dimension tables are small relative to the fact, so when joined later
+they broadcast.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.functions.scalars import date_key, quarter_start_month
@@ -162,31 +163,31 @@ def insert_if_not_exists(incoming: DataFrame, existing: DataFrame, key: list[str
 
 def insert_if_not_exists_report(
     incoming: DataFrame, existing: DataFrame, key: list[str]
-) -> tuple[DataFrame, dict[str, int]]:
+) -> tuple[DataFrame, Observation]:
     """O25: the load delta plus an AGGREGATE skip report.
 
     The reference logs one warning per skipped row
     (warehouse.py:94,116,126,136,169,210) — per-row logging is a
-    driver bottleneck at scale, so this reports totals instead:
-    {"incoming", "inserted", "skipped"} — computed in ONE aggregation
-    pass over a left join (two separate counts would scan `incoming`
-    twice).
+    driver bottleneck at scale, so this reports totals instead.  One
+    left join marks the incoming rows whose key already exists; an
+    Observation on the marked frame counts
+    {"incoming", "inserted", "skipped"} and the delta is the unmarked
+    rows, in `incoming`'s column order.  Nothing runs here: the job
+    that writes the delta also fills the report, so read
+    ``observation.get`` only after that job (before it, ``get``
+    blocks).  Spark 4.1 caveat: once a session has used an
+    Observation it no longer serializes, so a task closure that
+    captures the session (an MLlib model still holding its training
+    summary) fails in it afterwards — see train_quality_classifier.
     """
-    import logging
-
-    from pyspark.sql import functions as F
-
-    delta = insert_if_not_exists(incoming, existing, key)
+    hit = F.col("_hit").isNotNull()
+    report = Observation()
     marked = incoming.join(
-        existing.select(*key).distinct().withColumn("_hit", F.lit(1)), key, "left"
+        existing.select(*key).distinct().withColumn("_hit", F.lit(True)), key, "left"
+    ).observe(
+        report,
+        F.count(F.lit(1)).alias("incoming"),
+        F.count_if(~hit).alias("inserted"),
+        F.count_if(hit).alias("skipped"),
     )
-    row = marked.agg(
-        F.count(F.lit(1)).alias("n_in"), F.count("_hit").alias("n_skip")
-    ).collect()[0]
-    n_in, n_skip = row["n_in"], row["n_skip"]
-    report = {"incoming": n_in, "inserted": n_in - n_skip, "skipped": n_skip}
-    logging.getLogger(__name__).info(
-        "load on key %s: inserted %d, skipped %d duplicates of %d incoming",
-        key, report["inserted"], report["skipped"], n_in,
-    )
-    return delta, report
+    return marked.filter(~hit).select(*incoming.columns), report

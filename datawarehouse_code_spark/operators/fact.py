@@ -11,7 +11,7 @@ year-ranged queries.
 Scale notes:
 - lineitem ⋈ orders is big-big → shuffle hash/sort-merge on
   l_orderkey; at 100 TB, bucket both sides by orderkey to make it
-  co-located (see pipeline.write_bucketby_table).
+  co-located (see operators/layout.write_bucketed_table).
 - customer SCALES with data size (it is a "dimension" only
   relative to the fact), so it carries NO broadcast hint: a hint
   overrides AQE's size check and would OOM executors at 100 TB.
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.functions.scalars import date_key, surrogate_hash_key128
+from datawarehouse_code_spark.sources.acid import _Lease, _staged_overwrite
 
 
 def build_fact(lineitem: DataFrame, orders: DataFrame, customer: DataFrame) -> DataFrame:
@@ -66,7 +67,7 @@ def build_fact(lineitem: DataFrame, orders: DataFrame, customer: DataFrame) -> D
     )
 
 
-def write_fact(fact: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_fact(fact: DataFrame, path: str, lease: _Lease | None = None) -> None:
     """Partitioned fact write (O17): year range-partitioning ≙
     `partitionBy("year")`; Spark partition pruning replaces MySQL
     partition elimination.
@@ -78,25 +79,23 @@ def write_fact(fact: DataFrame, path: str, mode: str = "overwrite") -> None:
     costs one in-memory sort per task, no extra shuffle (verified:
     same exchange count with and without).
 
-    The overwrite branch rides acid's staged swap (r16 self-review,
-    same fix as write_cube): a bare overwrite deletes the live fact
-    before the job runs, so every rebuild opened a no-fact window
-    that a failed run held open.  Appends (the O6 sink) run under the
-    table's writer lease with crashed-swap repair first (r17 'append
-    eclipse' find, sources/acid.leased_append): an append itself
+    Without `lease` the table is rebuilt through acid's staged swap
+    (r16 self-review, same fix as write_cube): a bare overwrite
+    deletes the live fact before the job runs, so every rebuild opened
+    a no-fact window that a failed run held open.  With `lease` — the
+    handle of the ``sources/acid.leased_append`` block the caller
+    holds on `path` — the rows are APPENDED (the O6 sink).  The caller
+    takes the lease, not this function, so that its read of the
+    existing fact (the delta's anti-side) runs after the lease's
+    crashed-swap repair (r17 'append eclipse' find): an append itself
     never destroys data, but appending into a target a crashed swap
     left renamed aside re-CREATES the target with only the delta —
     and the next repair then deletes the aside holding the real
     table."""
     sorted_fact = fact.sortWithinPartitions("year", "date_id")
-    if mode == "overwrite":
-        from datawarehouse_code_spark.sources.acid import _staged_overwrite
-
+    if lease is None:
         _staged_overwrite(
             fact.sparkSession, sorted_fact, path, partition_by=["year"]
         )
         return
-    from datawarehouse_code_spark.sources.acid import leased_append
-
-    with leased_append(fact.sparkSession, path):
-        sorted_fact.write.mode(mode).partitionBy("year").parquet(path)
+    sorted_fact.write.mode("append").partitionBy("year").parquet(path)

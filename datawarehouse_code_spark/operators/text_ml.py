@@ -138,7 +138,8 @@ def train_quality_classifier(
     "Bag of Tricks for Efficient Text Classification") on Spark
     primitives: hashed n-gram features + a linear model.
 
-    Returns the fitted pyspark.ml LogisticRegressionModel; score with
+    Returns the fitted pyspark.ml LogisticRegressionModel, without its
+    training summary (see the note in the body); score with
     `quality_classifier_score` using the SAME num_features (feature
     hashing is position-based — a width mismatch silently scrambles
     every feature, so the scorer takes it explicitly rather than
@@ -163,7 +164,16 @@ def train_quality_classifier(
         featuresCol="features", labelCol="label",
         maxIter=max_iter, regParam=reg_param,
     )
-    return lr.fit(feats)
+    model = lr.fit(feats)
+    # Drop the training summary before anything scores with the model.
+    # Scoring ships the model to the executors, and the summary holds
+    # the SparkSession.  Once the session has used an Observation
+    # (run_pipeline_incremental's skip reports), Spark 4.1's session no
+    # longer serializes: its observationManager field is not transient.
+    # Every scoring task then fails with NotSerializableException.
+    # Nothing here reads the summary.
+    model._java_obj.setSummary(feats.sparkSession._jvm.scala.Option.empty())
+    return model
 
 
 def quality_classifier_score(

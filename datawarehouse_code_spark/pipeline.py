@@ -13,11 +13,13 @@ is simply re-run — no cross-table transaction needed (SURVEY.md §7.1).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
-from datawarehouse_code_spark.operators.cube import build_cube, write_cube
+from datawarehouse_code_spark.operators.cube import build_cube, incremental_cube
 from datawarehouse_code_spark.operators.dimensions import (
     build_dim_client,
     build_dim_country,
@@ -27,8 +29,10 @@ from datawarehouse_code_spark.operators.dimensions import (
     build_dim_date_year,
     build_dim_product,
     build_dim_product_subcategory,
+    insert_if_not_exists_report,
 )
 from datawarehouse_code_spark.operators.fact import build_fact, write_fact
+from datawarehouse_code_spark.sources.acid import _staged_overwrite, leased_append
 from datawarehouse_code_spark.sources.catalog import read_table
 
 
@@ -101,32 +105,7 @@ def build_warehouse(spark: SparkSession, sf_dir: str) -> Warehouse:
     return wh
 
 
-def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> Warehouse:
-    """Materialize the warehouse to parquet: dims → fact (partitioned
-    by year, O17) → cube (O22), every sink through acid's staged swap
-    (O24) — a rebuild never deletes a live table before its
-    replacement is in place, so readers of the previous load keep a
-    complete warehouse through (and past a crash of) the next one."""
-    from datawarehouse_code_spark.sources.acid import _staged_overwrite
-
-    wh = build_warehouse(spark, sf_dir)
-    for name in (
-        "dim_client",
-        "dim_product",
-        "dim_product_subcategory",
-        "dim_country",
-        "dim_country_subregion",
-        "dim_date",
-        "dim_date_month",
-        "dim_date_year",
-    ):
-        _staged_overwrite(spark, getattr(wh, name), f"{out_dir}/{name}")
-    write_fact(wh.fact, f"{out_dir}/fact")
-    write_cube(wh.cube, f"{out_dir}/cube")
-    return wh
-
-
-# natural key per warehouse table, for incremental (anti-join) loads
+# natural key per dimension table, for incremental (anti-join) loads
 _DIM_KEYS: dict[str, list[str]] = {
     "dim_client": ["client_id"],
     "dim_product": ["product_id"],
@@ -137,6 +116,23 @@ _DIM_KEYS: dict[str, list[str]] = {
     "dim_date_month": ["month_id"],
     "dim_date_year": ["year_id"],
 }
+# every materialized table, in load order: dims → fact → cube
+_TABLES = (*_DIM_KEYS, "fact", "cube")
+
+
+def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> Warehouse:
+    """Materialize the warehouse to parquet: dims → fact (partitioned
+    by year, O17) → cube (O22), every sink through acid's staged swap
+    (O24) — a rebuild never deletes a live table before its
+    replacement is in place, so readers of the previous load keep a
+    complete warehouse through (and past a crash of) the next one."""
+    wh = build_warehouse(spark, sf_dir)
+    for name in _TABLES:
+        if name == "fact":
+            write_fact(wh.fact, f"{out_dir}/fact")
+        else:
+            _staged_overwrite(spark, getattr(wh, name), f"{out_dir}/{name}")
+    return wh
 
 
 def run_pipeline_incremental(
@@ -148,85 +144,48 @@ def run_pipeline_incremental(
 
     - each dim: append only rows whose natural key is absent;
     - fact: append only rows whose 128-bit id is absent (partitioned
-      append preserves year pruning);
-    - cube: append the delta rows via incremental_cube semantics.
+      append through write_fact preserves year pruning);
+    - cube: append incremental_cube's rows, the facts absent from the
+      existing cube joined with the dims.
+
+    Each table is ONE plan run by the job that appends it: its report
+    is an Observation on that plan, read after the append, so no
+    count or collect re-runs the join.  Each table's read of its
+    existing rows, delta and append run under ITS writer lease
+    (leased_append), whose crashed-swap repair runs first — a table a
+    crash left renamed aside is rolled back before it is read — and a
+    concurrent maintainer's mid-swap window can neither eclipse nor
+    be eclipsed (r17 'append eclipse' find).
 
     Re-running against an up-to-date out_dir inserts nothing — the
     idempotency the reference gets from its per-row existence checks,
-    at table-at-once cost.  Returns per-table skip reports.
+    at table-at-once cost.  Returns per-table skip reports
+    ({"incoming", "inserted", "skipped"}; the cube's {"inserted"}).
     """
-    from datawarehouse_code_spark.operators.cube import incremental_cube
-    from datawarehouse_code_spark.operators.dimensions import (
-        insert_if_not_exists_report,
-    )
-
-    from datawarehouse_code_spark.sources.acid import leased_append
-
+    log = logging.getLogger(__name__)
     reports: dict[str, dict[str, int]] = {}
-    # each table's read-delta-append runs under ITS writer lease with
-    # repair-first (r17 'append eclipse' find, leased_append): the
-    # lazy read executes DURING the append job, so the lease covers
-    # the whole read-modify-append and a concurrent maintainer's
-    # mid-swap window can neither eclipse nor be eclipsed
-    for name, key in _DIM_KEYS.items():
-        with leased_append(spark, f"{out_dir}/{name}"):
-            existing = spark.read.parquet(f"{out_dir}/{name}")
-            delta, rep = insert_if_not_exists_report(
-                getattr(wh, name), existing, key
-            )
-            delta.write.mode("append").parquet(f"{out_dir}/{name}")
-        reports[name] = rep
-
-    existing_fact = spark.read.parquet(f"{out_dir}/fact")
-    fact_delta, rep = insert_if_not_exists_report(wh.fact, existing_fact, ["id"])
-    # append through write_fact so the delta lands year-partitioned
-    write_fact(fact_delta.select(*wh.fact.columns), f"{out_dir}/fact", mode="append")
-    reports["fact"] = rep
-
-    existing_cube = spark.read.parquet(f"{out_dir}/cube")
-    merged_cube = incremental_cube(
-        existing_cube,
-        wh.fact,
-        wh.dim_product,
-        wh.dim_product_subcategory,
-        wh.dim_client,
-        wh.dim_date,
-        wh.dim_date_month,
-        wh.dim_date_year,
-        wh.dim_country,
-    )
-    # persist before count: the delta's lineage is the full incremental
-    # cube join — without the cache it would execute twice (once for
-    # the report count, once for the write), the write_clean_corpus
-    # lesson applied at pipeline level.
-    cube_delta = merged_cube.join(
-        existing_cube.select("fact_id"), "fact_id", "left_anti"
-    ).persist()
-    try:
-        n_cube_new = cube_delta.count()
-        with leased_append(spark, f"{out_dir}/cube"):
-            cube_delta.write.mode("append").parquet(f"{out_dir}/cube")
-    finally:
-        cube_delta.unpersist()
-    reports["cube"] = {"inserted": n_cube_new}
+    for name in _TABLES:
+        path = f"{out_dir}/{name}"
+        with leased_append(spark, path) as lease:
+            existing = spark.read.parquet(path)
+            if name == "cube":
+                report = Observation()
+                delta = incremental_cube(
+                    existing, wh.fact, wh.dim_product,
+                    wh.dim_product_subcategory, wh.dim_client, wh.dim_date,
+                    wh.dim_date_month, wh.dim_date_year, wh.dim_country,
+                ).observe(report, F.count(F.lit(1)).alias("inserted"))
+            else:  # a dim on its natural key, the fact on its 128-bit id
+                delta, report = insert_if_not_exists_report(
+                    getattr(wh, name), existing, _DIM_KEYS.get(name, ["id"])
+                )
+            if name == "fact":
+                write_fact(delta, path, lease=lease)
+            else:
+                delta.write.mode("append").parquet(path)
+        reports[name] = report.get
+        log.info("incremental load of %s: %s", name, reports[name])
     return reports
-
-
-def write_bucketby_table(df: DataFrame, table: str, n_buckets: int, *keys: str) -> None:
-    """Spark `bucketBy` metastore-table write for shuffle-free
-    co-located joins at scale (big-big joins like lineitem ⋈ orders
-    at 100 TB).  Requires a warehouse-backed catalog (`saveAsTable`).
-
-    Renamed from ``write_bucketed`` (r14 verdict): that name collided
-    with :func:`sources.bucketed.write_bucketed`, the UNRELATED
-    hash-partition keyed-replace layout for path-addressed tables —
-    this one makes Catalyst joins co-located, that one makes keyed
-    maintenance O(|touched buckets|)."""
-    df.write.mode("overwrite").bucketBy(n_buckets, *keys).sortBy(*keys).saveAsTable(table)
-
-
-# Deprecated alias (pre-r15 name; see write_bucketby_table docstring).
-write_bucketed = write_bucketby_table
 
 
 def compact_parquet(

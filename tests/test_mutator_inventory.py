@@ -27,8 +27,6 @@ ALLOWLIST = {
     # --- fresh-target batch outputs: each call writes a NEW output
     # dataset the caller names (rerunnable from inputs; never swaps or
     # deletes a live table's data in place) -------------------------
-    ("pipeline.py", "write_bucketby_table"):
-        "metastore saveAsTable demo utility; fresh target per call",
     ("operators/corpus.py", "write_clean_corpus"):
         "fresh-target corpus export (r16 verdict: documented bare "
         "overwrite, caller-rerunnable batch output)",

@@ -287,3 +287,34 @@ def test_audit_plan_product_surface(spark):
 
     plan = formatted_plan(bad)
     assert audit_plan(bad)["has_cartesian"] or "NestedLoop" in plan
+
+
+def test_dim_delta_plan_scans_existing_once_with_one_observation(
+    spark, tmp_path
+):
+    """An incremental dim load is ONE plan: the delta scans the
+    existing table once, and its skip report is a single
+    CollectMetrics node in that plan (no second job re-runs the
+    join to count)."""
+    from datawarehouse_code_spark.operators.dimensions import (
+        insert_if_not_exists_report,
+    )
+    from datawarehouse_code_spark.pipeline import build_warehouse
+    from datawarehouse_code_spark.plans.audit import audit_plan, formatted_plan
+
+    path = str(tmp_path / "dim_client")
+    dim = build_warehouse(spark, SF_DIR).dim_client
+    dim.write.parquet(path)
+    delta, _ = insert_if_not_exists_report(
+        dim, spark.read.parquet(path), ["client_id"]
+    )
+    plan = formatted_plan(delta)
+    existing_scans = {
+        m.group(1)
+        for m in re.finditer(r"\((\d+)\) Scan parquet[^\n]*\n(.+?)(?:\n\n|$)", plan, re.S)
+        if path in m.group(2)
+    }
+    assert len(existing_scans) == 1, plan
+    # the other scan is the incoming dim's source (customer)
+    assert audit_plan(delta)["n_scans"] == 2, plan
+    assert len(set(re.findall(r"\((\d+)\) CollectMetrics", plan))) == 1, plan

@@ -146,3 +146,30 @@ def test_save_load_round_trip(spark, docs, tmp_path):
         map(tuple, quality_classifier_score(docs, loaded, nf).collect())
     )
     assert a == b
+
+
+def test_scoring_survives_an_observation_in_the_session(spark, docs):
+    """An Observation (the incremental load's skip reports) leaves
+    Spark 4.1's session unserializable, and a model that kept its
+    training summary carries the session into every scoring task.
+    The trained classifier must score in such a session."""
+    from pyspark.sql import Observation
+
+    from datawarehouse_code_spark.operators.text_ml import (
+        quality_classifier_score,
+        train_quality_classifier,
+    )
+
+    seen = Observation()
+    spark.range(3).observe(seen, F.count(F.lit(1)).alias("n")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    assert seen.get == {"n": 3}
+
+    pos, neg = _planted_seed(docs.limit(50))
+    model = train_quality_classifier(
+        pos.unionByName(neg).select("text", "label"),
+        num_features=1 << 12, max_iter=5,
+    )
+    rows = quality_classifier_score(docs.limit(50), model, num_features=1 << 12).collect()
+    assert len(rows) == 50

@@ -4,24 +4,28 @@ surface works, and the O25 skip report counts correctly."""
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.dimensions import insert_if_not_exists_report
-from datawarehouse_code_spark.pipeline import write_bucketby_table
+from datawarehouse_code_spark.operators.layout import write_bucketed_table
 from datawarehouse_code_spark.sources.catalog import read_table, register_views
 from tests.conftest import SF_DIR
 
 
-def test_bucketed_join_eliminates_shuffle(spark):
+def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
     """Joining two tables bucketed+sorted on the join key must need no
     Exchange (and no Sort beyond the bucket files): the co-location
     that replaces a multi-TB shuffle at scale."""
     li = read_table(spark, "lineitem", SF_DIR).select("l_orderkey", "l_quantity")
     orders = read_table(spark, "orders", SF_DIR).select("o_orderkey", "o_custkey")
-    write_bucketby_table(li, "t_li_bucketed", 8, "l_orderkey")
-    write_bucketby_table(
-        orders.withColumnRenamed("o_orderkey", "l_orderkey"), "t_ord_bucketed", 8,
-        "l_orderkey",
+    write_bucketed_table(
+        li, "t_li_bucketed", str(tmp_path / "li"), 8, ["l_orderkey"]
+    )
+    write_bucketed_table(
+        orders.withColumnRenamed("o_orderkey", "l_orderkey"), "t_ord_bucketed",
+        str(tmp_path / "ord"), 8, ["l_orderkey"],
     )
     try:
         a = spark.table("t_li_bucketed")
@@ -139,14 +143,37 @@ def test_salted_join_equals_plain_join(spark):
     assert plain.exceptAll(salted).count() == 0
 
 
-def test_insert_report_counts(spark):
+def test_insert_report_counts(spark, tmp_path):
+    """O25: the skip report rides the job that writes the delta and is
+    read after it.  An empty incoming frame — whichever way it is
+    empty — must still fire the Observation with zeros, or reading the
+    report would block the load forever."""
     orders = read_table(spark, "orders", SF_DIR)
     existing = orders.filter(F.col("o_orderkey") % 3 == 0).select("o_orderkey")
     delta, report = insert_if_not_exists_report(orders, existing, ["o_orderkey"])
-    assert report["incoming"] == orders.count()
-    assert report["inserted"] == delta.count()
-    assert report["skipped"] == report["incoming"] - report["inserted"]
-    assert report["skipped"] > 0
+    assert delta.columns == orders.columns
+    delta.write.parquet(str(tmp_path / "delta"))
+    rep = report.get
+    assert rep["incoming"] == orders.count()
+    assert rep["inserted"] == spark.read.parquet(str(tmp_path / "delta")).count()
+    assert rep["skipped"] == rep["incoming"] - rep["inserted"]
+    assert rep["skipped"] > 0
+
+    keys = existing.limit(3)
+    for i, empty in enumerate((
+        spark.range(0, 0).select(F.col("id").alias("o_orderkey")),
+        spark.createDataFrame([], "o_orderkey long"),
+        orders.select("o_orderkey").where(F.lit(False)),
+    )):
+        delta, report = insert_if_not_exists_report(empty, keys, ["o_orderkey"])
+        delta.write.parquet(str(tmp_path / f"empty{i}"))
+        # `get` blocks until the metrics arrive: read it on a thread
+        # with a deadline so a report that never fires fails, not hangs
+        got: list = []
+        reader = threading.Thread(target=lambda: got.append(report.get), daemon=True)
+        reader.start()
+        reader.join(60)
+        assert got == [{"incoming": 0, "inserted": 0, "skipped": 0}], i
 
 
 def test_fact_write_sorted_row_groups_for_skipping(spark, tmp_path):
