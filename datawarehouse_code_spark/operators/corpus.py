@@ -27,7 +27,6 @@ from datawarehouse_code_spark.operators.iterative import (
     convergence_signature,
     cut_lineage,
     release_checkpoint,
-    resolve_checkpoint_mode,
 )
 from datawarehouse_code_spark.operators.text import exact_dedup, near_dup_pairs_lsh
 
@@ -36,7 +35,7 @@ PairSource = Callable[[DataFrame, float], DataFrame]
 
 
 def _two_phase_components(
-    sym: DataFrame, max_rounds: int = 50, mode: str = "local"
+    sym: DataFrame, max_rounds: int = 50
 ) -> DataFrame:
     """(doc_id, rep) by the alternating large-star/small-star fixpoint
     (Kiveris et al. 2014, "Connected Components in MapReduce and
@@ -63,7 +62,6 @@ def _two_phase_components(
             F.greatest("d1", "d2").alias("u"), F.least("d1", "d2").alias("v")
         )
         .distinct(),
-        mode,
     )
     for _ in range(max_rounds):
         # --- large-star ---
@@ -80,7 +78,6 @@ def _two_phase_components(
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .distinct(),
-            mode,
         )
         # --- small-star (edges strictly oriented u > v by construction) ---
         m2 = large.groupBy("u").agg(F.min("v").alias("m"))
@@ -92,7 +89,6 @@ def _two_phase_components(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(m2.select("u", F.col("m").alias("v")))
             .distinct(),
-            mode,
             supersedes=large,
         )
         unchanged = (
@@ -126,7 +122,6 @@ def near_dup_components(
     pairs: DataFrame,
     max_iters: int = 20,
     algorithm: str = "propagation",
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """(doc_id, rep): every document in the pair graph mapped to the
     minimum doc_id of its connected component.
@@ -168,21 +163,17 @@ def near_dup_components(
     doc_id — no all-pairs step, no driver-side graph.  A lineage cut
     every round keeps the plan flat (the naive loop builds an
     exponentially growing plan and re-executes the pair source each
-    round); `checkpoint` picks the cut strategy
-    (operators/iterative.py — "auto" resolves to the reliable,
-    executor-loss-resilient `checkpoint()` iff the session has a
-    checkpoint dir, else `localCheckpoint()`).
+    round); every cut follows the session's checkpoint dir
+    (operators/iterative.cut_lineage).
     """
-    mode = resolve_checkpoint_mode(pairs, checkpoint)
-    edges = cut_lineage(pairs.select("d1", "d2"), mode)
+    edges = cut_lineage(pairs.select("d1", "d2"))
     sym = cut_lineage(
         edges.union(
             edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-        ),
-        mode,
+        )
     )
     if algorithm == "two_phase":
-        return _two_phase_components(sym, mode=mode)
+        return _two_phase_components(sym)
     if algorithm != "propagation":
         raise ValueError(f"unknown algorithm {algorithm!r}")
 
@@ -193,19 +184,15 @@ def near_dup_components(
 
     # seed = one propagation round fused into the node-set build:
     # same shuffle cost as the plain distinct() it replaces, one
-    # fewer loop round for every graph.  Non-eager in local mode —
-    # the signature agg right below materializes the cut in the
-    # same job (reliable mode stays eager: a non-eager reliable
-    # checkpoint re-runs the frame's job to write the files).
-    eager = mode == "reliable"
+    # fewer loop round for every graph.  Lazy in local mode — the
+    # signature agg right below materializes the cut in the same job.
     labels = cut_lineage(
         sym.groupBy(F.col("d1").alias("doc_id"))
         .agg(F.min("d2").alias("nbr_min"))
         .select(
             "doc_id", F.least("doc_id", F.col("nbr_min")).alias("rep")
         ),
-        mode,
-        eager=eager,
+        eager=False,
     )
     sig = _sig(labels)
     converged = False
@@ -242,7 +229,7 @@ def near_dup_components(
                 ).alias("b"),
                 "rep",
             ).select("doc_id", F.col("rep2").alias("rep"))
-        new_labels = cut_lineage(new_labels, mode, eager=eager)
+        new_labels = cut_lineage(new_labels, eager=False)
         new_sig = _sig(new_labels)
         # the signature agg above was the old label frame's last
         # reader; reclaim its reliable checkpoint before replacing it
@@ -256,7 +243,7 @@ def near_dup_components(
         # long-diameter component: finish with the diameter-independent
         # fixpoint rather than raising (propagation's partial labels are
         # discarded — two-phase restarts from the edge set)
-        return _two_phase_components(sym, mode=mode)
+        return _two_phase_components(sym)
     return labels
 
 
@@ -497,7 +484,7 @@ def mixture_resample(
         # validation collect and the broadcast-rates plan would
         # otherwise EACH re-run the full per-stratum aggregation over
         # `df` — two data-sized passes for one ≤len(target)-row frame.
-        observed = observed.localCheckpoint(eager=True)
+        observed = cut_lineage(observed)
         bad_w = [
             (r[strata_col], r["_n"])
             for r in observed.filter(
@@ -537,7 +524,6 @@ def curriculum_phases(
     score_col: str,
     id_col: str = "doc_id",
     strategy: str = "auto",
-    checkpoint: str = "auto",
     auto_ntile_max_bytes: int = CURRICULUM_AUTO_NTILE_MAX_BYTES,
 ) -> DataFrame:
     """Curriculum phase assignment: rank the corpus by a difficulty /
@@ -577,8 +563,7 @@ def curriculum_phases(
     sorts only its own near-equal slice) + offset = exact global
     rank; (4) phase from the ntile allocation formula in pure integer
     arithmetic.  Cost: two corpus shuffles of a narrow (id, score)
-    projection + one bounded collect.  `checkpoint` follows the
-    iterative-operator knob ("auto" | "local" | "reliable").
+    projection + one bounded collect.
 
     Output composes with assign_shards / export_shards per phase."""
     if n_phases < 1:
@@ -599,12 +584,10 @@ def curriculum_phases(
             f"curriculum_phases: strategy must be 'auto', 'ntile' or "
             f"'boundary': {strategy!r}"
         )
-    mode = resolve_checkpoint_mode(docs, checkpoint)
     parted = cut_lineage(
         docs.select(id_col, score_col)
         .repartitionByRange(F.col(score_col).asc(), F.col(id_col).asc())
         .withColumn("_pid", F.spark_partition_id()),
-        mode,
     )
     # bounded collect: one row per shuffle partition (cluster config,
     # not data) — the established manifest-sized driver hop

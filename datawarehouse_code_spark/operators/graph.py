@@ -23,7 +23,7 @@ join that partitions by src) + one groupBy dst — the identical
 join+agg round as the connected-components loop, AQE-splittable on
 hot nodes.  Fixed iteration count k (driver-side Python loop, no
 convergence fixpoint needed); lineage stays k joins deep, so for
-large k localCheckpoint each round like near_dup_components does.
+large k cut it each round like near_dup_components does.
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ from datawarehouse_code_spark.operators.iterative import (
     convergence_signature,
     cut_lineage,
     release_checkpoint,
-    resolve_checkpoint_mode,
 )
 
 TOTAL_MASS = 10**12
@@ -46,7 +45,6 @@ def pagerank_fixed(
     iters: int = 3,
     checkpoint_every: int | None = 8,
     check_dangling: bool = True,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """Integer-mass PageRank over a directed edge list (src, dst) for
     a FIXED number of iterations.  Every node must appear as a src at
@@ -68,19 +66,14 @@ def pagerank_fixed(
     checkpointed up front: every iteration joins against all three,
     and without the cut each round's plan would re-derive the whole
     upstream edge lineage (at scale typically a large join +
-    distinct) once per iteration.  `checkpoint` picks the cut
-    strategy — see operators/iterative.py ("auto" = reliable
-    `checkpoint()` iff a checkpoint dir is configured, else
-    `localCheckpoint()`; executor loss mid-loop is unrecoverable
-    under the local variant on a real cluster).
+    distinct) once per iteration.  Every cut follows the session's
+    checkpoint dir (operators/iterative.cut_lineage).
     """
-    mode = resolve_checkpoint_mode(edges, checkpoint)
-    edges = cut_lineage(edges, mode)
+    edges = cut_lineage(edges)
     nodes = cut_lineage(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct(),
-        mode,
     )
     if check_dangling:
         srcs = edges.select("src").distinct()
@@ -100,7 +93,7 @@ def pagerank_fixed(
     # edge-sized materialization is pure added cost (isolated A/B at
     # sf0.1: 2.98/3.11 s → 3.28/3.44 s, identical output).
     outdeg = cut_lineage(
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), mode
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     )
     n_nodes = nodes.count()
     base = TOTAL_MASS // n_nodes
@@ -131,7 +124,7 @@ def pagerank_fixed(
             ).alias("mass"),
         )
         if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            ranks = cut_lineage(ranks, mode, supersedes=prev_cut)
+            ranks = cut_lineage(ranks, supersedes=prev_cut)
             prev_cut = ranks
     return ranks
 
@@ -210,7 +203,6 @@ def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 20,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """Unweighted shortest-path hop distances from a SOURCE SET — the
     fourth graph primitive beside pagerank, connected components, and
@@ -228,8 +220,8 @@ def bfs_distances(
     distance improved.  Rounds needed = graph eccentricity from the
     seed set, each round join+agg on node ids, checkpointed like the
     other iterative operators (the lineage would otherwise grow per
-    round; `checkpoint` picks the strategy — operators/iterative.py).
-    `max_hops` bounds the loop; hitting it
+    round — operators/iterative.py).  `max_hops` bounds the loop;
+    hitting it
     truncates distances at max_hops (documented, not an error —
     distances are exact for every node whose dist < max_hops).
 
@@ -251,17 +243,14 @@ def bfs_distances(
     node id; at 100 TB the same shape as one pagerank iteration.  No
     driver-side graph state — only the convergence counter.
     """
-    mode = resolve_checkpoint_mode(edges, checkpoint)
     clean = edges.filter(F.col("a") != F.col("b")).select("a", "b")
     sym = cut_lineage(
         clean.union(
             clean.select(F.col("b").alias("a"), F.col("a").alias("b"))
         ).distinct(),
-        mode,
     )
     src = sources.toDF("node").distinct()
-    eager = mode == "reliable"
-    dist = cut_lineage(src.withColumn("dist", F.lit(0)), mode)
+    dist = cut_lineage(src.withColumn("dist", F.lit(0)))
     frontier = dist
 
     def _sig(frame: DataFrame) -> tuple:
@@ -278,8 +267,7 @@ def bfs_distances(
             dist.unionByName(proposals)
             .groupBy("node")
             .agg(F.min("dist").alias("dist")),
-            mode,
-            eager=eager,
+            eager=False,
         )
         new_sig = _sig(merged)
         if new_sig == sig:
@@ -292,18 +280,15 @@ def bfs_distances(
             break
         sig = new_sig
         # the next frontier = nodes whose distance just improved.
-        # Non-eager in local mode: it materializes inside the next
-        # round's signature job (reliable mode stays eager — a
-        # non-eager reliable checkpoint re-runs the frame's job to
-        # write the files).
+        # Lazy in local mode: it materializes inside the next round's
+        # signature job.
         new_frontier = cut_lineage(
             merged.join(
                 dist.select("node", F.col("dist").alias("_old")), "node", "left"
             ).filter(
                 F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
             ).select("node", "dist"),
-            mode,
-            eager=eager,
+            eager=False,
         )
         # the new cuts are (or will be) materialized and the round's
         # inputs are dead: reclaim their reliable-checkpoint files now
@@ -327,7 +312,6 @@ def label_propagation(
     edges: DataFrame,
     n_rounds: int = 4,
     checkpoint_every: int = 2,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (LPA) —
     the fifth graph primitive beside pagerank, connected components
@@ -360,17 +344,15 @@ def label_propagation(
     count, one per-node window for the argmax — the same join+agg
     round as the CC/pagerank loops, AQE-splittable on hot nodes.
     A lineage cut every `checkpoint_every` rounds caps the growing
-    plan exactly as the other iterative operators do (`checkpoint`
-    picks the strategy — operators/iterative.py).  No driver state
-    beyond the loop counter.
+    plan exactly as the other iterative operators do
+    (operators/iterative.py).  No driver state beyond the loop
+    counter.
     """
-    mode = resolve_checkpoint_mode(edges, checkpoint)
     clean = edges.filter(F.col("a") != F.col("b")).select("a", "b")
     sym = cut_lineage(
         clean.union(
             clean.select(F.col("b").alias("a"), F.col("a").alias("b"))
         ).distinct(),
-        mode,
     )
     labels = (
         sym.select(F.col("a").alias("node"))
@@ -400,7 +382,7 @@ def label_propagation(
             ).alias("label")
         )
         if checkpoint_every and (r + 1) % checkpoint_every == 0:
-            labels = cut_lineage(labels, mode, supersedes=prev_cut)
+            labels = cut_lineage(labels, supersedes=prev_cut)
             prev_cut = labels
     return labels
 
@@ -409,7 +391,6 @@ def weighted_shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
     max_rounds: int = 20,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """Weighted shortest-path distances from a SOURCE SET — the
     weighted companion of bfs_distances (hop counts) and the sixth
@@ -437,8 +418,8 @@ def weighted_shortest_paths(
     re-relaxes only when its own distance improved, so round k ends
     with exactly min-over-≤k-edge-paths.  Scale shape per round: one
     equi-join shuffled on node id + one min-groupBy — the
-    bfs/pagerank/LPA round, checkpointed lineage (`checkpoint` picks
-    the strategy — operators/iterative.py).
+    bfs/pagerank/LPA round, checkpointed lineage
+    (operators/iterative.py).
 
     Convergence is the MONOTONE SIGNATURE of bfs_distances (r17): the
     weights are integers by contract, so the min-merge only ever adds
@@ -459,7 +440,6 @@ def weighted_shortest_paths(
     edge scan per call (min(min-per-pair) == global min, so the
     check is exact).
     """
-    mode = resolve_checkpoint_mode(edges, checkpoint)
     # self-loops ride THROUGH the symmetrize (they collapse to (a, a)
     # rows) so the min-weight check still sees a negative self-loop —
     # a genuine negative cycle — before they are dropped for the loop
@@ -472,7 +452,6 @@ def weighted_shortest_paths(
         )
         .groupBy("a", "b")
         .agg(F.min("w").alias("w")),
-        mode,
     )
     min_w = sym_all.agg(F.min("w").alias("mn")).first()["mn"]
     if min_w is not None and min_w < 0:
@@ -483,10 +462,7 @@ def weighted_shortest_paths(
         )
     sym = sym_all.filter(F.col("a") != F.col("b"))
     src = sources.toDF("node").distinct()
-    eager = mode == "reliable"
-    dist = cut_lineage(
-        src.withColumn("dist", F.lit(0).cast("bigint")), mode
-    )
+    dist = cut_lineage(src.withColumn("dist", F.lit(0).cast("bigint")))
     frontier = dist
 
     def _sig(frame: DataFrame) -> tuple:
@@ -504,8 +480,7 @@ def weighted_shortest_paths(
             dist.unionByName(proposals)
             .groupBy("node")
             .agg(F.min("dist").alias("dist")),
-            mode,
-            eager=eager,
+            eager=False,
         )
         new_sig = _sig(merged)
         if new_sig == sig:
@@ -517,10 +492,8 @@ def weighted_shortest_paths(
             break
         sig = new_sig
         # next frontier = nodes whose distance just improved.
-        # Non-eager in local mode: it materializes inside the next
-        # round's signature job (reliable mode stays eager — a
-        # non-eager reliable checkpoint re-runs the frame's job to
-        # write the files).
+        # Lazy in local mode: it materializes inside the next round's
+        # signature job.
         new_frontier = cut_lineage(
             merged.join(
                 dist.select("node", F.col("dist").alias("_old")),
@@ -529,8 +502,7 @@ def weighted_shortest_paths(
             )
             .filter(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
             .select("node", "dist"),
-            mode,
-            eager=eager,
+            eager=False,
         )
         # the round's inputs are dead once both cuts materialize —
         # reclaim reliable-checkpoint files (round 1 aliases frontier

@@ -1,32 +1,30 @@
-"""Shared lineage-truncation strategy for the iterative operators.
+"""The package's one lineage cut, plus the helpers its iterative
+operators share.
 
-Every fixpoint/fixed-round operator in this repo (pagerank, BFS, LPA,
-weighted SSSP, near-dup connected components, BPE training) must cut
-its lineage each round — the naive loop builds an exponentially
-growing plan and re-executes the whole upstream per iteration.  Spark
-offers two cuts with different failure semantics:
+Every fixpoint/fixed-round operator (pagerank, BFS, LPA, weighted
+SSSP, near-dup connected components, BPE training) must cut its
+lineage each round — the naive loop builds an exponentially growing
+plan and re-executes the whole upstream per iteration — and many
+one-shot queries materialize a frame that several consumers read.
+Spark offers two cuts with different failure semantics:
 
 - ``DataFrame.localCheckpoint()``: materializes partitions in executor
   block storage.  Fast (no distributed-FS write), but the truncated
   lineage is UNRECOVERABLE if an executor holding blocks dies — on a
-  real cluster a single executor loss mid-loop fails the job.  Fine on
+  real cluster a single executor loss fails the job.  Fine on
   local[n] (one JVM: losing "the executor" loses the job anyway).
 - ``DataFrame.checkpoint()``: materializes to the RELIABLE checkpoint
   directory (HDFS/object store).  Survives executor loss; costs a
   distributed write per cut.
 
-Which one is right depends on where the job runs, so the operators
-take a ``checkpoint`` knob instead of hardcoding the local variant:
-
-- ``"local"`` — always ``localCheckpoint`` (single-node / ephemeral).
-- ``"reliable"`` — always ``checkpoint``; raises up front if no
-  checkpoint directory is configured (failing at the first cut with
-  Spark's own error would waste the work done before it).
-- ``"auto"`` (default) — reliable iff the session has a checkpoint
-  directory (``spark.sparkContext.setCheckpointDir(...)``), local
-  otherwise.  A cluster deployment that configures the dir gets
-  executor-loss resilience with no per-operator code change; local
-  runs keep the cheap path.
+Which one is right depends on where the job runs, so no call site
+picks: :func:`cut_lineage` is the only cut in the package (pinned by
+tests/test_lineage_cuts.py) and takes the reliable ``checkpoint()``
+iff the session has a checkpoint directory
+(``spark.sparkContext.setCheckpointDir(...)``), ``localCheckpoint()``
+otherwise.  A cluster deployment that configures the dir gets
+executor-loss resilience at every cut with no code change; local
+runs (``get_spark`` sets no dir) keep the cheap path.
 """
 
 from __future__ import annotations
@@ -35,8 +33,6 @@ import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-CHECKPOINT_MODES = ("auto", "local", "reliable")
 
 
 def convergence_signature(df: DataFrame, col: str) -> tuple:
@@ -60,50 +56,29 @@ def convergence_signature(df: DataFrame, col: str) -> tuple:
     return (row["n"], row["s"])
 
 
-def resolve_checkpoint_mode(df: DataFrame, checkpoint: str) -> str:
-    """Collapse ``"auto"`` to ``"local"`` or ``"reliable"`` for THIS
-    session (reliable iff a checkpoint dir is set), validating the
-    knob and the reliable-mode precondition up front so iterative
-    operators fail before doing any work rather than at round k."""
-    if checkpoint not in CHECKPOINT_MODES:
-        raise ValueError(
-            f"checkpoint must be one of {CHECKPOINT_MODES}: {checkpoint!r}"
-        )
-    has_dir = df.sparkSession.sparkContext.getCheckpointDir() is not None
-    if checkpoint == "reliable" and not has_dir:
-        raise ValueError(
-            "checkpoint='reliable' requires "
-            "spark.sparkContext.setCheckpointDir(...) to be configured"
-        )
-    if checkpoint == "auto":
-        return "reliable" if has_dir else "local"
-    return checkpoint
-
-
 def cut_lineage(
     df: DataFrame,
-    mode: str,
     eager: bool = True,
     supersedes: DataFrame | None = None,
 ) -> DataFrame:
-    """Truncate ``df``'s lineage per a RESOLVED mode (``"local"`` or
-    ``"reliable"`` — call :func:`resolve_checkpoint_mode` once per
-    operator invocation, not per round, so 'auto' doesn't re-probe the
-    JVM every iteration).
+    """Truncate ``df``'s lineage: reliable ``checkpoint()`` when the
+    session has a checkpoint dir, ``localCheckpoint()`` otherwise (one
+    py4j probe per call, no job).
+
+    ``eager=False`` defers the materialization to the first action
+    that reads the frame — in local mode only.  A reliable cut is
+    always eager: a lazy reliable checkpoint re-runs the frame's job
+    to write its files, so laziness would buy a second computation.
 
     ``supersedes`` names the PREVIOUS cut in the same iterative chain
     — a frame this round's result replaces and nothing will read
     again.  In reliable mode each round otherwise leaves one full
-    checkpoint copy of the working frame on the distributed FS
-    (``spark.cleaner.referenceTracking.cleanCheckpoints`` defaults to
-    false, so Spark never deletes them): a 20-round loop persists 20
-    copies of which only the last is ever needed, and repeated
-    pipeline runs grow the checkpoint dir without bound.  Passing the
-    superseded frame deletes its checkpoint files once the NEW cut has
-    materialized (eager only — with ``eager=False`` nothing backs the
-    new frame yet, so the superseded copy must survive until an action
-    runs and deletion is skipped).  Local mode ignores it: superseded
-    executor blocks are reclaimed by the ContextCleaner on driver GC.
+    checkpoint copy of the working frame on the distributed FS: a
+    20-round loop persists 20 copies of which only the last is ever
+    needed.  Passing the superseded frame deletes its checkpoint files
+    (:func:`release_checkpoint`) once the new cut has materialized.
+    Local mode ignores it: superseded executor blocks are reclaimed by
+    the ContextCleaner on driver GC.
 
     ONLY pass a frame that is genuinely dead.  Deleting the checkpoint
     of a frame that is referenced later makes it unrecomputable (the
@@ -111,20 +86,17 @@ def cut_lineage(
     lists, degree tables) must never be superseded.
 
     The TERMINAL cut of each chain (the returned result's backing
-    checkpoint) is intentionally not deleted here — the caller still
-    reads it.  Sessions that set
+    checkpoint), like every one-shot cut, is not deleted here — the
+    caller still reads it.  Sessions that set
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (the
     repo's get_spark does) reclaim it when the driver GCs the
-    reference; cluster deployments configuring a checkpoint dir should
+    reference; cluster deployments configuring a checkpoint dir must
     set the same conf."""
-    if mode == "reliable":
-        out = df.checkpoint(eager=eager)
-        if supersedes is not None and eager:
-            _delete_superseded_checkpoint(out, supersedes)
-        return out
-    if mode == "local":
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=eager)
-    raise ValueError(f"unresolved checkpoint mode: {mode!r}")
+    out = df.checkpoint(eager=True)
+    release_checkpoint(supersedes)
+    return out
 
 
 def _reliable_checkpoint_file(df: DataFrame) -> str | None:
@@ -154,12 +126,14 @@ def _reliable_checkpoint_file(df: DataFrame) -> str | None:
 
 def release_checkpoint(df: DataFrame | None, *, unless: tuple = ()) -> None:
     """Best-effort deletion of a DEAD frame's reliable checkpoint —
-    the post-loop sibling of ``cut_lineage(supersedes=...)`` for
+    what ``cut_lineage(supersedes=...)`` runs, and called directly for
     frames that die at loop exit rather than by being replaced (the
     final frontier of a converged BFS, the n-1'th distance table).
-    No-op for local checkpoints and for ``df`` identical (by object)
-    to any frame in ``unless`` — the guard for loops whose first
-    round aliases two chain heads to one frame."""
+    GC must never fail a computation that already succeeded, so
+    filesystem errors warn instead of raising.  No-op for local
+    checkpoints and for ``df`` identical (by object) to any frame in
+    ``unless`` — the guard for loops whose first round aliases two
+    chain heads to one frame."""
     if df is None or any(df is u for u in unless):
         return
     path = _reliable_checkpoint_file(df)
@@ -173,31 +147,6 @@ def release_checkpoint(df: DataFrame | None, *, unless: tuple = ()) -> None:
     except Exception as e:  # noqa: BLE001 — GC is best-effort
         warnings.warn(
             f"failed to delete dead checkpoint {path}: {e}",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
-
-def _delete_superseded_checkpoint(new: DataFrame, old: DataFrame) -> None:
-    """Best-effort deletion of ``old``'s reliable checkpoint files
-    after ``new``'s checkpoint has materialized.  GC must never fail a
-    computation that already succeeded, so filesystem errors warn
-    instead of raising (the leak is then no worse than the
-    pre-deletion behavior)."""
-    old_file = _reliable_checkpoint_file(old)
-    if old_file is None:
-        return
-    new_file = _reliable_checkpoint_file(new)
-    if old_file == new_file:
-        return
-    try:
-        sc = new.sparkSession.sparkContext
-        jpath = sc._jvm.org.apache.hadoop.fs.Path(old_file)
-        fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-    except Exception as e:  # noqa: BLE001 — GC is best-effort
-        warnings.warn(
-            f"failed to delete superseded checkpoint {old_file}: {e}",
             RuntimeWarning,
             stacklevel=2,
         )

@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datawarehouse_code_spark.operators.iterative import cut_lineage
+
 
 def _local_path(file_path: str) -> str:
     """_metadata.file_path URI -> a path pyarrow can open (file: URIs
@@ -674,7 +676,10 @@ def read_pruned_rowgroups(
     totals = rg_manifest.groupBy("file_path").agg(
         F.count(F.lit(1)).alias("_n_total")
     )
-    plan = (
+    # materialized once: the stats collect, the whole-file collect,
+    # and the Arrow scan all consume it — without the cut the
+    # prune+agg+join shuffles would re-execute up to three times
+    plan = cut_lineage(
         keep.groupBy("file_path")
         .agg(
             F.sort_array(F.collect_list("rg")).alias("rgs"),
@@ -686,10 +691,6 @@ def read_pruned_rowgroups(
             "rgs",
             (F.col("_n_keep") == F.col("_n_total")).alias("_whole"),
         )
-        # materialized once: the stats collect, the whole-file collect,
-        # and the Arrow scan all consume it — without the cut the
-        # prune+agg+join shuffles would re-execute up to three times
-        .localCheckpoint()
     )
     # one metadata-sized job: per-_whole file counts + a sample path
     # (for the layout guard) — decides the split without collecting

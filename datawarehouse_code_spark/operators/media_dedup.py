@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.operators.iterative import cut_lineage
+
 DHASH_SCHEMA = (
     "media_id BIGINT, b0 INT, b1 INT, b2 INT, b3 INT, dhash BIGINT"
 )
@@ -384,11 +386,11 @@ def dhash_near_dup_pairs(
     over 4 bands... exactly: ≤ 3 flips occupy ≤ 3 bands).
 
     The band table feeds four consumers (the cap's carrier count +
-    semi-join, both self-join sides), so it is materialized once with
-    an ephemeral localCheckpoint — the winnowing-fingerprint
-    precedent; without it the decode+hash map re-runs per consumer."""
+    semi-join, both self-join sides), so it is materialized once —
+    the winnowing-fingerprint precedent; without it the decode+hash
+    map re-runs per consumer."""
     bands = _cap_hot_bands(
-        _explode_bands(hashes).localCheckpoint(), band_cap
+        cut_lineage(_explode_bands(hashes)), band_cap
     )
     left = bands.select(
         F.col("media_id").alias("d1"), "band_idx", "band_val",
@@ -587,9 +589,9 @@ def audio_near_dup_pairs(
     overlapping grams with its source — the shift-robustness fixed
     framings lack, at hop-sample granularity.  The fingerprint table
     feeds four consumers (cap + both join sides) and is materialized
-    once via localCheckpoint, the winnowing precedent."""
+    once, the winnowing precedent."""
     fps = _cap_hot_fps(
-        audio_fingerprints(media, win, hop, gram, qshift).localCheckpoint(),
+        cut_lineage(audio_fingerprints(media, win, hop, gram, qshift)),
         hot_cap,
     )
     a = fps.select(F.col("media_id").alias("d1"), "fp")

@@ -39,6 +39,7 @@ from datawarehouse_code_spark.functions.scalars import (
 from datawarehouse_code_spark.functions.scalars import (
     l2_norm,
 )
+from datawarehouse_code_spark.operators.iterative import cut_lineage
 
 __all__ = [
     "as_double_array", "dot", "l2_norm", "cosine",
@@ -844,6 +845,15 @@ def ivf_topk(
     set, so at 100 TB (even sample-fit) the iteration cap is the fit's
     dominant cost knob.  Recall measured unchanged at 8 vs 20 on the
     fixture (test_similarity_ivf_recall_vs_bruteforce).
+
+    Precondition, not checked: `vec_id` must be unique in
+    `embeddings` (it is the table's primary key).  The sparse-probe
+    path (n_probes·2 < n_centroids) does not dedup (query, candidate)
+    pairs: with unique ids a candidate has one centroid and a query
+    probes distinct centroids, so each pair is emitted at most once.
+    A duplicated `vec_id` breaks both: the candidate side keeps one of
+    its vectors, and the query side can probe one centroid twice and
+    emit duplicate pairs into the top-k.
     """
     vecs = _with_inv_norm(
         embeddings.select("vec_id", as_double_array(F.col("embedding")).alias("v"))
@@ -1803,13 +1813,7 @@ def query_ivf_index(
     )
     # eagerly materialized: it is joined below AND probed for the
     # bounded id-list pushdown — |Q|·k·rerank_factor rows, small.
-    # Deliberately localCheckpoint, NOT the session-auto strategy:
-    # this is a SERVING-path read, and on a cluster whose checkpoint
-    # dir is configured for the iterative TRAINING operators, 'auto'
-    # would pay a distributed-FS write and leak one never-cleaned
-    # reliable-checkpoint dir per query; losing an executor mid-query
-    # just fails one query, which a serving layer retries.
-    shortlist = shortlist.localCheckpoint(eager=True)
+    shortlist = cut_lineage(shortlist)
     vec_scan = spark.read.parquet(f"{path}/vectors").filter(
         F.col("cent_id").isin(probe_ids)
     )

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from datawarehouse_code_spark.operators.iterative import cut_lineage
+
 _MAX_LONG = (1 << 63) - 1
 _WS_RE = re.compile(r"\s+")
 
@@ -984,10 +986,9 @@ def duplicate_spans(
     ).select("doc_id", F.col("g.i").alias("i"), F.col("g.gram").alias("gram"))
     # the gram table feeds TWO consumers (the duplicate-gram count and
     # the flagged semi-join probe side) — materialize it once (r17,
-    # the winnowing_near_dup_pairs precedent; an ephemeral QUERY cut,
-    # so localCheckpoint, not the session-auto strategy), and generate
-    # it spread across the doc key rather than the scan's splits
-    grams = grams.localCheckpoint(eager=True)
+    # the winnowing_near_dup_pairs precedent), and generate it spread
+    # across the doc key rather than the scan's splits
+    grams = cut_lineage(grams)
     dup = (
         grams.select("doc_id", "gram")
         .distinct()
@@ -1464,12 +1465,13 @@ def winnowing_match_spans(
     ≥ `min_shared` shared fingerprints.
 
     Scale shape: the positions table feeds the cap + both join sides,
-    so it is materialized once (localCheckpoint, the pair-join
-    precedent); the join is fp-bucketed and cap-bounded, the output
-    pair-sized."""
-    fps = winnowing_fingerprint_positions(
-        documents, k=k, w=w, text_col=text_col, id_col=id_col
-    ).localCheckpoint()
+    so it is materialized once (the pair-join precedent); the join is
+    fp-bucketed and cap-bounded, the output pair-sized."""
+    fps = cut_lineage(
+        winnowing_fingerprint_positions(
+            documents, k=k, w=w, text_col=text_col, id_col=id_col
+        )
+    )
     cold = (
         fps.groupBy("fp")
         .agg(F.countDistinct(id_col).alias("_k"))
@@ -1528,6 +1530,13 @@ def cdc_containment(
     chunk_hash equi-join (duplication-sized after the threshold), one
     grouped sum — no all-pairs anywhere.
 
+    Building the returned frame is not free: the distinct chunk table
+    is cut eagerly (operators/iterative.cut_lineage), so this call
+    already runs the scan and chunking jobs; actions on the result
+    run only the join and sum.  The cut follows the session's
+    checkpoint dir — reliable ``checkpoint()`` when one is set,
+    ``localCheckpoint()`` otherwise.
+
     `chunks` (an unfiltered content_defined_chunks output) shares one
     materialized chunking across CDC reports, as in
     cdc_shared_chunks."""
@@ -1542,14 +1551,12 @@ def cdc_containment(
     # pruned projections below the exchange — so ReusedExchange never
     # fires and the full scan+chunking window pipeline ran three times
     # (verified in plans/r18/docs_cdc_containment_before.txt: the
-    # chunk Window appears at ops 8, 23 and 44).  localCheckpoint per
-    # the ephemeral in-query doctrine (winnowing/duplicate-spans
-    # precedent).
-    chunks = (
+    # chunk Window appears at ops 8, 23 and 44).
+    chunks = cut_lineage(
         chunks.filter(F.col("n_words") >= min_words)
         .select(id_col, "chunk_hash", "n_words")
         .distinct()
-    ).localCheckpoint(eager=True)
+    )
     totals = chunks.groupBy(id_col).agg(
         F.sum("n_words").alias("d1_words")
     )
@@ -1660,14 +1667,15 @@ def winnowing_near_dup_pairs(
     Scale shape: fingerprint table (a 2/(w+1) fraction of the k-gram
     table) → hot-fp cap BEFORE the self-join → join fan-out bounded
     by max_docs_per_fp² per fingerprint → one (d1, d2) count."""
-    # localCheckpoint, not the session-auto strategy: this is a QUERY
-    # (one ephemeral materialization), and the fingerprint table feeds
-    # THREE consumers below (the cap count and both self-join sides) —
-    # without the cut each one re-runs the gram/window pipeline
-    # (measured 3.8 s → 2.5 s at sf0.1)
-    fps = winnowing_fingerprints(
-        documents, k=k, w=w, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=True)
+    # materialized once: the fingerprint table feeds THREE consumers
+    # below (the cap count and both self-join sides) — without the cut
+    # each one re-runs the gram/window pipeline (measured 3.8 s →
+    # 2.5 s at sf0.1)
+    fps = cut_lineage(
+        winnowing_fingerprints(
+            documents, k=k, w=w, text_col=text_col, id_col=id_col
+        )
+    )
     cold = (
         fps.groupBy("fp")
         .agg(F.countDistinct(id_col).alias("_nd"))

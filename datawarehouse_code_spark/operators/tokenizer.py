@@ -13,7 +13,7 @@ Scale design:
   distinct word is counted once with its frequency, and the vocab
   table is orders of magnitude smaller than the corpus (one corpus
   aggregation builds it; every training round after that touches only
-  vocab-sized data, localCheckpoint-ed like the pagerank loop so the
+  vocab-sized data, lineage-cut like the pagerank loop so the
   plan does not grow with rounds).
 - Each round is one explode + weighted pair count + TakeOrdered(1) +
   a narrow fold applying the winner.  n_merges rounds = n_merges
@@ -45,7 +45,6 @@ from pyspark.sql.functions import pandas_udf
 from datawarehouse_code_spark.operators.iterative import (
     cut_lineage,
     release_checkpoint,
-    resolve_checkpoint_mode,
 )
 from datawarehouse_code_spark.operators.text import words
 
@@ -114,18 +113,16 @@ def bpe_train(
     n_merges: int,
     text_col: str = "text",
     vocab_cap: int | None = None,
-    checkpoint: str = "auto",
 ) -> list[tuple[str, str]]:
     """Learn an ordered BPE merge list: start from characters (+ the
     `</w>` end-of-word marker), repeatedly merge the highest-count
     adjacent pair (ties broken lexicographically, so training is
     deterministic across partitionings and engines).  Stops early if
     no pair occurs twice.  Returns [(a, b), ...] in merge order —
-    the artifact `bpe_encode_udf` applies.  `checkpoint` picks the
-    per-round lineage-cut strategy (operators/iterative.py)."""
+    the artifact `bpe_encode_udf` applies.  Each round cuts lineage
+    (operators/iterative.py)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1: {n_merges}")
-    mode = resolve_checkpoint_mode(documents, checkpoint)
     vocab = word_frequency_table(documents, text_col, vocab_cap)
     sym = cut_lineage(
         vocab.select(
@@ -134,7 +131,6 @@ def bpe_train(
             ).alias("symbols"),
             "n",
         ),
-        mode,
     )
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -155,7 +151,6 @@ def bpe_train(
             sym.select(
                 _apply_merge(F.col("symbols"), a, b).alias("symbols"), "n"
             ),
-            mode,
             supersedes=sym,
         )
     # the return value is the merge LIST — the final symbol table is
@@ -376,13 +371,8 @@ def unigram_train(
     # it feeds the seed collect AND every EM round's Viterbi pass —
     # without the cut each consumer re-runs the corpus-sized
     # explode+aggregate (n_iters+1 full corpus passes for a
-    # vocabulary-sized frame).  localCheckpoint, not the session-auto
-    # strategy: an ephemeral in-query materialization (the
-    # winnowing/duplicate-spans precedent), and the trainer is a
-    # driver-interactive loop a retry simply re-runs.
-    vocab = word_frequency_table(
-        documents, text_col, vocab_cap
-    ).localCheckpoint(eager=True)
+    # vocabulary-sized frame).
+    vocab = cut_lineage(word_frequency_table(documents, text_col, vocab_cap))
     pieces = {
         r["piece"]: int(r["cnt"])
         for r in _seed_pieces(vocab, max_piece_len, seed_size).collect()

@@ -34,6 +34,8 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.operators.iterative import cut_lineage
+
 VIDEO_MAGIC = b"VID0"
 VIDEO_MAX_FRAMES = 4096
 VIDEO_MAX_FRAME_BYTES = 1 << 24
@@ -187,10 +189,10 @@ def video_near_dup_pairs(
     self-join.  A copy trimmed or extended by whole frames shares
     every gram of the overlap; a mid-edit re-grams only the edited
     neighborhood.  The fingerprint table feeds four consumers (cap +
-    both join sides) and is materialized once via localCheckpoint,
-    the winnowing precedent — without it the container walk and every
+    both join sides) and is materialized once, the winnowing
+    precedent — without it the container walk and every
     frame decode re-run per consumer."""
-    fps = _cap_hot(video_fingerprints(media, gram).localCheckpoint(), hot_cap)
+    fps = _cap_hot(cut_lineage(video_fingerprints(media, gram)), hot_cap)
     a = fps.select(F.col("media_id").alias("d1"), "fp")
     b = fps.select(F.col("media_id").alias("d2"), "fp")
     return (

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.corpus import knuth_hash_sql
+from datawarehouse_code_spark.operators.iterative import cut_lineage
 from datawarehouse_code_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dup_lsh,
@@ -3496,7 +3497,7 @@ def _media_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real caller reads it from parquet — materialize it once here so
     # the fixture encode+decode+hash doesn't re-run per consumer
     return dhash_matches_incremental(
-        inc, build_dhash_index(corpus).localCheckpoint(),
+        inc, cut_lineage(build_dhash_index(corpus)),
         max_hamming=6, band_cap=50,
     )
 
@@ -3648,7 +3649,7 @@ def _media_phash_dct_incremental(
     64×64), the increment is their 2× box downscales (even members,
     32×32), and every downscale lands on its original at hamming 0
     through the UNCHANGED dhash_matches_incremental machinery.  One
-    image_phash pass feeds both sides (localCheckpoint + member
+    image_phash pass feeds both sides (one lineage cut + member
     filters).  Oracle grain is the planted outcome, like the pairs
     row: twins hash identically by construction, distinct groups
     never fall within the radius."""
@@ -3658,9 +3659,7 @@ def _media_phash_dct_incremental(
         image_phash,
     )
 
-    hashes = image_phash(
-        _phash_dct_media(spark, sf_dir)
-    ).localCheckpoint()
+    hashes = cut_lineage(image_phash(_phash_dct_media(spark, sf_dir)))
     idx = build_dhash_index(
         None, hashes=hashes.filter(F.col("media_id") % 2 == 1)
     )
@@ -3743,9 +3742,11 @@ def _video_frame_phash_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_frame_phashes,
     )
 
-    fidx = build_frame_dhash_index(
-        video_frame_phashes(_phash_video_media(spark, sf_dir))
-    ).localCheckpoint()
+    fidx = cut_lineage(
+        build_frame_dhash_index(
+            video_frame_phashes(_phash_video_media(spark, sf_dir))
+        )
+    )
     # parity pre-filter INSIDE the fixture builder: filtering the
     # mapInPandas output would still build every odd member's 64×64
     # blob and throw it away (predicates don't push through a map)
@@ -3876,7 +3877,7 @@ def _audio_fp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     inc = media.filter(F.col("media_id") % 10 == 0)
     # materialize the freshly-built index once (parquet in real use)
     return audio_matches_incremental(
-        inc, build_audio_fp_index(corpus).localCheckpoint(),
+        inc, cut_lineage(build_audio_fp_index(corpus)),
         min_shared=1, hot_cap=50,
     )
 
@@ -4020,7 +4021,7 @@ def _video_fp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     inc = media.filter(F.col("media_id") % 10 == 0)
     # materialize the freshly-built index once (parquet in real use)
     return video_matches_incremental(
-        inc, build_video_fp_index(corpus).localCheckpoint(),
+        inc, cut_lineage(build_video_fp_index(corpus)),
         min_shared=1, hot_cap=50,
     )
 
@@ -4190,9 +4191,11 @@ def _video_image_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_image_matches,
     )
 
-    idx = build_dhash_index(
-        None, hashes=image_dhash(_xmodal_image_media(spark, sf_dir))
-    ).localCheckpoint()  # persisted-index stand-in, materialized once
+    idx = cut_lineage(
+        build_dhash_index(
+            None, hashes=image_dhash(_xmodal_image_media(spark, sf_dir))
+        )
+    )  # persisted-index stand-in, materialized once
     return video_image_matches(
         video_frame_dhashes(_cross_modal_video_media(spark, sf_dir)),
         idx, max_hamming=6, band_cap=50,
@@ -4298,9 +4301,11 @@ def _image_video_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_frame_dhashes,
     )
 
-    fidx = build_frame_dhash_index(
-        video_frame_dhashes(_cross_modal_video_media(spark, sf_dir))
-    ).localCheckpoint()  # persisted-index stand-in, materialized once
+    fidx = cut_lineage(
+        build_frame_dhash_index(
+            video_frame_dhashes(_cross_modal_video_media(spark, sf_dir))
+        )
+    )  # persisted-index stand-in, materialized once
     return image_video_matches(
         image_dhash(_xmodal_image_media(spark, sf_dir)),
         fidx, max_hamming=6, band_cap=50,
@@ -4359,7 +4364,7 @@ def _cross_modal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shared materialization (the suite doctrine): the cross-modal legs
     decode the xmodal images and walk the videos ONCE each
-    (localCheckpointed image_dhash and video_frame_dhashes feed both
+    (lineage-cut image_dhash and video_frame_dhashes feed both
     directions), and the pHash legs share one image_phash pass
     through the hashes= pass-throughs — leg values equal the
     standalone rows' (per-payload pure functions)."""
@@ -4377,12 +4382,10 @@ def _cross_modal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_image_matches,
     )
 
-    ihashes = image_dhash(
-        _xmodal_image_media(spark, sf_dir)
-    ).localCheckpoint()
-    frames = video_frame_dhashes(
-        _cross_modal_video_media(spark, sf_dir)
-    ).localCheckpoint()
+    ihashes = cut_lineage(image_dhash(_xmodal_image_media(spark, sf_dir)))
+    frames = cut_lineage(
+        video_frame_dhashes(_cross_modal_video_media(spark, sf_dir))
+    )
     vi = video_image_matches(
         frames, build_dhash_index(None, hashes=ihashes),
         max_hamming=6, band_cap=50,
@@ -4405,9 +4408,7 @@ def _cross_modal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_shared_bands").cast("bigint").alias("n1"),
         F.col("hamming").cast("bigint").alias("n2"),
     )
-    phashes = image_phash(
-        _phash_dct_media(spark, sf_dir)
-    ).localCheckpoint()
+    phashes = cut_lineage(image_phash(_phash_dct_media(spark, sf_dir)))
     pp = dhash_near_dup_pairs(
         phashes, max_hamming=6, band_cap=50
     ).select(
@@ -4496,8 +4497,8 @@ def _media_canonical_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     videos = _cross_modal_video_media(
         spark, sf_dir, every=32, id_offset=_XMODAL_ID_OFFSET
     )
-    ihashes = image_dhash(images).localCheckpoint()
-    frames = video_frame_dhashes(videos).localCheckpoint()
+    ihashes = cut_lineage(image_dhash(images))
+    frames = cut_lineage(video_frame_dhashes(videos))
     ipairs = dhash_near_dup_pairs(
         ihashes, max_hamming=6, band_cap=50
     ).select("d1", "d2")
@@ -4621,7 +4622,7 @@ def _media_dedup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_dhash,
     )
 
-    hashes = image_dhash(_phash_media(spark, sf_dir)).localCheckpoint()
+    hashes = cut_lineage(image_dhash(_phash_media(spark, sf_dir)))
     image = dhash_near_dup_pairs(hashes, max_hamming=6, band_cap=50).select(
         F.lit("image").alias("part"),
         F.col("d1").cast("bigint").alias("d1"),
@@ -4702,8 +4703,8 @@ def _shift_robust_dedup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                        n2=n_shared_words
 
     The three CDC legs all chunk the SAME documents table, so the
-    suite materializes ONE content_defined_chunks pass (ephemeral
-    localCheckpoint) and feeds it to every leg through the operators'
+    suite materializes ONE content_defined_chunks pass (one lineage
+    cut) and feeds it to every leg through the operators'
     `chunks=` pass-through — chunking is a per-doc pure function, so
     each leg's values are identical to its standalone row (the
     constituents stay registered and differential-tested unshared).
@@ -4717,7 +4718,7 @@ def _shift_robust_dedup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, "documents", sf_dir)
-    chunks = content_defined_chunks(docs).localCheckpoint()
+    chunks = cut_lineage(content_defined_chunks(docs))
     shared = cdc_shared_chunks(None, chunks=chunks).select(
         F.lit("shared").alias("part"),
         F.col("chunk_hash").alias("k1"),

@@ -24,6 +24,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.operators.iterative import cut_lineage
 from datawarehouse_code_spark.pipeline import build_warehouse
 from datawarehouse_code_spark.plans.base import Query
 from datawarehouse_code_spark.sources.catalog import read_table
@@ -1564,12 +1565,7 @@ def _sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.s").alias("src"), F.col("b.s").alias("dst"))
         .distinct()
     )
-    # localCheckpoint, not the session-auto strategy: this is a QUERY
-    # (one ephemeral materialization), and auto would write + leak a
-    # reliable checkpoint per run on checkpoint-dir-configured
-    # clusters (the iterative TRAINING operators are where reliable
-    # cuts belong)
-    edges = edges.localCheckpoint(eager=True)
+    edges = cut_lineage(edges)
     # per-call unique view name: temp views are SESSION-global, so a
     # fixed name races under concurrent invocations (thread B's
     # createOrReplaceTempView landing between A's registration and

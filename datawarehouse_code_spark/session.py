@@ -36,11 +36,13 @@ def get_spark(app_name: str = "datawarehouse_code_spark", cpus: str | None = Non
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # reliable checkpoints (iterative operators under
-        # checkpoint='reliable'/'auto') are deleted on driver GC of the
+        # reliable checkpoints (every operators/iterative.cut_lineage
+        # once a checkpoint dir is set) are deleted on driver GC of the
         # RDD reference; without this the TERMINAL checkpoint of every
-        # iterative call accumulates forever (per-round SUPERSEDED
-        # checkpoints are deleted eagerly by operators/iterative.py)
+        # iterative call and every one-shot cut accumulates forever
+        # (per-round SUPERSEDED checkpoints are deleted eagerly by
+        # cut_lineage).  Clusters that set a checkpoint dir must set
+        # this too.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # saveAsTable targets (bucketed writes) go to a scratch dir,

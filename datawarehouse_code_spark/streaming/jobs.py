@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.operators.iterative import cut_lineage
 from datawarehouse_code_spark.sources.schemas import EVENTS
 
 # Raw event files come in two ts layouts (the fixture switched between
@@ -1324,7 +1325,7 @@ def run_dhash_gated_ingest(
         # decode + hash the batch ONCE; every leg below (internal
         # pairs, cross-match, index extend) rides the materialized
         # hash table through the hashes=/new_hashes= pass-throughs
-        hashes = image_dhash(batch, grid=grid).localCheckpoint()
+        hashes = cut_lineage(image_dhash(batch, grid=grid))
         rejected = _dhash_gate_rejects(
             sp, hashes, index_path, max_hamming, band_cap, grid
         )
@@ -1383,7 +1384,7 @@ def _run_fp_gated_ingest(
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
         sp = batch.sparkSession
-        fps = fps_fn(batch).localCheckpoint()
+        fps = cut_lineage(fps_fn(batch))
         rejected = _fp_gate_rejects(sp, fps, index_path, min_shared, hot_cap)
         survivors = batch.join(rejected, "media_id", "left_anti")
         upsert_auto(
@@ -1492,11 +1493,11 @@ def run_multimodal_gated_ingest(
     'video/' on temporal-gram shares.  Every payload is DECODED
     EXACTLY ONCE per batch: each lane fingerprints through its
     quarantine variant (one pass emits both the fingerprints and the
-    decode errors) and localCheckpoints the result before the gate's
-    multiple consumers.  An undecodable payload, a NULL text document
-    and an unrouteable media_type are QUARANTINED — they enter
-    neither the target nor any index, so a later re-delivery with a
-    fixed payload is re-gated from scratch.
+    decode errors) and materializes the result (one lineage cut)
+    before the gate's multiple consumers.  An undecodable payload, a
+    NULL text document and an unrouteable media_type are QUARANTINED
+    — they enter neither the target nor any index, so a later
+    re-delivery with a fixed payload is re-gated from scratch.
 
     The ledger at `ledger_path` holds one row per EVER-SEEN media_id
     — (media_id, modality, status ∈ accepted|rejected|quarantined,
@@ -1592,7 +1593,7 @@ def run_multimodal_gated_ingest(
 
         # lane presence, ONE routing agg per batch (r13 ADVICE): a
         # single-modality feed must not pay three empty decode maps
-        # plus their localCheckpoint materializations per micro-batch
+        # plus their lineage-cut materializations per micro-batch
         # — the per-lane blocks below are skipped entirely when the
         # batch has no rows matching that lane's exact prefix
         # predicate (skipping an empty lane changes no decision: an
@@ -1620,12 +1621,14 @@ def run_multimodal_gated_ingest(
                 F.lit("null text").alias("reason"),
             )
             quarantined_parts.append(null_docs)
-            chunks = content_defined_chunks(
-                docs.filter(F.col("text").isNotNull())
-                .select(F.col("media_id").alias("doc_id"), "text")
-            ).filter(F.col("n_words") >= min_words).select(
-                "doc_id", "chunk_idx", "chunk_hash", "n_words"
-            ).localCheckpoint()
+            chunks = cut_lineage(
+                content_defined_chunks(
+                    docs.filter(F.col("text").isNotNull())
+                    .select(F.col("media_id").alias("doc_id"), "text")
+                ).filter(F.col("n_words") >= min_words).select(
+                    "doc_id", "chunk_idx", "chunk_hash", "n_words"
+                )
+            )
             rejected_parts.append(
                 _chunk_gate_rejects(
                     sp, chunks, text_index_path, min_shared, hot_chunk_cap
@@ -1643,7 +1646,7 @@ def run_multimodal_gated_ingest(
             # decode feeds all legs, with the quarantine lane in the same
             # pass)
             images = batch.filter(F.col("media_type").startswith("image/"))
-            iq = image_fingerprints_quarantine(images).localCheckpoint()
+            iq = cut_lineage(image_fingerprints_quarantine(images))
             quarantined_parts.append(
                 iq.filter(F.col("decode_error").isNotNull()).select(
                     "media_id", F.lit("image").alias("modality"),
@@ -1699,7 +1702,7 @@ def run_multimodal_gated_ingest(
         if "audio" in present:
             # ---- audio lane: energy-gram gate
             audio = batch.filter(F.col("media_type").startswith("audio/"))
-            aq = audio_fingerprints_quarantine(audio).localCheckpoint()
+            aq = cut_lineage(audio_fingerprints_quarantine(audio))
             quarantined_parts.append(
                 aq.filter(F.col("decode_error").isNotNull()).select(
                     "media_id", F.lit("audio").alias("modality"),
@@ -1726,11 +1729,9 @@ def run_multimodal_gated_ingest(
             # materializing per-frame rows no consumer reads)
             video = batch.filter(F.col("media_type").startswith("video/"))
             if frame_index_path is not None:
-                vq = video_fingerprints_frames_quarantine(
-                    video
-                ).localCheckpoint()
+                vq = cut_lineage(video_fingerprints_frames_quarantine(video))
             else:
-                vq = video_fingerprints_quarantine(video).localCheckpoint()
+                vq = cut_lineage(video_fingerprints_quarantine(video))
             quarantined_parts.append(
                 vq.filter(F.col("decode_error").isNotNull()).select(
                     "media_id", F.lit("video").alias("modality"),
@@ -1845,8 +1846,8 @@ def run_multimodal_gated_ingest(
         # by several legs (dHash AND pHash, gate AND cross-modal)
         # must still write ONE ledger row (replace_keyed inserts all
         # update rows, so duplicates would survive the keyed delete)
-        rejected = rejected.distinct().localCheckpoint()
-        quarantined = quarantined.localCheckpoint()
+        rejected = cut_lineage(rejected.distinct())
+        quarantined = cut_lineage(quarantined)
 
         dropped = rejected.select("media_id").unionByName(
             quarantined.select("media_id")

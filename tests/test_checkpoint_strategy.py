@@ -1,21 +1,21 @@
-"""Checkpoint-strategy knob for the iterative operators.
+"""The session-decided lineage cut (operators/iterative.cut_lineage).
 
-All six iterative operators (pagerank, BFS, LPA, weighted SSSP,
-near-dup connected components, BPE training) take a
-``checkpoint: "auto"|"local"|"reliable"`` parameter
-(operators/iterative.py).  These tests pin:
+Every lineage cut in the package goes through ``cut_lineage``, which
+takes the RELIABLE ``checkpoint()`` iff the session has a checkpoint
+directory and ``localCheckpoint()`` otherwise.  These tests pin:
 
-- "auto" resolves to RELIABLE ``checkpoint()`` iff the session has a
-  checkpoint directory, local otherwise;
+- the rule itself (no ReliableCheckpointRDD without a dir, one with
+  a dir; a reliable cut is eager even when asked for a lazy one);
 - reliable mode actually materializes to the checkpoint dir (files
   appear; the result frame's RDD lineage shows ReliableCheckpointRDD)
   — executor-loss resilience on a real cluster, the property
-  localCheckpoint lacks;
-- every operator returns identical results under both strategies;
-- "reliable" without a configured dir fails FAST (before any work).
+  localCheckpoint lacks — for the iterative operators and for a
+  one-shot query operator (cdc_containment);
+- every operator returns identical results with and without a dir;
+- superseded and dead reliable checkpoints are deleted.
 
-The checkpoint dir is restored (unset) after each test so the shared
-session's other tests keep the cheap local path.
+The checkpoint dir is unset after each test so the shared session's
+other tests keep the cheap local path.
 """
 
 from __future__ import annotations
@@ -27,93 +27,105 @@ from pyspark.sql import functions as F
 
 
 @pytest.fixture()
-def ckpt_dir(spark, tmp_path):
+def set_ckpt_dir(spark):
+    """Yields ``set(d)``: point the session's checkpoint dir at ``d``,
+    or unset it with ``None``.  The dir is unset after the test."""
     sc = spark.sparkContext
-    old = sc.getCheckpointDir()
-    assert old is None, "shared test session unexpectedly has a checkpoint dir"
-    d = str(tmp_path / "reliable_ckpt")
-    sc.setCheckpointDir(d)
-    yield d
+    assert sc.getCheckpointDir() is None, (
+        "shared test session unexpectedly has a checkpoint dir"
+    )
+    yield sc.setCheckpointDir
     # SparkContext.setCheckpointDir(None) unsets (Option(null) -> None)
     sc.setCheckpointDir(None)
     assert sc.getCheckpointDir() is None
+
+
+@pytest.fixture()
+def ckpt_dir(set_ckpt_dir, tmp_path):
+    d = str(tmp_path / "reliable_ckpt")
+    set_ckpt_dir(d)
+    return d
 
 
 def _n_ckpt_files(d: str) -> int:
     return sum(len(files) for _, _, files in os.walk(d))
 
 
-def test_resolve_modes(spark):
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def _is_reliable(df) -> bool:
+    return "ReliableCheckpointRDD" in df.rdd.toDebugString().decode()
+
+
+def test_cut_lineage_follows_session_checkpoint_dir(spark, set_ckpt_dir, tmp_path):
+    """No dir: a local cut.  Dir set: a reliable cut, and eager even
+    when called with eager=False (a lazy reliable checkpoint would
+    re-run the frame's job to write its files)."""
     from datawarehouse_code_spark.operators.iterative import (
-        resolve_checkpoint_mode,
+        _reliable_checkpoint_file,
+        cut_lineage,
     )
 
-    df = spark.range(1)
-    assert resolve_checkpoint_mode(df, "auto") == "local"
-    assert resolve_checkpoint_mode(df, "local") == "local"
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        resolve_checkpoint_mode(df, "reliable")
-    with pytest.raises(ValueError, match="checkpoint must be one of"):
-        resolve_checkpoint_mode(df, "hdfs")
+    local = cut_lineage(spark.range(3))
+    assert not _is_reliable(local)
+    assert _reliable_checkpoint_file(local) is None
+    set_ckpt_dir(str(tmp_path / "ckpt"))
+    reliable = cut_lineage(spark.range(3))
+    assert _is_reliable(reliable)
+    lazy = cut_lineage(spark.range(4), eager=False)
+    f = _reliable_checkpoint_file(lazy)  # written without an action
+    assert f is not None and os.path.exists(f.replace("file:", ""))
+    assert reliable.count() == 3 and lazy.count() == 4
 
 
-def test_resolve_auto_prefers_reliable_with_dir(spark, ckpt_dir):
-    from datawarehouse_code_spark.operators.iterative import (
-        resolve_checkpoint_mode,
-    )
-
-    assert resolve_checkpoint_mode(spark.range(1), "auto") == "reliable"
-    assert resolve_checkpoint_mode(spark.range(1), "local") == "local"
-
-
-def test_pagerank_reliable_checkpoints_and_matches_local(spark, ckpt_dir):
+def test_pagerank_reliable_checkpoints_and_matches_local(
+    spark, ckpt_dir, set_ckpt_dir
+):
     from datawarehouse_code_spark.operators.graph import pagerank_fixed
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3)], ["src", "dst"]
     )
     # checkpoint_every=1 so the RETURNED frame is itself checkpointed
-    reliable = pagerank_fixed(edges, iters=2, checkpoint_every=1)  # auto→reliable
-    assert "ReliableCheckpointRDD" in reliable.rdd.toDebugString().decode()
+    reliable = pagerank_fixed(edges, iters=2, checkpoint_every=1)
+    assert _is_reliable(reliable)
     assert _n_ckpt_files(ckpt_dir) > 0
-    local = pagerank_fixed(edges, iters=2, checkpoint_every=1, checkpoint="local")
-    assert sorted(map(tuple, reliable.collect())) == sorted(
-        map(tuple, local.collect())
-    )
+    want = _rows(reliable)
+    set_ckpt_dir(None)
+    assert _rows(pagerank_fixed(edges, iters=2, checkpoint_every=1)) == want
 
 
-def test_bfs_reliable_matches_local(spark, ckpt_dir):
+def test_bfs_reliable_matches_local(spark, ckpt_dir, set_ckpt_dir):
     from datawarehouse_code_spark.operators.graph import bfs_distances
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6)], ["a", "b"]
     )
     seeds = spark.createDataFrame([(1,)], ["node"])
-    reliable = bfs_distances(edges, seeds)  # auto → reliable
-    assert "ReliableCheckpointRDD" in reliable.rdd.toDebugString().decode()
-    local = bfs_distances(edges, seeds, checkpoint="local")
-    assert sorted(map(tuple, reliable.collect())) == sorted(
-        map(tuple, local.collect())
-    )
+    reliable = bfs_distances(edges, seeds)
+    assert _is_reliable(reliable)
+    want = _rows(reliable)
+    set_ckpt_dir(None)
+    assert _rows(bfs_distances(edges, seeds)) == want
 
 
-def test_lpa_reliable_matches_local(spark, ckpt_dir):
+def test_lpa_reliable_matches_local(spark, ckpt_dir, set_ckpt_dir):
     from datawarehouse_code_spark.operators.graph import label_propagation
 
     clique1 = [(a, b) for a in (1, 2, 3) for b in (1, 2, 3) if a < b]
     clique2 = [(a, b) for a in (7, 8, 9) for b in (7, 8, 9) if a < b]
     edges = spark.createDataFrame(clique1 + clique2 + [(3, 7)], ["a", "b"])
     reliable = label_propagation(edges, n_rounds=2, checkpoint_every=1)
-    assert "ReliableCheckpointRDD" in reliable.rdd.toDebugString().decode()
-    local = label_propagation(
-        edges, n_rounds=2, checkpoint_every=1, checkpoint="local"
-    )
-    assert sorted(map(tuple, reliable.collect())) == sorted(
-        map(tuple, local.collect())
-    )
+    assert _is_reliable(reliable)
+    want = _rows(reliable)
+    set_ckpt_dir(None)
+    local = label_propagation(edges, n_rounds=2, checkpoint_every=1)
+    assert _rows(local) == want
 
 
-def test_sssp_reliable_matches_local(spark, ckpt_dir):
+def test_sssp_reliable_matches_local(spark, ckpt_dir, set_ckpt_dir):
     from datawarehouse_code_spark.operators.graph import weighted_shortest_paths
 
     edges = spark.createDataFrame(
@@ -121,11 +133,10 @@ def test_sssp_reliable_matches_local(spark, ckpt_dir):
     )
     seeds = spark.createDataFrame([(1,)], ["node"])
     reliable = weighted_shortest_paths(edges, seeds)
-    assert "ReliableCheckpointRDD" in reliable.rdd.toDebugString().decode()
-    local = weighted_shortest_paths(edges, seeds, checkpoint="local")
-    assert sorted(map(tuple, reliable.collect())) == sorted(
-        map(tuple, local.collect())
-    )
+    assert _is_reliable(reliable)
+    want = _rows(reliable)
+    set_ckpt_dir(None)
+    assert _rows(weighted_shortest_paths(edges, seeds)) == want
 
 
 def test_sssp_negative_weight_still_raises(spark, ckpt_dir):
@@ -142,22 +153,21 @@ def test_sssp_negative_weight_still_raises(spark, ckpt_dir):
         weighted_shortest_paths(loop, seeds)
 
 
-def test_components_reliable_matches_local(spark, ckpt_dir):
+def test_components_reliable_matches_local(spark, ckpt_dir, set_ckpt_dir):
     from datawarehouse_code_spark.operators.corpus import near_dup_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (12, 11)], ["d1", "d2"]
     )
-    for algo in ("propagation", "two_phase"):
-        reliable = near_dup_components(pairs, algorithm=algo)
-        local = near_dup_components(pairs, algorithm=algo, checkpoint="local")
-        assert sorted(map(tuple, reliable.collect())) == sorted(
-            map(tuple, local.collect())
-        ), algo
+    algos = ("propagation", "two_phase")
+    want = {a: _rows(near_dup_components(pairs, algorithm=a)) for a in algos}
     assert _n_ckpt_files(ckpt_dir) > 0
+    set_ckpt_dir(None)
+    for algo in algos:
+        assert _rows(near_dup_components(pairs, algorithm=algo)) == want[algo], algo
 
 
-def test_bpe_train_reliable_matches_local(spark, ckpt_dir):
+def test_bpe_train_reliable_matches_local(spark, ckpt_dir, set_ckpt_dir):
     from datawarehouse_code_spark.operators.tokenizer import bpe_train
 
     docs = spark.createDataFrame(
@@ -171,7 +181,8 @@ def test_bpe_train_reliable_matches_local(spark, ckpt_dir):
     # (the unbounded-growth fix: 20-round loops used to persist 20
     # copies forever under reliable mode)
     assert _n_rdd_dirs(ckpt_dir) == before
-    local = bpe_train(docs, n_merges=3, checkpoint="local")
+    set_ckpt_dir(None)
+    local = bpe_train(docs, n_merges=3)
     assert reliable == local and len(reliable) == 3
 
 
@@ -183,7 +194,9 @@ def _n_rdd_dirs(d: str) -> int:
     return n
 
 
-def test_cut_lineage_supersedes_reclaims_reliable_checkpoint(spark, ckpt_dir):
+def test_cut_lineage_supersedes_reclaims_reliable_checkpoint(
+    spark, ckpt_dir, set_ckpt_dir
+):
     """cut_lineage(supersedes=prev) deletes prev's checkpoint files
     once the new cut materializes; release_checkpoint reclaims a dead
     terminal frame; local mode ignores both (blocks are ContextCleaner
@@ -194,12 +207,10 @@ def test_cut_lineage_supersedes_reclaims_reliable_checkpoint(spark, ckpt_dir):
         release_checkpoint,
     )
 
-    df1 = cut_lineage(spark.range(10), "reliable")
+    df1 = cut_lineage(spark.range(10))
     f1 = _reliable_checkpoint_file(df1)
     assert f1 is not None and os.path.exists(f1.replace("file:", ""))
-    df2 = cut_lineage(
-        df1.withColumn("y", F.col("id") * 2), "reliable", supersedes=df1
-    )
+    df2 = cut_lineage(df1.withColumn("y", F.col("id") * 2), supersedes=df1)
     f2 = _reliable_checkpoint_file(df2)
     assert f2 is not None and f2 != f1
     assert not os.path.exists(f1.replace("file:", ""))  # superseded → gone
@@ -207,13 +218,14 @@ def test_cut_lineage_supersedes_reclaims_reliable_checkpoint(spark, ckpt_dir):
     release_checkpoint(df2)
     assert not os.path.exists(f2.replace("file:", ""))
     # identity guard: a frame listed in `unless` is never deleted
-    df3 = cut_lineage(spark.range(3), "reliable")
+    df3 = cut_lineage(spark.range(3))
     release_checkpoint(df3, unless=(df3,))
     f3 = _reliable_checkpoint_file(df3)
     assert f3 is not None and os.path.exists(f3.replace("file:", ""))
     # local mode: supersedes/release are no-ops, both frames usable
-    l1 = cut_lineage(spark.range(5), "local")
-    l2 = cut_lineage(l1.withColumn("y", F.col("id") + 1), "local", supersedes=l1)
+    set_ckpt_dir(None)
+    l1 = cut_lineage(spark.range(5))
+    l2 = cut_lineage(l1.withColumn("y", F.col("id") + 1), supersedes=l1)
     release_checkpoint(l1)
     assert l1.count() == 5 and l2.count() == 5
 
@@ -268,3 +280,22 @@ def test_iterative_loops_hold_bounded_checkpoints(spark, ckpt_dir):
 
     f = _reliable_checkpoint_file(dist)
     assert f is not None and os.path.exists(f.replace("file:", ""))
+
+
+def test_cdc_containment_reliable_matches_local(spark, ckpt_dir, set_ckpt_dir):
+    """A one-shot query operator follows the session's dir too: with
+    a dir, cdc_containment's chunk-table cut writes rdd-* dirs (it is
+    eager, so building the frame writes them) and the rows equal a
+    run without a dir."""
+    from datawarehouse_code_spark.operators.text import cdc_containment
+    from datawarehouse_code_spark.sources.catalog import read_table
+    from tests.conftest import SF_DIR
+
+    docs = read_table(spark, "documents", SF_DIR)
+    before = _n_rdd_dirs(ckpt_dir)
+    reliable = cdc_containment(docs)
+    assert _n_rdd_dirs(ckpt_dir) > before
+    want = _rows(reliable)
+    assert want, "no containment rows: the comparison would be vacuous"
+    set_ckpt_dir(None)
+    assert _rows(cdc_containment(docs)) == want

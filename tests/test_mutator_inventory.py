@@ -44,8 +44,6 @@ ALLOWLIST = {
     ("operators/iterative.py", "release_checkpoint"):
         "deletes the session's own reliable-checkpoint files (temp "
         "state under the checkpoint dir, never a live table)",
-    ("operators/iterative.py", "_delete_superseded_checkpoint"):
-        "same: GC of a superseded checkpoint the same loop wrote",
     # --- protocols that ARE the concurrency story -------------------
     ("sources/acid.py", "writer_lease"):
         "the lease implementation itself (create/steal/release of "
