@@ -34,9 +34,7 @@ from datawarehouse_code_spark.operators.text import exact_dedup, near_dup_pairs_
 PairSource = Callable[[DataFrame, float], DataFrame]
 
 
-def _two_phase_components(
-    sym: DataFrame, max_rounds: int = 50
-) -> DataFrame:
+def _two_phase_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
     """(doc_id, rep) by the alternating large-star/small-star fixpoint
     (Kiveris et al. 2014, "Connected Components in MapReduce and
     Beyond") — converges in O(log² n) rounds REGARDLESS of graph
