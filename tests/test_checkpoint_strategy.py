@@ -59,19 +59,31 @@ def _is_reliable(df) -> bool:
     return "ReliableCheckpointRDD" in df.rdd.toDebugString().decode()
 
 
-def test_cut_lineage_follows_session_checkpoint_dir(spark, set_ckpt_dir, tmp_path):
-    """No dir: a local cut.  Dir set: a reliable cut, and eager even
-    when called with eager=False (a lazy reliable checkpoint would
-    re-run the frame's job to write its files)."""
+def test_resolve_modes(spark):
+    """No checkpoint dir: the cut is local, with no checkpoint file."""
     from datawarehouse_code_spark.operators.iterative import (
         _reliable_checkpoint_file,
         cut_lineage,
     )
 
+    assert spark.sparkContext.getCheckpointDir() is None
     local = cut_lineage(spark.range(3))
     assert not _is_reliable(local)
     assert _reliable_checkpoint_file(local) is None
-    set_ckpt_dir(str(tmp_path / "ckpt"))
+    lazy = cut_lineage(spark.range(4), eager=False)
+    assert not _is_reliable(lazy)
+    assert local.count() == 3 and lazy.count() == 4
+
+
+def test_resolve_auto_prefers_reliable_with_dir(spark, ckpt_dir):
+    """Dir set: a reliable cut, and eager even when called with
+    eager=False (a lazy reliable checkpoint would re-run the frame's
+    job to write its files)."""
+    from datawarehouse_code_spark.operators.iterative import (
+        _reliable_checkpoint_file,
+        cut_lineage,
+    )
+
     reliable = cut_lineage(spark.range(3))
     assert _is_reliable(reliable)
     lazy = cut_lineage(spark.range(4), eager=False)
