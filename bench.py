@@ -428,22 +428,37 @@ def main() -> None:
         with open(os.path.join(here, fname), "w") as f:
             json.dump(payload, f, indent=1)
 
+    print(_summary_line(payload, full_name), flush=True)
+
+
+def _summary_line(payload: dict, full_name: str) -> str:
+    """The stdout line for the driver's 2000-char capture window:
+    headline numbers plus as many `queries` rows as fit, largest
+    first (the per-run file `full_name` holds everything)."""
+    times = payload["queries"]
+    cpus = payload["cpus"]
     summary: dict = {
         "metric": "registry_wall_sec",
         "value": payload["value"],
         "unit": "sec",
-        "sf": sf_val,
+        "sf": payload["sf"],
         "cpus": int(cpus) if cpus.isdigit() else cpus,
         "n_queries": len(times),
         "full": full_name,
     }
+    errors = payload.get("errors", {})
     if errors:
-        # errors are load-bearing for the driver; cap each message so
-        # a long traceback line cannot evict the queries dict
-        summary["errors"] = {n: m[:80] for n, m in errors.items()}
+        # errors are load-bearing for the driver, but every failing
+        # query would otherwise add a message and enough of them push
+        # the line past the window: keep the first three (each capped
+        # so a long traceback line cannot evict the queries dict) and
+        # the total; all of them are in the per-run file
+        summary["errors"] = {n: m[:80] for n, m in list(errors.items())[:3]}
+        summary["errors_total"] = len(errors)
     # calibration endpoints only; the per-segment marks live in the
     # full payload (they were ~120 chars of the old line)
-    summary["calibration"] = {"before": cal_before, "after": cal_after}
+    cal = payload["calibration"]
+    summary["calibration"] = {"before": cal["before"], "after": cal["after"]}
     if "baseline_ratio" in payload:
         br = payload["baseline_ratio"]
         worst3 = dict(sorted(br["queries"].items(), key=lambda kv: -kv[1])[:3])
@@ -468,7 +483,7 @@ def main() -> None:
         if len(json.dumps(summary, separators=(",", ":"))) > LINE_BUDGET:
             del packed[name]
     summary["queries_omitted"] = len(times) - len(packed)
-    print(json.dumps(summary, separators=(",", ":")), flush=True)
+    return json.dumps(summary, separators=(",", ":"))
 
 
 if __name__ == "__main__":

@@ -3,7 +3,10 @@
 The reference's __main__ loop (warehouse.py:307-314) extracts 9 source
 tables one at a time and per-row loads them, then rebuilds the cube
 (re-loading dims *after* the cube — quirk B8).  Here the ordering is
-the intended one: dims → fact → cube, each a single declarative job.
+the intended one: the eight dims commit concurrently, in no fixed
+order among themselves, all of them before the fact, and the fact
+before the cube.  Each table is written by one declarative plan under
+its own writer lease.
 
 Atomicity (O24): each table write is atomic via Spark's job-commit
 protocol; the pipeline as a whole is idempotent by construction
@@ -14,12 +17,20 @@ is simply re-run — no cross-table transaction needed (SURVEY.md §7.1).
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from datawarehouse_code_spark.operators.cube import build_cube, incremental_cube
+from datawarehouse_code_spark.operators.cube import (
+    build_cube,
+    incremental_cube,
+    write_cube,
+)
 from datawarehouse_code_spark.operators.dimensions import (
     build_dim_client,
     build_dim_country,
@@ -116,22 +127,58 @@ _DIM_KEYS: dict[str, list[str]] = {
     "dim_date_month": ["month_id"],
     "dim_date_year": ["year_id"],
 }
-# every materialized table, in load order: dims → fact → cube
+# every materialized table, in commit order: dims → fact → cube
 _TABLES = (*_DIM_KEYS, "fact", "cube")
+
+T = TypeVar("T")
+
+
+def _load_in_commit_order(
+    spark: SparkSession, load: Callable[[str], T]
+) -> dict[str, T]:
+    """Run ``load(name)`` for every table and return its results in
+    ``_TABLES`` order.  The eight dims are independent plans, each
+    written under its own lease, so they run concurrently on one
+    thread each; fact and then cube run on the caller's thread once
+    every dim has committed.  If a dim fails, the other dims still
+    finish and release their leases, the first failure in
+    ``_DIM_KEYS`` order is re-raised, and neither fact nor cube
+    starts."""
+    with ThreadPoolExecutor(len(_DIM_KEYS)) as pool:
+        # one wrapper per thread: each thread gets its own copy of the
+        # caller's local properties (job group, description), and
+        # Spark sets each query's execution id in that copy, so
+        # threads sharing one copy would overwrite each other's
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(load), name)
+            for name in _DIM_KEYS
+        ]
+    results = {name: f.result() for name, f in zip(_DIM_KEYS, futures)}
+    for name in ("fact", "cube"):
+        results[name] = load(name)
+    return results
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> Warehouse:
-    """Materialize the warehouse to parquet: dims → fact (partitioned
-    by year, O17) → cube (O22), every sink through acid's staged swap
-    (O24) — a rebuild never deletes a live table before its
-    replacement is in place, so readers of the previous load keep a
-    complete warehouse through (and past a crash of) the next one."""
+    """Materialize the warehouse to parquet: the dims concurrently, in
+    no fixed order among themselves, then the fact (partitioned by
+    year, O17), then the cube (O22).  Every sink goes through acid's
+    staged swap (O24) — a rebuild never deletes a live table before
+    its replacement is in place, so readers of the previous load keep
+    a complete warehouse through (and past a crash of) the next one.
+    A failed dim leaves the fact and the cube untouched."""
     wh = build_warehouse(spark, sf_dir)
-    for name in _TABLES:
+
+    def rebuild(name: str) -> None:
+        path = f"{out_dir}/{name}"
         if name == "fact":
-            write_fact(wh.fact, f"{out_dir}/fact")
+            write_fact(wh.fact, path)
+        elif name == "cube":
+            write_cube(wh.cube, path)
         else:
-            _staged_overwrite(spark, getattr(wh, name), f"{out_dir}/{name}")
+            _staged_overwrite(spark, getattr(wh, name), path)
+
+    _load_in_commit_order(spark, rebuild)
     return wh
 
 
@@ -148,6 +195,10 @@ def run_pipeline_incremental(
     - cube: append incremental_cube's rows, the facts absent from the
       existing cube joined with the dims.
 
+    The dims commit concurrently, in no fixed order among themselves,
+    all of them before the fact, and the fact before the cube; a
+    failed dim leaves the fact and the cube untouched.
+
     Each table is ONE plan run by the job that appends it: its report
     is an Observation on that plan, read after the append, so no
     count or collect re-runs the join.  Each table's read of its
@@ -160,11 +211,12 @@ def run_pipeline_incremental(
     Re-running against an up-to-date out_dir inserts nothing — the
     idempotency the reference gets from its per-row existence checks,
     at table-at-once cost.  Returns per-table skip reports
-    ({"incoming", "inserted", "skipped"}; the cube's {"inserted"}).
+    ({"incoming", "inserted", "skipped"}; the cube's {"inserted"}) in
+    ``_TABLES`` order.
     """
     log = logging.getLogger(__name__)
-    reports: dict[str, dict[str, int]] = {}
-    for name in _TABLES:
+
+    def append_delta(name: str) -> dict[str, int]:
         path = f"{out_dir}/{name}"
         with leased_append(spark, path) as lease:
             existing = spark.read.parquet(path)
@@ -183,9 +235,11 @@ def run_pipeline_incremental(
                 write_fact(delta, path, lease=lease)
             else:
                 delta.write.mode("append").parquet(path)
-        reports[name] = report.get
-        log.info("incremental load of %s: %s", name, reports[name])
-    return reports
+        counts = report.get
+        log.info("incremental load of %s: %s", name, counts)
+        return counts
+
+    return _load_in_commit_order(spark, append_delta)
 
 
 def compact_parquet(
@@ -230,7 +284,6 @@ def compact_parquet(
     import math
 
     from datawarehouse_code_spark.sources import bucketed as B
-    from datawarehouse_code_spark.sources.acid import _staged_overwrite
 
     # All filesystem traffic rides the Hadoop FileSystem API (r17
     # ADVICE fix: the fence previously re-read the lock file via

@@ -56,15 +56,41 @@ def test_run_pipeline_incremental_noop_then_catchup(spark, tmp_path):
     full rebuild."""
     from datawarehouse_code_spark.operators.cube import build_cube
     from datawarehouse_code_spark.operators.fact import write_fact
-    from datawarehouse_code_spark.pipeline import run_pipeline_incremental
+    from datawarehouse_code_spark.pipeline import (
+        _DIM_KEYS,
+        run_pipeline_incremental,
+    )
 
     out = str(tmp_path / "wh_inc")
     wh = run_pipeline(spark, SF_DIR, out)
 
-    # 1) idempotent no-op against the fresh materialization
-    reports = run_pipeline_incremental(spark, wh, out)
+    # 1) idempotent no-op against the fresh materialization, under a
+    # job group: the dims' pool threads must carry it, so every job
+    # between the one before the load and the one after is the group's
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = max(tracker.getJobIdsForGroup(prev["spark.jobGroup.id"]))
+    group = "incremental-noop"
+    sc.setJobGroup(group, group)
+    try:
+        reports = run_pipeline_incremental(spark, wh, out)
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    assert list(reports) == [*_DIM_KEYS, "fact", "cube"]
     assert all(r["inserted"] == 0 for r in reports.values())
     assert spark.read.parquet(f"{out}/fact").count() == wh.fact.count()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    after = min(
+        j for j in tracker.getJobIdsForGroup(prev["spark.jobGroup.id"])
+        if j > before
+    )
+    in_group = set(tracker.getJobIdsForGroup(group))
+    assert in_group and set(range(before + 1, after)) == in_group
 
     # 2) rebuild out_dir with a fact/cube PREFIX, then catch up
     old_fact = wh.fact.filter(F.col("year") <= 1995)
@@ -140,13 +166,39 @@ def test_write_fact_append_mode(spark, tmp_path):
 
 def test_run_pipeline_overwrite_idempotent(spark, tmp_path):
     """Running the pipeline twice over the same output is a no-op
-    change: deterministic surrogate keys + overwrite semantics."""
+    change: deterministic surrogate keys + overwrite semantics.  A
+    third run whose dim_date is held by another writer fails loudly,
+    after the other dims have released their leases, and never touches
+    the fact or the cube."""
+    import pytest as _pytest
+
+    from datawarehouse_code_spark.sources.acid import (
+        ConcurrentWriterError,
+        writer_lease,
+    )
+
     out = str(tmp_path / "wh2")
     run_pipeline(spark, SF_DIR, out)
     first = spark.read.parquet(f"{out}/cube").collect()
     run_pipeline(spark, SF_DIR, out)
     second = spark.read.parquet(f"{out}/cube").collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
+
+    def files(table: str) -> dict[str, int]:
+        return {
+            os.path.relpath(os.path.join(d, f), out):
+                os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(f"{out}/{table}") for f in fs
+        }
+
+    untouched = {t: files(t) for t in ("fact", "cube")}
+    with writer_lease(spark, f"{out}/dim_date"):
+        with _pytest.raises(ConcurrentWriterError):
+            run_pipeline(spark, SF_DIR, out)
+        assert {t: files(t) for t in untouched} == untouched
+        assert [n for n in os.listdir(out) if n.endswith("._wlock")] == [
+            "dim_date._wlock"
+        ]
 
 
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
