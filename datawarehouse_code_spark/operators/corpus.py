@@ -302,9 +302,10 @@ def knuth_hash(key_col: str) -> F.Column:
     multiplicative hash every deterministic sampling/split operator
     here draws from.  THE single definition: knuth_u,
     assign_splits_leakage_safe, and deterministic_group_sample all
-    call this, and the DuckDB oracle strings are generated from
-    knuth_hash_sql below — the cross-engine contract requires the
-    copies to stay bit-identical, so there are no copies."""
+    call this, the DuckDB oracle strings are generated from
+    knuth_hash_sql below, and Python row construction calls knuth_int
+    — the cross-engine contract requires the copies to stay
+    bit-identical, so there are no copies."""
     return F.pmod(
         F.pmod(F.col(key_col), F.lit(2**31)) * F.lit(2654435761),
         F.lit(2**32),
@@ -318,6 +319,12 @@ def knuth_hash_sql(expr: str) -> str:
         f"((({expr} % 2147483648 + 2147483648) % 2147483648) "
         "* 2654435761) % 4294967296"
     )
+
+
+def knuth_int(key: int) -> int:
+    """The same hash of one Python int, for row construction outside
+    Spark (the media fixtures in plans/llm_queries.py)."""
+    return ((key % 2**31) * 2654435761) % 2**32
 
 
 def knuth_u(key_col: str) -> F.Column:

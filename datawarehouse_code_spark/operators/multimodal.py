@@ -976,6 +976,23 @@ def encode_gray_pgm(width: int, height: int, pixels: bytes) -> bytes:
     return f"P5\n{width} {height}\n255\n".encode("ascii") + bytes(pixels)
 
 
+def dhash_raster(row_bytes) -> bytes:
+    """The 9-wide grayscale raster whose dHash row bits EQUAL the given
+    row bytes (bit c of row r set <-> luminance strictly increases from
+    column c to c+1, operators/media_dedup.dhash_bits): each row starts
+    at 128 and walks +1 per set bit, -1 per clear one.  Values stay
+    within [120, 136], so no saturation and no ties; 8 row bytes give
+    the 9x8 raster that needs no downsampling."""
+    raster = bytearray()
+    for b in row_bytes:
+        v = 128
+        raster.append(v)
+        for c in range(8):
+            v += 1 if (b >> c) & 1 else -1
+            raster.append(v)
+    return bytes(raster)
+
+
 def encode_const_bmp(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
     """Constant-color bottom-up 24-bit BI_RGB BMP payload (4-byte row
     padding, BGR order) — same closed-form fixture role as

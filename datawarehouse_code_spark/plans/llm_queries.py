@@ -26,11 +26,25 @@ cast float→double before any arithmetic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datawarehouse_code_spark.operators.corpus import knuth_hash_sql
+from datawarehouse_code_spark.operators.corpus import knuth_hash_sql, knuth_int
 from datawarehouse_code_spark.operators.iterative import cut_lineage
+from datawarehouse_code_spark.operators.multimodal import (
+    decoded_audio_stats,
+    decoded_image_stats,
+    dhash_raster,
+    encode_const_bmp,
+    encode_const_png,
+    encode_const_ppm,
+    encode_gray_jpeg,
+    encode_gray_pgm,
+    encode_pcm_wav,
+)
 from datawarehouse_code_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dup_lsh,
@@ -47,6 +61,7 @@ from datawarehouse_code_spark.operators.text import (
     simhash_near_dup_pairs,
     words,
 )
+from datawarehouse_code_spark.operators.video_dedup import encode_video
 from datawarehouse_code_spark.plans.base import Query
 from datawarehouse_code_spark.sources.catalog import read_table
 
@@ -1781,6 +1796,44 @@ SELECT 'quantized' AS part, * FROM ({_SIM_QUANTIZED_SQL})
 """
 
 
+def _media_fixture(
+    spark: SparkSession,
+    sf_dir: str,
+    make: Callable[[int], tuple[int, str, bytes]],
+    where: Column | None = None,
+) -> DataFrame:
+    """A synthesized media table, one row per `documents.doc_id`:
+    `make(doc_id)` returns that row's `(media_id, media_type,
+    content)`, built in one distributed mapInPandas stage under the
+    media schema every media operator reads.
+
+    `where` filters the doc ids BEFORE the map: a filter on the output
+    cannot push through mapInPandas, so it would still build (and
+    discard) every dropped row's blob."""
+    docs = read_table(spark, "documents", sf_dir).select("doc_id")
+    if where is not None:
+        docs = docs.filter(where)
+
+    def rows(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                [make(int(d)) for d in pdf["doc_id"]],
+                columns=["media_id", "media_type", "content"],
+            )
+
+    return docs.mapInPandas(
+        rows, "media_id BIGINT, media_type STRING, content BINARY"
+    )
+
+
+def _png_stats_row(d: int) -> tuple[int, str, bytes]:
+    w, h = 3 + d % 11, 2 + d % 9
+    rgb = (d % 256, (5 * d) % 256, (11 * d) % 256)
+    return d, "image/png", encode_const_png(w, h, rgb)
+
+
 def _decoded_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG decode inside the Arrow pipeline (r9 verdict ask #1):
     per doc_id, synthesize a constant-color 8-bit truecolor PNG in a
@@ -1794,37 +1847,7 @@ def _decoded_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip the hash.  (Filter reconstruction, palette/alpha channels,
     and hostile streams are pinned separately against javax.imageio
     and the corruption fuzz in tests/test_multimodal.py.)"""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import (
-        decoded_image_stats,
-        encode_const_png,
-    )
-
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 3 + d % 11, 2 + d % 9
-                rgb = (d % 256, (5 * d) % 256, (11 * d) % 256)
-                ids.append(d)
-                types.append("image/png")
-                blobs.append(encode_const_png(w, h, rgb))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    media = docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
-    return decoded_image_stats(media)
+    return decoded_image_stats(_media_fixture(spark, sf_dir, _png_stats_row))
 
 
 _PNG_STATS_SQL = """
@@ -2823,6 +2846,21 @@ FROM planted
 """
 
 
+def _image_stats_row(d: int) -> tuple[int, str, bytes]:
+    fmt = d % 3
+    if fmt == 2:
+        w, h = 8 + d % 17, 8 + d % 11
+        jpeg = encode_gray_jpeg(
+            w, h, (37 * d) % 256, restart_interval=2 if d % 2 else 0
+        )
+        return d, "image/jpeg", jpeg
+    w, h = 4 + d % 13, 3 + d % 7
+    rgb = (d % 256, (3 * d) % 256, (7 * d) % 256)
+    if fmt == 0:
+        return d, "image/x-ppm", encode_const_ppm(w, h, rgb)
+    return d, "image/bmp", encode_const_bmp(w, h, rgb)
+
+
 def _decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode across all three native codec branches in one
     Arrow pipeline (r7 verdict ask #4): per doc_id, synthesize a
@@ -2836,50 +2874,9 @@ def _decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     width/height/sums in closed form from doc_id alone — a header
     mis-parse, channel swap, padding bug, Huffman/IDCT error, or
     restart-marker mishandling all flip the hash."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import (
-        decoded_image_stats,
-        encode_const_bmp,
-        encode_const_ppm,
-        encode_gray_jpeg,
+    return decoded_image_stats(
+        _media_fixture(spark, sf_dir, _image_stats_row)
     )
-
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                fmt = d % 3
-                if fmt < 2:
-                    w, h = 4 + d % 13, 3 + d % 7
-                    rgb = (d % 256, (3 * d) % 256, (7 * d) % 256)
-                    enc = encode_const_ppm if fmt == 0 else encode_const_bmp
-                    blob, t = enc(w, h, rgb), ("image/x-ppm" if fmt == 0 else "image/bmp")
-                else:
-                    w, h = 8 + d % 17, 8 + d % 11
-                    blob = encode_gray_jpeg(
-                        w, h, (37 * d) % 256,
-                        restart_interval=2 if d % 2 else 0,
-                    )
-                    t = "image/jpeg"
-                ids.append(d)
-                types.append(t)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    media = docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
-    return decoded_image_stats(media)
 
 
 _DECODED_STATS_SQL = """
@@ -2904,6 +2901,11 @@ FROM documents
 """
 
 
+def _audio_stats_row(d: int) -> tuple[int, str, bytes]:
+    samples = [((d * 37 + i * 211) % 4096) - 2048 for i in range(16 + d % 48)]
+    return d, "audio/wav", encode_pcm_wav(8000 + (d % 8) * 1000, [samples])
+
+
 def _decoded_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WAV decode inside the Arrow pipeline — the audio twin of
     decoded_png_stats: per doc_id, synthesize a deterministic 16-bit
@@ -2915,39 +2917,9 @@ def _decoded_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum |v| and peak via a range unnest, zero crossings via lag) —
     a header mis-parse, block-align slip, sign/centering bug or
     channel interleave error all flip the hash."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import (
-        decoded_audio_stats,
-        encode_pcm_wav,
+    return decoded_audio_stats(
+        _media_fixture(spark, sf_dir, _audio_stats_row)
     )
-
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sr = 8000 + (d % 8) * 1000
-                n = 16 + d % 48
-                samples = [((d * 37 + i * 211) % 4096) - 2048
-                           for i in range(n)]
-                ids.append(d)
-                types.append("audio/wav")
-                blobs.append(encode_pcm_wav(sr, [samples]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    media = docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
-    return decoded_audio_stats(media)
 
 
 _AUDIO_STATS_SQL = """
@@ -3346,6 +3318,17 @@ GROUP BY 1, 2
 """
 
 
+def _phash_row(d: int) -> tuple[int, str, bytes]:
+    grp, mem = d // 4, d % 4
+    rb = [knuth_int(grp * 8 + r) % 256 for r in range(8)]
+    rb[7] ^= (1 << mem) - 1
+    raster = dhash_raster(rb)
+    if d % 2 == 0:
+        return d, "image/pgm", encode_gray_pgm(9, 8, raster)
+    pixels = bytes(v for px in raster for v in (px, px, px))
+    return d, "image/ppm", b"P6\n9 8\n255\n" + pixels
+
+
 def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The perceptual-hash oracle fixture: per doc_id a REAL 9x8
     grayscale PGM whose dHash bits are a closed-form function of the
@@ -3361,51 +3344,7 @@ def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel mean) — the SAME raster values through two real decoders,
     so the closed-form hash oracle is unchanged while the row
     exercises both lanes."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
-
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                grp, mem = d // 4, d % 4
-                rb = [
-                    ((((grp * 8 + r) % 2**31) * 2654435761) % 2**32) % 256
-                    for r in range(8)
-                ]
-                rb[7] ^= (1 << mem) - 1
-                raster = bytearray()
-                for b in rb:
-                    v = 128
-                    raster.append(v)
-                    for c in range(8):
-                        v += 1 if (b >> c) & 1 else -1
-                        raster.append(v)
-                ids.append(d)
-                if d % 2 == 0:
-                    types.append("image/pgm")
-                    blobs.append(encode_gray_pgm(9, 8, bytes(raster)))
-                else:
-                    types.append("image/ppm")
-                    blobs.append(
-                        b"P6\n9 8\n255\n"
-                        + bytes(v for px in raster for v in (px, px, px))
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
+    return _media_fixture(spark, sf_dir, _phash_row)
 
 
 def _media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3554,6 +3493,12 @@ def _phash_base_raster(grp: int, upscale: bool = False):
     return vals
 
 
+def _phash_dct_row(d: int) -> tuple[int, str, bytes]:
+    vals = _phash_base_raster(d // 2, upscale=bool(d % 2))
+    pgm = encode_gray_pgm(vals.shape[1], vals.shape[0], vals.tobytes())
+    return d, "image/pgm", pgm
+
+
 def _phash_dct_media(
     spark: SparkSession, sf_dir: str, parity: int | None = None
 ) -> DataFrame:
@@ -3568,42 +3513,9 @@ def _phash_dct_media(
     excludes — while distinct groups are unrelated rasters whose DCT
     signs differ in ~half of 63 bits.
 
-    `parity` (0 or 1) keeps only that member, FILTERED BEFORE the
-    build map — a post-hoc filter on the output cannot push through
-    mapInPandas, so it would still build (and discard) every other
-    member's blob."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
-
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-    if parity is not None:
-        docs = docs.filter(F.col("doc_id") % 2 == parity)
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                vals = _phash_base_raster(d // 2, upscale=bool(d % 2))
-                ids.append(d)
-                types.append("image/pgm")
-                blobs.append(
-                    encode_gray_pgm(
-                        vals.shape[1], vals.shape[0], vals.tobytes()
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
+    `parity` (0 or 1) keeps only that member."""
+    where = None if parity is None else F.col("doc_id") % 2 == parity
+    return _media_fixture(spark, sf_dir, _phash_dct_row, where)
 
 
 def _media_phash_dct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3680,6 +3592,14 @@ FROM g
 """
 
 
+def _phash_video_row(d: int) -> tuple[int, str, bytes]:
+    grp = d // 2
+    vals = _phash_base_raster(grp, upscale=True)
+    pad = encode_gray_pgm(9, 8, bytes(range(128, 128 + 72)))
+    frames = [encode_gray_pgm(64, 64, vals.tobytes()), pad]
+    return grp, "video/vid0", encode_video(frames)
+
+
 def _phash_video_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video side of the frame-pHash fixture: one VID0 per GROUP
     (media_id = g, built from the even member's doc row) whose frame
@@ -3688,40 +3608,8 @@ def _phash_video_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle path).  The 32×32 member-0 image is frame 0's exact
     2× box downscale, so the cross-modal pHash match is closed-form:
     (image 2g, video g, frame 0, 4 bands, hamming 0)."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
-    from datawarehouse_code_spark.operators.video_dedup import encode_video
-
-    docs = (
-        read_table(spark, "documents", sf_dir)
-        .select("doc_id")
-        .filter(F.col("doc_id") % 2 == 0)
-    )
-    pad = encode_gray_pgm(9, 8, bytes(range(128, 128 + 72)))
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                grp = int(d) // 2
-                vals = _phash_base_raster(grp, upscale=True)
-                ids.append(grp)
-                types.append("video/vid0")
-                blobs.append(
-                    encode_video([encode_gray_pgm(64, 64, vals.tobytes()),
-                                  pad])
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
+    return _media_fixture(
+        spark, sf_dir, _phash_video_row, F.col("doc_id") % 2 == 0
     )
 
 
@@ -3747,9 +3635,6 @@ def _video_frame_phash_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
             video_frame_phashes(_phash_video_media(spark, sf_dir))
         )
     )
-    # parity pre-filter INSIDE the fixture builder: filtering the
-    # mapInPandas output would still build every odd member's 64×64
-    # blob and throw it away (predicates don't push through a map)
     new_images = _phash_dct_media(spark, sf_dir, parity=0)
     return image_video_matches(
         image_phash(new_images), fidx, max_hamming=6, band_cap=50,
@@ -3765,6 +3650,12 @@ FROM documents WHERE doc_id % 2 = 0
 """
 
 
+def _audio_fp_row(d: int) -> tuple[int, str, bytes]:
+    grp, off = d // 4, (d % 4) * 8
+    samples = [((grp * 37 + (i + off) * 211) % 4096) - 2048 for i in range(96)]
+    return d, "audio/wav", encode_pcm_wav(8000, [samples])
+
+
 def _audio_fp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The audio-fingerprint oracle fixture: per doc_id a REAL 16-bit
     PCM WAV of 96 samples where group = doc_id//4 picks the base
@@ -3773,36 +3664,7 @@ def _audio_fp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop-aligned shifted copy, so members share all overlapping
     fingerprint grams and the oracle can restate every energy window
     in closed form."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import encode_pcm_wav
-
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                grp, off = d // 4, (d % 4) * 8
-                samples = [
-                    ((grp * 37 + (i + off) * 211) % 4096) - 2048
-                    for i in range(96)
-                ]
-                ids.append(d)
-                types.append("audio/wav")
-                blobs.append(encode_pcm_wav(8000, [samples]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
+    return _media_fixture(spark, sf_dir, _audio_fp_row)
 
 
 def _audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3899,6 +3761,17 @@ GROUP BY 1, 2
 """
 
 
+def _video_fp_row(d: int) -> tuple[int, str, bytes]:
+    grp, mem = d // 4, d % 4
+    frames = [
+        encode_gray_pgm(9, 8, dhash_raster(
+            [knuth_int(grp * 256 + fidx * 8 + r) % 256 for r in range(8)]
+        ))
+        for fidx in range(mem, mem + 6)
+    ]
+    return d, "video/vid0", encode_video(frames)
+
+
 def _video_fp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The video-fingerprint oracle fixture: per doc_id a REAL VID0
     container of six 9x8 PGM frames where group = doc_id//4 owns an
@@ -3907,46 +3780,7 @@ def _video_fp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     member = doc_id%4 starts `member` frames later (a frame-trimmed
     copy), so members share all overlapping temporal grams and every
     per-frame hash is closed-form."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
-    from datawarehouse_code_spark.operators.video_dedup import encode_video
-
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                grp, mem = d // 4, d % 4
-                frames = []
-                for j in range(6):
-                    fidx = mem + j
-                    raster = bytearray()
-                    for r in range(8):
-                        key = grp * 256 + fidx * 8 + r
-                        b = ((((key) % 2**31) * 2654435761) % 2**32) % 256
-                        v = 128
-                        raster.append(v)
-                        for c in range(8):
-                            v += 1 if (b >> c) & 1 else -1
-                            raster.append(v)
-                    frames.append(encode_gray_pgm(9, 8, bytes(raster)))
-                ids.append(d)
-                types.append("video/vid0")
-                blobs.append(encode_video(frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
+    return _media_fixture(spark, sf_dir, _video_fp_row)
 
 
 def _video_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4062,7 +3896,7 @@ def _xmodal_row_byte(grp: int, r: int) -> int:
     band bucket >3 groups at 1250 groups), so unrelated groups
     really are unrelated and the planted match set is closed-form at
     every scale factor."""
-    x = ((grp * 8 + r) % 2**31) * 2654435761 % 2**32
+    x = knuth_int(grp * 8 + r)
     x ^= x >> 16
     x = (x * 2246822519) % 2**32
     x ^= x >> 13
@@ -4073,17 +3907,13 @@ def _xmodal_raster(grp: int, mem: int) -> bytes:
     """The 9x8 ±1-walk raster whose dHash row bytes are
     _xmodal_row_byte(grp, r), with the low `mem` bits of row 7
     flipped (the member construction _phash_media pins)."""
-    raster = bytearray()
-    for r in range(8):
-        b = _xmodal_row_byte(grp, r)
-        if r == 7:
-            b ^= (1 << mem) - 1
-        v = 128
-        raster.append(v)
-        for c in range(8):
-            v += 1 if (b >> c) & 1 else -1
-            raster.append(v)
-    return bytes(raster)
+    rb = [_xmodal_row_byte(grp, r) for r in range(8)]
+    rb[7] ^= (1 << mem) - 1
+    return dhash_raster(rb)
+
+
+def _xmodal_image_row(d: int) -> tuple[int, str, bytes]:
+    return d, "image/pgm", encode_gray_pgm(9, 8, _xmodal_raster(d // 4, d % 4))
 
 
 def _xmodal_image_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4092,33 +3922,14 @@ def _xmodal_image_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     _xmodal_row_byte).  Same member geometry as _phash_media: the four
     members of a group sit at pairwise hamming ≤ 3 and share bands
     0-2."""
-    import pandas as pd  # noqa: F811
+    return _media_fixture(spark, sf_dir, _xmodal_image_row)
 
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
 
-    docs = read_table(spark, "documents", sf_dir).select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                ids.append(d)
-                types.append("image/pgm")
-                blobs.append(
-                    encode_gray_pgm(9, 8, _xmodal_raster(d // 4, d % 4))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
-    )
+def _cross_modal_video_row(id_offset: int, d: int) -> tuple[int, str, bytes]:
+    frames = [
+        encode_gray_pgm(9, 8, _xmodal_raster(d // 4 + j, 0)) for j in range(4)
+    ]
+    return d + id_offset, "video/vid0", encode_video(frames)
 
 
 def _cross_modal_video_media(
@@ -4134,39 +3945,9 @@ def _cross_modal_video_media(
     band 3 iff mem = 0.  `id_offset` shifts the video media_ids out
     of the image id space for consumers that mix both node kinds in
     one graph (the canonical-selection row)."""
-    import pandas as pd  # noqa: F811
-
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
-    from datawarehouse_code_spark.operators.video_dedup import encode_video
-
-    docs = (
-        read_table(spark, "documents", sf_dir)
-        .select("doc_id")
-        .filter(F.col("doc_id") % every == 0)
-    )
-
-    def build(it):
-        for pdf in it:
-            ids, types, blobs = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = [
-                    encode_gray_pgm(9, 8, _xmodal_raster(d // 4 + j, 0))
-                    for j in range(4)
-                ]
-                ids.append(d + id_offset)
-                types.append("video/vid0")
-                blobs.append(encode_video(frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": pd.Series(types, dtype=object),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, content BINARY"
+    return _media_fixture(
+        spark, sf_dir, functools.partial(_cross_modal_video_row, id_offset),
+        F.col("doc_id") % every == 0,
     )
 
 
@@ -4208,10 +3989,7 @@ def _xmodal_byte_sql(key: str) -> str:
     bits 8-15; see the additive-structure note on the Python twin).
     The second multiply rides HUGEINT: (2³²−1)·2246822519 overflows
     signed BIGINT, which DuckDB raises on rather than wrapping."""
-    k1 = (
-        f"(((({key}) % 2147483648 + 2147483648) % 2147483648)"
-        " * 2654435761) % 4294967296"
-    )
+    k1 = knuth_hash_sql(f"({key})")
     x1 = f"xor({k1}, ({k1}) // 65536)"
     x2 = f"CAST((CAST(({x1}) AS HUGEINT) * 2246822519) % 4294967296 AS BIGINT)"
     x3 = f"xor({x2}, ({x2}) // 8192)"

@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.operators.multimodal import dhash_raster
 from datawarehouse_code_spark.sources.bucketed import (
     BUCKET_COL,
     bucket_expr,
@@ -293,15 +294,8 @@ def test_dhash_index_ingest_bucketed_stream_equals_batch(spark, tmp_path):
     from tests.test_streaming import _media_landing
 
     def raster(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     rows = [(i, "image/pgm", raster(i)) for i in range(9)]
     land = _media_landing(tmp_path, rows)
@@ -617,15 +611,9 @@ def test_dhash_gated_ingest_bucketed_same_decisions(spark, tmp_path):
     from datawarehouse_code_spark.streaming.jobs import run_dhash_gated_ingest
 
     def raster(seed, shift=0):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128 + shift
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
+        return encode_gray_pgm(9, 8, pixels)
 
     rows0 = [(1, "image/pgm", raster(3)),
              (2, "image/pgm", raster(3, shift=5))]
@@ -685,15 +673,9 @@ def test_multimodal_gate_bucketed_all_tables(spark, tmp_path):
     )
 
     def raster(seed, shift=0):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128 + shift
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
+        return encode_gray_pgm(9, 8, pixels)
 
     text = (
         "the quick brown fox jumps over the lazy dog near the old "

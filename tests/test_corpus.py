@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.corpus import clean_corpus, write_clean_corpus
 from datawarehouse_code_spark.operators.text import near_dup_pairs_exact
+from datawarehouse_code_spark.plans.audit import formatted_plan
 from datawarehouse_code_spark.sources.catalog import read_table
 from tests.conftest import SF_DIR
 
@@ -894,14 +895,8 @@ def test_curriculum_boundary_plan_has_no_global_sort(spark):
     docs = read_table(spark, "documents", SF_DIR).select(
         "doc_id", F.length("text").alias("score")
     )
-    plan = (
+    plan = formatted_plan(
         curriculum_phases(docs, 4, "score", strategy="boundary")
-        ._jdf.queryExecution()
-        .explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
     )
     assert "SinglePartition" not in plan, plan[:3000]
     # every Window node must carry a partition spec (pinned by the
@@ -931,24 +926,17 @@ def test_curriculum_auto_strategy_selection(spark):
         "doc_id", F.length("text").alias("score")
     )
 
-    def plan_of(df):
-        return df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-
     # default call, input "large" relative to a forced 0-byte cutover:
     # the scale-safe boundary plan (this is the default-call pin — at
     # real corpus scale the 64 MB production cutover trips the same way)
-    big = plan_of(
+    big = formatted_plan(
         curriculum_phases(docs, 4, "score", auto_ntile_max_bytes=0)
     )
     assert "SinglePartition" not in big, big[:3000]
 
     # default call, fixture-sized input under the production cutover:
     # the ntile fast path (its global window IS the single partition)
-    small = plan_of(curriculum_phases(docs, 4, "score"))
+    small = formatted_plan(curriculum_phases(docs, 4, "score"))
     assert "SinglePartition" in small, small[:3000]
 
     # and the two default-call branches agree on values (the broader

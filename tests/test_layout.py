@@ -10,6 +10,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.layout import morton_interleave, zorder_write
+from datawarehouse_code_spark.plans.audit import formatted_plan
 from datawarehouse_code_spark.sources.catalog import read_table
 from tests.conftest import SF_DIR
 
@@ -534,13 +535,6 @@ def test_bucketed_tables_join_colocated(spark, tmp_path):
         "l_orderkey", "l_quantity"
     )
 
-    def fmt(df):
-        return df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-
     try:
         write_bucketed_table(
             orders, "b_orders", str(tmp_path / "o"), 8, ["o_orderkey"]
@@ -554,7 +548,7 @@ def test_bucketed_tables_join_colocated(spark, tmp_path):
             .hint("merge")
             .join(spark.table("b_lineitem"), cond_b)
         )
-        plan = fmt(j)
+        plan = formatted_plan(j)
         assert "SortMergeJoin" in plan, plan[:2000]
         assert "Exchange" not in plan, plan[:3000]
         assert ") Sort " not in plan and "\nSort " not in plan, plan[:3000]
@@ -570,7 +564,7 @@ def test_bucketed_tables_join_colocated(spark, tmp_path):
         )
         import re
 
-        assert len(set(re.findall(r"\((\d+)\) Exchange", fmt(pj)))) >= 2
+        assert len(set(re.findall(r"\((\d+)\) Exchange", formatted_plan(pj)))) >= 2
 
         # identical values
         a = j.groupBy().agg(

@@ -17,26 +17,12 @@ from datawarehouse_code_spark.operators.media_dedup import (
     image_dhash,
 )
 from datawarehouse_code_spark.operators.multimodal import (
+    dhash_raster,
     encode_const_bmp,
     encode_const_png,
     encode_const_ppm,
     encode_gray_pgm,
 )
-
-
-def _raster_from_row_bytes(row_bytes: list[int]) -> bytes:
-    """9x8 grayscale raster whose dHash row bits EQUAL the given row
-    bytes (bit c of row r set <-> luminance strictly increases from
-    grid column c to c+1): start each row at 128 and walk +-1 per
-    bit.  Values stay within [120, 136] - no saturation, no ties."""
-    out = bytearray()
-    for b in row_bytes:
-        v = 128
-        out.append(v)
-        for c in range(8):
-            v += 1 if (b >> c) & 1 else -1
-            out.append(v)
-    return bytes(out)
 
 
 def _bands_from_row_bytes(row_bytes: list[int]) -> tuple[int, ...]:
@@ -51,12 +37,12 @@ ROWS_A = [0x13, 0x8F, 0x00, 0xFF, 0xA5, 0x3C, 0x71, 0xE2]
 
 
 def test_dhash_bits_match_independent_construction():
-    raster = _raster_from_row_bytes(ROWS_A)
+    raster = dhash_raster(ROWS_A)
     assert dhash_bits(9, 8, 1, raster) == _bands_from_row_bytes(ROWS_A)
 
 
 def test_dhash_brightness_shift_invariance():
-    raster = _raster_from_row_bytes(ROWS_A)
+    raster = dhash_raster(ROWS_A)
     shifted = bytes(v + 37 for v in raster)  # max 136+37 < 256
     assert dhash_bits(9, 8, 1, shifted) == _bands_from_row_bytes(ROWS_A)
 
@@ -65,7 +51,7 @@ def test_dhash_integer_upscale_invariance():
     """3x pixel replication (27x24): block means recover the original
     samples exactly, so the hash is unchanged."""
     raster = np.frombuffer(
-        _raster_from_row_bytes(ROWS_A), dtype=np.uint8
+        dhash_raster(ROWS_A), dtype=np.uint8
     ).reshape(8, 9)
     up = np.repeat(np.repeat(raster, 3, axis=0), 3, axis=1)
     assert dhash_bits(27, 24, 1, up.tobytes()) == _bands_from_row_bytes(
@@ -87,7 +73,7 @@ def test_dhash_reencoding_invariance_across_codecs(spark):
         (0, "image/ppm", encode_const_ppm(16, 12, (40, 90, 200))),
         (1, "image/bmp", encode_const_bmp(16, 12, (40, 90, 200))),
         (2, "image/png", encode_const_png(16, 12, (40, 90, 200))),
-        (3, "image/pgm", encode_gray_pgm(9, 8, _raster_from_row_bytes(ROWS_A))),
+        (3, "image/pgm", encode_gray_pgm(9, 8, dhash_raster(ROWS_A))),
     ]
     media = spark.createDataFrame(
         blobs, ["media_id", "media_type", "content"]
@@ -121,7 +107,7 @@ def test_dhash_pairs_planted_flips(spark):
     media = spark.createDataFrame(
         [
             (m, "image/pgm",
-             encode_gray_pgm(9, 8, _raster_from_row_bytes(_flip_member(ROWS_A, m))))
+             encode_gray_pgm(9, 8, dhash_raster(_flip_member(ROWS_A, m))))
             for m in range(4)
         ],
         ["media_id", "media_type", "content"],
@@ -166,7 +152,7 @@ def test_incremental_matches_equal_batch_restriction(spark, tmp_path):
         for m in range(4):
             rows.append(
                 (g * 4 + m, "image/pgm",
-                 encode_gray_pgm(9, 8, _raster_from_row_bytes(_flip_member(base, m)))))
+                 encode_gray_pgm(9, 8, dhash_raster(_flip_member(base, m)))))
     media = spark.createDataFrame(rows, ["media_id", "media_type", "content"])
     corpus = media.filter(F.col("media_id") % 4 != 0)
     inc = media.filter(F.col("media_id") % 4 == 0)
@@ -195,7 +181,7 @@ def test_rtbf_forgotten_media_never_matches_again(spark, tmp_path):
 
     blobs = [
         (m, "image/pgm",
-         encode_gray_pgm(9, 8, _raster_from_row_bytes(_flip_member(ROWS_A, m))))
+         encode_gray_pgm(9, 8, dhash_raster(_flip_member(ROWS_A, m))))
         for m in range(3)
     ]
     media = spark.createDataFrame(blobs, ["media_id", "media_type", "content"])
@@ -204,7 +190,7 @@ def test_rtbf_forgotten_media_never_matches_again(spark, tmp_path):
 
     copy_of_1 = spark.createDataFrame(
         [(99, "image/pgm",
-          encode_gray_pgm(9, 8, _raster_from_row_bytes(_flip_member(ROWS_A, 1))))],
+          encode_gray_pgm(9, 8, dhash_raster(_flip_member(ROWS_A, 1))))],
         ["media_id", "media_type", "content"],
     )
     before = dhash_matches_incremental(
@@ -368,7 +354,7 @@ def test_quarantine_fingerprint_lanes(spark):
     )
 
     img_rows = [
-        (1, "image/pgm", encode_gray_pgm(9, 8, _raster_from_row_bytes(ROWS_A))),
+        (1, "image/pgm", encode_gray_pgm(9, 8, dhash_raster(ROWS_A))),
         (2, "image/bad", b"NOTANIMAGE" * 4),
         (3, "image/pgm", None),
     ]
@@ -406,7 +392,7 @@ def test_quarantine_fingerprint_lanes(spark):
 
     vid_rows = [
         (1, "video/vid0",
-         encode_video([encode_gray_pgm(9, 8, _raster_from_row_bytes(ROWS_A))] * 3)),
+         encode_video([encode_gray_pgm(9, 8, dhash_raster(ROWS_A))] * 3)),
         (2, "video/vid0", b"VID0" + b"\xff" * 8),  # lies about sizes
     ]
     vids = spark.createDataFrame(
@@ -561,7 +547,7 @@ def test_image_fingerprints_quarantine_combined(spark):
         [
             (1, "image/pgm", encode_gray_pgm(32, 32, _xblock_raster(3))),
             (2, "image/pgm",
-             encode_gray_pgm(9, 8, _raster_from_row_bytes(ROWS_A))),
+             encode_gray_pgm(9, 8, dhash_raster(ROWS_A))),
             (3, "image/pgm", b"NOT AN IMAGE"),
         ],
         ["media_id", "media_type", "content"],

@@ -1349,3 +1349,64 @@ def test_png_wavefront_skew_buffer_bounded_all_aspect_ratios():
         (b"IEND", b""),
     )
     assert decode_image(data) == (w, h, 1, b"".join(ref))
+
+
+# (row count, sha256 of the sorted (media_id, media_type,
+# sha256(content)) rows) of each media fixture in plans/llm_queries.py
+# over doc ids 0-499, as the Spark fixtures produced them.
+_FIXTURE_DIGESTS = {
+    "png_stats": (500, "4170e22c200a053408f80dc124651a7cd49dbabdfd88bf9b2e6ca365084a526f"),
+    "image_stats": (500, "01362d220612bce0aaea86fa38e928006c1c751f4fb5f7a956b4f2a47490d49e"),
+    "audio_stats": (500, "8b267909f02b0e03f93b93d6e509ce5f93dff9190c9b4fc3f2b1f6f22a1217ef"),
+    "phash": (500, "49c6f5d9621610801b5b1df51ce610f720659037747e1aff58b161ac4abc8fb6"),
+    "phash_dct": (500, "8dc22b55a1e6c1dc088a6336e59e23aed60707b553b5016ae4f6cb47c89b790e"),
+    "phash_dct_parity0": (250, "1ee1b2ba589270a3c56e16aed68723fb017092cf4e695cf4f11d2893b3d709cc"),
+    "phash_video": (250, "8c637e97437e83bdcd1b594520944e26c2076d60f8320104edeec9eac5373727"),
+    "audio_fp": (500, "a5f4b13b7e2d9810dea828ff3edf7912f0e9dab98b4ed66e29c60767af8bae64"),
+    "video_fp": (500, "388bf7951c2838a30ffe88d1f0ff1f7ae8bf40f1a65451ecec4f0031f58097cc"),
+    "xmodal_image": (500, "360159ca5099ebad26b6206d8561dffda415ef739cbf1ca9a1fad33acd551073"),
+    "cross_modal_video": (125, "504884f19950229271a81b35ba713d9cef920d467df64769edc4a883d9a639bc"),
+    "cross_modal_video_every32": (16, "27755d6094d96b7397c44984328739a562ca58c8445e22eea50398a4b14d8106"),
+}
+
+
+def test_media_fixture_rows_match_pinned_digests():
+    """Every media fixture's bytes, rebuilt in plain Python from its
+    row function (no Spark job), equal the pinned digests.  The
+    outcome-grain oracles (media_phash_dct_*, video_frame_phash_matches)
+    cannot see a changed byte; this can.  The filtered variants take
+    the same doc-id subsets the fixtures' `where` filters select."""
+    import functools
+    import hashlib
+
+    from datawarehouse_code_spark.plans import llm_queries as q
+
+    ids = range(500)
+    evens = [d for d in ids if d % 2 == 0]
+    cases = {
+        "png_stats": (q._png_stats_row, ids),
+        "image_stats": (q._image_stats_row, ids),
+        "audio_stats": (q._audio_stats_row, ids),
+        "phash": (q._phash_row, ids),
+        "phash_dct": (q._phash_dct_row, ids),
+        "phash_dct_parity0": (q._phash_dct_row, evens),
+        "phash_video": (q._phash_video_row, evens),
+        "audio_fp": (q._audio_fp_row, ids),
+        "video_fp": (q._video_fp_row, ids),
+        "xmodal_image": (q._xmodal_image_row, ids),
+        "cross_modal_video": (
+            functools.partial(q._cross_modal_video_row, 0),
+            [d for d in ids if d % 4 == 0],
+        ),
+        "cross_modal_video_every32": (
+            functools.partial(q._cross_modal_video_row, q._XMODAL_ID_OFFSET),
+            [d for d in ids if d % 32 == 0],
+        ),
+    }
+    got = {}
+    for name, (make, doc_ids) in cases.items():
+        rows = sorted(
+            (m, t, hashlib.sha256(c).hexdigest()) for m, t, c in map(make, doc_ids)
+        )
+        got[name] = (len(rows), hashlib.sha256(repr(rows).encode()).hexdigest())
+    assert got == _FIXTURE_DIGESTS

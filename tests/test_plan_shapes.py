@@ -14,6 +14,7 @@ import re
 
 import pytest
 
+from datawarehouse_code_spark.plans.audit import formatted_plan
 from datawarehouse_code_spark.plans.registry import (
     QUERIES,
     SUPPLEMENTARY_QUERIES,
@@ -24,12 +25,7 @@ ALL_QUERIES = {**SUPPLEMENTARY_QUERIES, **QUERIES}
 
 
 def _plan(spark, name: str) -> str:
-    df = ALL_QUERIES[name].fn(spark, SF_DIR)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    return formatted_plan(ALL_QUERIES[name].fn(spark, SF_DIR))
 
 
 def _scans(plan: str) -> int:
@@ -241,15 +237,11 @@ def test_vocab_topn_is_take_ordered(spark):
     from datawarehouse_code_spark.sources.catalog import read_table
 
     docs = read_table(spark, "documents", SF_DIR)
-    plan = top_df_terms(docs, 3)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = formatted_plan(top_df_terms(docs, 3))
     assert "TakeOrderedAndProject" in plan
     assert not re.search(r"\(\d+\) Window", plan), plan[:2000]
 
-    plan = bm25_scores(docs, 3)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = formatted_plan(bm25_scores(docs, 3))
     assert "TakeOrderedAndProject" in plan
     assert not re.search(r"\(\d+\) Window", plan), plan[:2000]
 
@@ -283,7 +275,6 @@ def test_audit_plan_product_surface(spark):
     )
     # small-side cross joins may compile to BNLJ instead; force the
     # detector path by checking either signal
-    from datawarehouse_code_spark.plans.audit import formatted_plan
 
     plan = formatted_plan(bad)
     assert audit_plan(bad)["has_cartesian"] or "NestedLoop" in plan
@@ -300,7 +291,7 @@ def test_dim_delta_plan_scans_existing_once_with_one_observation(
         insert_if_not_exists_report,
     )
     from datawarehouse_code_spark.pipeline import build_warehouse
-    from datawarehouse_code_spark.plans.audit import audit_plan, formatted_plan
+    from datawarehouse_code_spark.plans.audit import audit_plan
 
     path = str(tmp_path / "dim_client")
     dim = build_warehouse(spark, SF_DIR).dim_client

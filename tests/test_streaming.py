@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import shutil
 
+from datawarehouse_code_spark.operators.multimodal import dhash_raster
 from datawarehouse_code_spark.plans.streaming_queries import (
     _events_session_window,
     _events_tumbling_10min,
@@ -1030,15 +1031,8 @@ def test_dhash_index_ingest_stream_equals_batch(spark, tmp_path):
     from datawarehouse_code_spark.streaming.jobs import run_dhash_index_ingest
 
     def raster(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     rows = [(i, "image/pgm", raster(i)) for i in range(9)]
     land = _media_landing(tmp_path, rows)
@@ -1087,15 +1081,8 @@ def test_video_fp_ingest_stream_equals_batch(spark, tmp_path):
     from datawarehouse_code_spark.streaming.jobs import run_video_fp_ingest
 
     def frame(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     base = [frame(s) for s in range(8)]
     rows = [
@@ -1185,15 +1172,8 @@ def test_index_ingest_redelivery_with_zero_rows_sheds_stale(
 
     # --- video fp index: id 5 re-delivered as a 1-frame video ---
     def frame(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     vland = tmp_path / "video_landing"
     vland.mkdir()
@@ -1236,15 +1216,9 @@ def test_dhash_gated_ingest_rejects_perceptual_copies(spark, tmp_path):
     from datawarehouse_code_spark.streaming.jobs import run_dhash_gated_ingest
 
     def raster(seed, shift=0):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128 + shift
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
+        return encode_gray_pgm(9, 8, pixels)
 
     # batch 0: ids 1, 2 (2 is a batch-internal copy of 1 -> rejected);
     # batch 1: 10 = brightness-shifted copy of 1 (cross-batch reject),
@@ -1322,15 +1296,8 @@ def test_audio_and_video_gated_ingest_reject_shifted_copies(spark, tmp_path):
         return [((seed * 37 + i * 211) % 4096) - 2048 for i in range(n)]
 
     def frame(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     schema = "media_id BIGINT, media_type STRING, content BINARY"
 
@@ -1470,15 +1437,9 @@ def test_multimodal_gated_ingest_mixed_feed(spark, tmp_path):
     )
 
     def raster(seed, shift=0):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128 + shift
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
+        return encode_gray_pgm(9, 8, pixels)
 
     def base_samples(seed, n=144):
         return [((seed * 37 + i * 211) % 4096) - 2048 for i in range(n)]
@@ -1628,15 +1589,8 @@ def test_multimodal_gate_phash_and_cross_modal_legs(spark, tmp_path):
         return np.repeat(np.repeat(a, 2, axis=0), 2, axis=1)
 
     def frame9x8(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     b = base32("mmgate-b")
     img_a = encode_gray_pgm(64, 64, up2(b).tobytes())      # the original
@@ -1765,15 +1719,8 @@ def test_phash_and_frame_index_ingest_stream_equals_batch(spark, tmp_path):
         return encode_gray_pgm(32, 32, raster.tobytes())
 
     def frame(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     schema = "media_id BIGINT, media_type STRING, content BINARY"
 
@@ -1858,15 +1805,8 @@ def test_multimodal_gate_same_batch_cross_modal(spark, tmp_path):
     )
 
     def frame9x8(seed):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     batch0 = [
         (1, "image/pgm", frame9x8(3), None),  # contained in video 2

@@ -8,7 +8,10 @@ import hashlib
 import pytest
 
 from datawarehouse_code_spark.operators.media_dedup import dhash_bits
-from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
+from datawarehouse_code_spark.operators.multimodal import (
+    dhash_raster,
+    encode_gray_pgm,
+)
 from datawarehouse_code_spark.operators.video_dedup import (
     build_video_fp_index,
     decode_video_frames,
@@ -23,15 +26,8 @@ from datawarehouse_code_spark.operators.video_dedup import (
 def _frame(seed: int) -> bytes:
     """9x8 PGM whose dHash bits are the deterministic row bytes
     ((seed*8 + r)*37 mod 256) — the media_dedup test construction."""
-    out = bytearray()
-    for r in range(8):
-        b = ((seed * 8 + r) * 37) % 256
-        v = 128
-        out.append(v)
-        for c in range(8):
-            v += 1 if (b >> c) & 1 else -1
-            out.append(v)
-    return encode_gray_pgm(9, 8, bytes(out))
+    row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+    return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
 
 def test_container_roundtrip_and_loud_failures():
@@ -199,17 +195,9 @@ def test_video_image_matches_closes_the_blind_spot(spark):
     def _frame_hamming(seed, flip_bits):
         # _frame with the low `flip_bits` bits of row 0 flipped:
         # hamming = flip_bits against the unmodified frame
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            if r == 0:
-                b ^= (1 << flip_bits) - 1
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        row_bytes[0] ^= (1 << flip_bits) - 1
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     images = spark.createDataFrame(
         [
@@ -282,17 +270,9 @@ def test_image_video_matches_reverse_direction(spark):
     )
 
     def _frame_hamming(seed, flip_bits):
-        out = bytearray()
-        for r in range(8):
-            b = ((seed * 8 + r) * 37) % 256
-            if r == 0:
-                b ^= (1 << flip_bits) - 1
-            v = 128
-            out.append(v)
-            for c in range(8):
-                v += 1 if (b >> c) & 1 else -1
-                out.append(v)
-        return encode_gray_pgm(9, 8, bytes(out))
+        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
+        row_bytes[0] ^= (1 << flip_bits) - 1
+        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     videos = spark.createDataFrame(
         [
