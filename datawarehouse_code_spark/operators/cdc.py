@@ -12,8 +12,8 @@ loop:
 
 Scale shape: a single shuffle on the key (the window partition);
 row_number short-circuits per key, no self-join against "current
-state", and the output feeds sources/acid.upsert (Delta MERGE when
-available) for the actual table write.
+state", and the output feeds sources/acid.replace_keyed (the keyed
+upsert, a staged parquet overwrite) for the actual table write.
 """
 
 from __future__ import annotations

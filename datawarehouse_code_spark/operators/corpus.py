@@ -1217,7 +1217,7 @@ def _forget_rows_from_table(
             empty = spark.createDataFrame([], pruned.drop(BUCKET_COL).schema)
             replace_keyed_bucketed(
                 spark, path, empty, [id_col], keys=ids, meta=meta,
-                _lease=lease,
+                lease=lease,
             )
             return removed
         table = spark.read.parquet(path)

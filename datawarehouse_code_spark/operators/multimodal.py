@@ -17,7 +17,7 @@ Doctrine for image/audio/video at 100 TB:
   encoder/decoder.  Codecs beyond these (progressive JPEG, Adam7
   PNG, audio/video) need libraries (Pillow / torchaudio / ffmpeg)
   NOT in this container; image payloads auto-route through Pillow
-  when it imports (availability-probed like the avro/Delta sources,
+  when it imports (availability-probed like the avro source,
   see _decode_pillow), and only when it does not do those branches
   raise NotImplementedError into the quarantine lane.
 
@@ -1045,8 +1045,8 @@ def encode_const_png(
 def _decode_pillow(data: bytes) -> tuple[int, int, int, bytes]:
     """Codec-library decode (Pillow) for the payloads the pure-Python
     decoders route to quarantine: progressive JPEG, Adam7-interlaced
-    PNG, non-8-bit depths.  Availability-probed like the avro/Delta
-    sources — this function is only reachable when `HAVE_PIL` is True
+    PNG, non-8-bit depths.  Availability-probed like the avro
+    source — this function is only reachable when `HAVE_PIL` is True
     (`pip install pillow` is the documented one-package upgrade; the
     container this repo is built in ships without it, so the Pillow
     path is pinned by skip-marked tests that activate when the

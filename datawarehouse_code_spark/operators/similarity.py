@@ -1416,7 +1416,7 @@ def extend_ivf_index(
     their stable checkpoint identity so a crash-restarted process
     reclaims its own stale lease instantly instead of waiting out
     the acquisition TTL (the same owner= convention every
-    upsert_auto caller uses)."""
+    replace_keyed_auto caller uses)."""
     spark = embeddings.sparkSession
     cents = spark.read.parquet(f"{path}/centroids")
     vecs = _with_inv_norm(

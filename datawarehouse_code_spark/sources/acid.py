@@ -1,38 +1,30 @@
-"""ACID table-format adapter: Delta MERGE when available, staged
-parquet overwrite as the fallback.
+"""Atomic table writes on plain parquet: staged overwrites under a
+writer lease.
 
 The reference's load pattern relies on MySQL transactions
-(warehouse.py:50,65) — its Spark-first equivalent is a table format
-with a transaction log.  This container ships no Delta/Iceberg jars,
-so every writer here degrades to plain parquet with the job-commit /
-staged-rename protocol (atomic per WRITER, not isolated from
-concurrent readers); the Delta branch is exercised wherever the jar
-exists (tests/test_acid.py skip-marks it on absence).
+(warehouse.py:50,65).  Here every writer is plain parquet with the
+job-commit / staged-rename protocol: atomic per WRITER, not isolated
+from concurrent readers.  A table format with a transaction log
+(Delta, Iceberg) would add snapshot isolation; this package does not
+use one.
 
-Single-writer-per-table is ENFORCED, not assumed (r16 continuation —
-brought in line with the bucketed lane after it got the same
-treatment): every parquet-lane mutator here runs its whole
-read-merge-write under the table's writer lease
+Single-writer-per-table is ENFORCED, not assumed: every mutator here
+runs its whole read-merge-write under the table's writer lease
 (``<table>._wlock``, defined below and shared with
 sources/bucketed.py), because two concurrent whole-table writers
 race on the same ``._staging``/``._old`` names — interleaved swap
 renames can mix or vanish the table — and two concurrent keyed
-upserts based on the same pre-image silently drop each other's rows
+replaces based on the same pre-image silently drop each other's rows
 (lost update).  The second writer gets ConcurrentWriterError instead.
-Delta's MERGE branch needs no lease: its transaction log brings
-optimistic concurrency.
+A mutator takes ``lease=``, the handle of a lease its caller already
+holds, or acquires one itself (``owner=`` is then its identity);
+_leased is the one place that choice is made.
 
-At 100 TB the difference is not academic: a keyed upsert as MERGE
-touches only the files holding matched keys (plus the log), while the
-parquet fallback rewrites the whole target.  The adapter keeps the
-CALLER's code identical across both: same function, same result
-table, different write amplification and isolation.
-
-For keyed tables maintained per micro-batch, sources/bucketed.py is
-the parquet-native middle ground: hash-bucket partitioning +
-partition-grain staged swaps make replace-keyed cost
-O(|touched buckets|) instead of O(corpus) without any table-format
-jar (the streaming index maintainers opt in via n_buckets=).
+A keyed replace here rewrites the whole target.  For keyed tables
+maintained per micro-batch, sources/bucketed.py is the parquet-native
+middle ground: hash-bucket partitioning + partition-grain staged
+swaps make replace-keyed cost O(|touched buckets|) instead of
+O(corpus) (the streaming index maintainers opt in via n_buckets=).
 """
 
 from __future__ import annotations
@@ -43,21 +35,6 @@ import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def delta_available(spark: SparkSession) -> bool:
-    """True when both the delta-spark Python package and the Delta jar
-    are importable/loadable in this session."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    try:
-        # jar probe: class resolution fails fast when the jar is absent
-        spark._jvm.java.lang.Class.forName("org.apache.spark.sql.delta.DeltaLog")
-    except Exception:
-        return False
-    return True
 
 
 def _fs_for(spark: SparkSession, path: str):
@@ -433,6 +410,20 @@ def writer_lease(
 
 
 @contextmanager
+def _leased(
+    spark: SparkSession, path: str, lease: _Lease | None, owner: str | None
+):
+    """Yield ``lease``, the handle a caller that already holds the
+    table's writer lease passed in (so its fence travels too), or hold
+    a fresh writer_lease(owner=) for the block."""
+    if lease is not None:
+        yield lease
+        return
+    with writer_lease(spark, path, owner=owner) as held:
+        yield held
+
+
+@contextmanager
 def leased_append(spark: SparkSession, path: str, owner: str | None = None):
     """Writer lease + crashed-swap repair for APPEND writers (r17
     self-review find, the 'append eclipse' family): an append into a
@@ -553,34 +544,21 @@ def _staged_overwrite(
     (compact_parquet, forget_documents — passing the HANDLE, so the
     fence travels too); ``owner=`` is the lease identity for
     crash-restart reclaim (see writer_lease)."""
-    if lease is None:
-        with writer_lease(spark, path, owner=owner) as held:
-            _staged_overwrite_locked(spark, df, path, partition_by, held)
-        return
-    _staged_overwrite_locked(spark, df, path, partition_by, lease)
-
-
-def _staged_overwrite_locked(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None,
-    lease: _Lease,
-) -> None:
-    recover_interrupted_swap(spark, path)
-    fs, p = _fs_for(spark, path)
-    staged = _sibling(spark, p, "._staging")
-    old = _sibling(spark, p, "._old")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staged.toString())
-    # fence between the long un-heartbeated staged write and the
-    # mutating swap: a holder stolen from mid-write must not race the
-    # thief's swap over the same ._staging name
-    lease.verify()
-    lease.heartbeat()
-    _finish_staged_swap(fs, p, staged, old)
+    with _leased(spark, path, lease, owner) as held:
+        recover_interrupted_swap(spark, path)
+        fs, p = _fs_for(spark, path)
+        staged = _sibling(spark, p, "._staging")
+        old = _sibling(spark, p, "._old")
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staged.toString())
+        # fence between the long un-heartbeated staged write and the
+        # mutating swap: a holder stolen from mid-write must not race
+        # the thief's swap over the same ._staging name
+        held.verify()
+        held.heartbeat()
+        _finish_staged_swap(fs, p, staged, old)
 
 
 def _finish_staged_swap(fs, p, staged, old) -> None:
@@ -599,67 +577,6 @@ def _finish_staged_swap(fs, p, staged, old) -> None:
         fs.delete(old, True)
 
 
-def upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key: list[str],
-    owner: str | None = None,
-    _lease: _Lease | None = None,
-) -> str:
-    """Keyed upsert (updates win): Delta = one MERGE (matched →
-    update all, not matched → insert all); parquet = anti-join the
-    target against the update keys, union, staged overwrite.  Returns
-    which path ran ('delta' | 'parquet').
-
-    The parquet fallback reads the target BEFORE the staged write;
-    the swap renames the old table aside before renaming the new one
-    in (see _staged_overwrite), so a crash never destroys data — at
-    worst the path is briefly absent with both copies recoverable on
-    disk.  Concurrent readers can still see the swap mid-listing;
-    Delta's log gives snapshot isolation.
-
-    The whole read-merge-write runs under the writer lease: a second
-    concurrent upserter would base its merge on the same pre-image
-    and silently drop the first one's rows (lost update), so it is
-    refused loudly instead.  Delta's MERGE brings its own optimistic
-    transaction log and needs no lease.  ``_lease=`` is the held-
-    handle escape for the auto helpers, which probe-and-route under
-    the lease (a handle passed to the Delta branch is simply unused)."""
-    if delta_available(spark):
-        from delta.tables import DeltaTable
-
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in key)
-        (
-            DeltaTable.forPath(spark, target_path)
-            .alias("t")
-            .merge(updates.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return "delta"
-    if _lease is not None:
-        _upsert_parquet_locked(spark, target_path, updates, key, _lease)
-        return "parquet"
-    with writer_lease(spark, target_path, owner=owner) as lease:
-        _upsert_parquet_locked(spark, target_path, updates, key, lease)
-    return "parquet"
-
-
-def _upsert_parquet_locked(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key: list[str],
-    lease: _Lease,
-) -> None:
-    recover_interrupted_swap(spark, target_path)
-    current = spark.read.parquet(target_path)
-    merged = current.join(updates, key, "left_anti").unionByName(updates)
-    _staged_overwrite(spark, merged, target_path, lease=lease)
-
-
 def replace_keyed(
     spark: SparkSession,
     target_path: str,
@@ -667,16 +584,22 @@ def replace_keyed(
     key: list[str],
     keys: DataFrame | None = None,
     owner: str | None = None,
-    _lease: _Lease | None = None,
-) -> str:
-    """Keyed REPLACE for one-to-many payloads: every target row whose
-    `key` value appears in `keys` (default: the update rows' own key
-    set) is dropped, then the update rows are inserted.  This is the
-    upsert variant for grains like a document's chunk rows — a
-    re-delivered document that now produces FEWER rows leaves no stale
-    residue, which a row-keyed upsert (matched-update /
-    not-matched-insert) cannot guarantee.  Returns which path ran
-    ('delta' | 'parquet').
+    lease: _Lease | None = None,
+) -> None:
+    """Keyed REPLACE: every target row whose `key` value appears in
+    `keys` (default: the update rows' own key set) is dropped, then
+    the update rows are inserted — one anti-join on `key` + union +
+    staged overwrite.
+
+    With ``keys=None`` this is the keyed upsert (updates win): a key
+    present in the updates keeps only its update rows, every other
+    target row is carried over, and new keys are inserted.  Null keys
+    never match, so null-keyed target rows are carried and null-keyed
+    update rows inserted.  For one-to-many grains like a document's
+    chunk rows it is also the stale-row-closing replace — a
+    re-delivered document that now produces FEWER rows leaves no
+    residue, which a row-keyed matched-update / not-matched-insert
+    cannot guarantee.
 
     `keys` exists because "fewer rows" includes ZERO: a caller that
     filters the update rows (min-word chunks, media too short to
@@ -686,72 +609,23 @@ def replace_keyed(
     Such callers must pass the batch's full key set (e.g.
     `batch.select("doc_id")`); it is distinct-ed here.
 
-    Parquet: one anti-join on `key` + union + staged overwrite —
-    atomic via the swap, crash-safe like upsert.  Delta: a
-    MERGE-delete of the matched keys followed by an append — TWO
-    commits, so a crash between them can briefly lose the replaced
-    rows; callers must be replay-idempotent (every streaming caller
-    here re-derives the identical rows from the same batch on
-    replay, so the re-run completes the pair).
+    The target is read BEFORE the staged write; the swap renames the
+    old table aside before renaming the new one in (see
+    _staged_overwrite), so a crash never destroys data — at worst the
+    path is briefly absent with both copies recoverable on disk.
+    Concurrent readers can still see the swap mid-listing.
 
-    The Delta branch engages only when the TARGET actually is a
-    Delta table — the streaming index maintainers bootstrap their
-    tables as plain parquet (_staged_overwrite), and running MERGE
-    against a parquet directory just because the jar is on the
-    classpath would fail at the log lookup."""
+    The whole read-merge-write runs under the writer lease: a second
+    concurrent replacer would base its merge on the same pre-image and
+    silently drop the first one's rows (lost update), so it is refused
+    loudly instead.  ``lease=`` is the held-handle escape for the auto
+    helpers, which probe-and-route under the lease."""
     del_keys = (keys if keys is not None else updates).select(*key).distinct()
-    if delta_available(spark):
-        from delta.tables import DeltaTable
-
-        if not DeltaTable.isDeltaTable(spark, target_path):
-            if _lease is not None:
-                _replace_parquet_locked(
-                    spark, target_path, updates, del_keys, key, _lease
-                )
-                return "parquet"
-            with writer_lease(spark, target_path, owner=owner) as lease:
-                _replace_parquet_locked(
-                    spark, target_path, updates, del_keys, key, lease
-                )
-            return "parquet"
-
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in key)
-        (
-            DeltaTable.forPath(spark, target_path)
-            .alias("t")
-            .merge(del_keys.alias("s"), cond)
-            .whenMatchedDelete()
-            .execute()
-        )
-        updates.write.format("delta").mode("append").save(target_path)
-        return "delta"
-    # read-merge-write under the writer lease, like upsert: a second
-    # concurrent replacer basing its merge on the same pre-image would
-    # silently drop this one's rows (lost update)
-    if _lease is not None:
-        _replace_parquet_locked(
-            spark, target_path, updates, del_keys, key, _lease
-        )
-        return "parquet"
-    with writer_lease(spark, target_path, owner=owner) as lease:
-        _replace_parquet_locked(
-            spark, target_path, updates, del_keys, key, lease
-        )
-    return "parquet"
-
-
-def _replace_parquet_locked(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    del_keys: DataFrame,
-    key: list[str],
-    lease: _Lease,
-) -> None:
-    recover_interrupted_swap(spark, target_path)
-    current = spark.read.parquet(target_path)
-    merged = current.join(del_keys, key, "left_anti").unionByName(updates)
-    _staged_overwrite(spark, merged, target_path, lease=lease)
+    with _leased(spark, target_path, lease, owner) as held:
+        recover_interrupted_swap(spark, target_path)
+        current = spark.read.parquet(target_path)
+        merged = current.join(del_keys, key, "left_anti").unionByName(updates)
+        _staged_overwrite(spark, merged, target_path, lease=held)
 
 
 def scd2_apply(
@@ -761,52 +635,15 @@ def scd2_apply(
     key: list[str],
     tracked: list[str],
     load_date: str,
-) -> str:
+) -> None:
     """Apply an SCD2 snapshot merge (operators/scd.py scd2_merge) to a
-    stored dimension.  Returns which path ran ('delta' | 'parquet').
-
-    Delta: the close+open rewrite is expressed as a MERGE with a
-    2-branch source (each changed key contributes a 'close' row that
-    matches the open target row, and an 'open' row that matches
-    nothing), so only files containing changed keys rewrite.  Parquet:
-    compute the full merged dimension (one join — see scd2_merge) and
-    staged-overwrite the target.
-    """
+    stored dimension: compute the full merged dimension (one join —
+    see scd2_merge) and staged-overwrite the target under its writer
+    lease."""
     from datawarehouse_code_spark.operators.scd import scd2_merge
 
-    if delta_available(spark):
-        from delta.tables import DeltaTable
-        from pyspark.sql import functions as F
-
-        dim = spark.read.format("delta").load(target_path)
-        merged = scd2_merge(dim, snapshot, key, tracked, load_date)
-        # Only the changed rows feed the MERGE (carried rows would
-        # "update" to identical values — pure write amplification):
-        # closed rows carry valid_to = load_date, opened rows carry
-        # valid_from = load_date, and nothing else does.
-        ld = F.to_date(F.lit(load_date))
-        changes = merged.filter(
-            F.col("valid_to").eqNullSafe(ld) | (F.col("valid_from") == ld)
-        )
-        # (key, valid_from) identifies a version row: a closed row
-        # matches its stored open version (update-all flips
-        # valid_to/is_current); an opened row matches nothing (insert).
-        # Re-running the same load_date matches the opened rows to
-        # their already-inserted versions and updates them to identical
-        # values — idempotent.
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in [*key, "valid_from"])
-        (
-            DeltaTable.forPath(spark, target_path)
-            .alias("t")
-            .merge(changes.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return "delta"
     with writer_lease(spark, target_path) as lease:
         recover_interrupted_swap(spark, target_path)
         dim = spark.read.parquet(target_path)
         merged = scd2_merge(dim, snapshot, key, tracked, load_date)
         _staged_overwrite(spark, merged, target_path, lease=lease)
-    return "parquet"

@@ -129,8 +129,8 @@ def read_events_stream(
     # read of a nanos column in the same session silently yields
     # bigint instead of failing loudly; the batch reader contains the
     # blast radius by verifying every read against SCHEMAS.
-    # restore_nanos_conf (called by run_to_memory on termination) puts
-    # the prior value back.
+    # restore_nanos_conf (called by run_to_memory and _drain on
+    # termination) puts the prior value back.
     _PRIOR_NANOS_CONF.setdefault(id(spark), spark.conf.get(_NANOS_CONF, None))
     spark.conf.set(_NANOS_CONF, "true")
     reader = spark.readStream.schema(_RAW_EVENTS_NANOS)
@@ -152,6 +152,24 @@ def restore_nanos_conf(spark: SparkSession) -> None:
         spark.conf.unset(_NANOS_CONF)
     else:
         spark.conf.set(_NANOS_CONF, prior)
+
+
+def _drain(stream: DataFrame, apply, checkpoint_dir: str | None) -> None:
+    """Run `apply(batch, batch_id)` on every micro-batch of `stream`
+    with the availableNow trigger, checkpointed at `checkpoint_dir`
+    when one is given, and block until the drain finishes.  Restores
+    the nanos conf like run_to_memory, once no stream is active on
+    the session (a no-op unless read_events_stream set it)."""
+    spark = stream.sparkSession
+    writer = stream.writeStream.foreachBatch(apply).trigger(availableNow=True)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    q = writer.start()
+    try:
+        q.awaitTermination()
+    finally:
+        if not spark.streams.active:
+            restore_nanos_conf(spark)
 
 
 def tumbling_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -266,19 +284,18 @@ def run_upsert_to_table(
     n_buckets: int | None = None,
 ) -> None:
     """Drain the stream into a keyed table via foreachBatch +
-    sources/acid.upsert — the production sink shape for CDC-style
-    streams: each micro-batch collapses to its latest row per key
-    (row_number over `seq_col` desc), then lands as one keyed upsert
-    (Delta MERGE when the jar exists, staged parquet overwrite here).
-    The first batch creates the table.
+    sources/bucketed.replace_keyed_auto — the production sink shape
+    for CDC-style streams: each micro-batch collapses to its latest
+    row per key (row_number over `seq_col` desc), then lands as one
+    keyed upsert (a keyed replace on the batch's own keys, staged
+    parquet overwrite).  The first batch creates the table.
 
     `n_buckets` opts a NEWLY-created table into the bucket-
     partitioned layout (sources/bucketed.py): each micro-batch then
     rewrites only the hash buckets containing its keys instead of the
     whole table — O(|touched buckets|) write amplification, the
-    parquet-native answer to Delta MERGE for a CDC sink whose table
-    dwarfs its batches.  The collapsed batch has exactly one row per
-    key, so the bucketed keyed-replace IS the upsert (upsert_auto).
+    parquet-native answer to a table format's MERGE for a CDC sink
+    whose table dwarfs its batches.
     An existing table keeps its own layout either way; readers go
     through read_bucketed / read_keyed_table (the layout column must
     not leak).
@@ -297,9 +314,7 @@ def run_upsert_to_table(
     batch's rows.  Blocks until the availableNow drain finishes;
     restores the nanos conf like run_to_memory.
     """
-    from datawarehouse_code_spark.sources.bucketed import upsert_auto
-
-    spark = events.sparkSession
+    from datawarehouse_code_spark.sources.bucketed import replace_keyed_auto
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
         w = Window.partitionBy(*key).orderBy(F.col(seq_col).desc())
@@ -314,21 +329,13 @@ def run_upsert_to_table(
         # then treat as an existing table and merge into — silently
         # losing this batch's unlanded rows.  The staged rename makes
         # table existence equivalent to table completeness.
-        upsert_auto(
+        replace_keyed_auto(
             batch.sparkSession, target_path, latest, key,
             n_buckets=n_buckets,
             owner=checkpoint_dir,
         )
 
-    writer = events.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.awaitTermination()
-    finally:
-        if not spark.streams.active:
-            restore_nanos_conf(spark)
+    _drain(events, _apply, checkpoint_dir)
 
 
 def run_corpus_ingest(
@@ -366,7 +373,7 @@ def run_corpus_ingest(
     window over the batch's hashes (batch-sized, not corpus-sized),
     one equi-join against the table's (content_hash, doc_id)
     projection — column-pruned scan, no corpus-wide shuffle — and one
-    keyed upsert (Delta MERGE when available; staged parquet here).
+    keyed upsert (a staged parquet keyed replace).
 
     `n_buckets` opts a NEWLY-created corpus table into the bucket-
     partitioned layout (sources/bucketed.py): the upsert rewrites
@@ -387,7 +394,7 @@ def run_corpus_ingest(
     from datawarehouse_code_spark.sources.acid import table_exists
     from datawarehouse_code_spark.sources.bucketed import (
         read_keyed_table,
-        upsert_auto,
+        replace_keyed_auto,
     )
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
@@ -419,7 +426,7 @@ def run_corpus_ingest(
                 )
                 .drop("_existing_id")
             )
-            upsert_auto(
+            replace_keyed_auto(
                 sp, target_path, survivors, ["doc_id"],
                 n_buckets=n_buckets,
                 owner=checkpoint_dir,
@@ -427,15 +434,12 @@ def run_corpus_ingest(
         else:
             # staged create (plain or bucketed per n_buckets), same
             # reasoning as run_upsert_to_table
-            upsert_auto(
+            replace_keyed_auto(
                 sp, target_path, first, ["doc_id"], n_buckets=n_buckets,
                 owner=checkpoint_dir,
             )
 
-    writer = docs.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(docs, _apply, checkpoint_dir)
 
 
 def run_cdc_index_ingest(
@@ -500,10 +504,7 @@ def run_cdc_index_ingest(
             owner=checkpoint_dir,
         )
 
-    writer = docs.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(docs, _apply, checkpoint_dir)
 
 
 def _pair_share_rejects(
@@ -688,7 +689,6 @@ def run_cdc_gated_ingest(
     )
     from datawarehouse_code_spark.sources.bucketed import (
         replace_keyed_auto,
-        upsert_auto,
     )
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
@@ -700,7 +700,7 @@ def run_cdc_gated_ingest(
             sp, chunks, index_path, min_shared, hot_chunk_cap
         )
         survivors = batch.join(rejected, "doc_id", "left_anti")
-        upsert_auto(
+        replace_keyed_auto(
             sp, target_path, survivors, ["doc_id"], n_buckets=n_buckets,
             owner=checkpoint_dir,
         )
@@ -719,10 +719,7 @@ def run_cdc_gated_ingest(
             owner=checkpoint_dir,
         )
 
-    writer = docs.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(docs, _apply, checkpoint_dir)
 
 
 def run_to_memory(
@@ -837,20 +834,10 @@ def run_rollup_maintenance(
     checkpoint dir the stream resumes where it stopped AND a replayed
     batch cannot double-count — together, end-to-end exactly-once
     aggregate maintenance over plain parquet."""
-    spark = facts.sparkSession
-
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_rollup_batch(batch, batch_id, rollup_path, keys, sum_cols)
 
-    writer = facts.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.awaitTermination()
-    finally:
-        if not spark.streams.active:
-            restore_nanos_conf(spark)
+    _drain(facts, _apply, checkpoint_dir)
 
 
 def run_ivf_ingest(
@@ -1004,10 +991,7 @@ def run_ivf_ingest(
         finally:
             new.unpersist()
 
-    writer = embeddings.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(embeddings, _apply, checkpoint_dir)
 
 
 # Sketch-family registry for streaming maintenance: kind -> (partial
@@ -1089,20 +1073,10 @@ def run_sketch_maintenance(
     apply_sketch_batch (replay-idempotent).  Read the result with
     read_rollup + the family's estimator (distinct_estimate /
     theta_estimate / quantile_estimate)."""
-    spark = rows.sparkSession
-
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_sketch_batch(batch, batch_id, rollup_path, keys, value_col, kind)
 
-    writer = rows.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.awaitTermination()
-    finally:
-        if not spark.streams.active:
-            restore_nanos_conf(spark)
+    _drain(rows, _apply, checkpoint_dir)
 
 
 def _run_media_index_ingest(
@@ -1154,10 +1128,7 @@ def _run_media_index_ingest(
             owner=checkpoint_dir,
         )
 
-    writer = media.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(media, _apply, checkpoint_dir)
 
 
 def run_dhash_index_ingest(
@@ -1317,7 +1288,6 @@ def run_dhash_gated_ingest(
     )
     from datawarehouse_code_spark.sources.bucketed import (
         replace_keyed_auto,
-        upsert_auto,
     )
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
@@ -1330,7 +1300,7 @@ def run_dhash_gated_ingest(
             sp, hashes, index_path, max_hamming, band_cap, grid
         )
         survivors = batch.join(rejected, "media_id", "left_anti")
-        upsert_auto(
+        replace_keyed_auto(
             sp, target_path, survivors, ["media_id"], n_buckets=n_buckets,
             owner=checkpoint_dir,
         )
@@ -1349,10 +1319,7 @@ def run_dhash_gated_ingest(
             owner=checkpoint_dir,
         )
 
-    writer = media.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(media, _apply, checkpoint_dir)
 
 
 def _run_fp_gated_ingest(
@@ -1379,7 +1346,6 @@ def _run_fp_gated_ingest(
     existing tables keep their own layout either way (stickiness)."""
     from datawarehouse_code_spark.sources.bucketed import (
         replace_keyed_auto,
-        upsert_auto,
     )
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
@@ -1387,7 +1353,7 @@ def _run_fp_gated_ingest(
         fps = cut_lineage(fps_fn(batch))
         rejected = _fp_gate_rejects(sp, fps, index_path, min_shared, hot_cap)
         survivors = batch.join(rejected, "media_id", "left_anti")
-        upsert_auto(
+        replace_keyed_auto(
             sp, target_path, survivors, ["media_id"], n_buckets=n_buckets,
             owner=checkpoint_dir,
         )
@@ -1400,10 +1366,7 @@ def _run_fp_gated_ingest(
             owner=checkpoint_dir,
         )
 
-    writer = media.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(media, _apply, checkpoint_dir)
 
 
 def run_audio_gated_ingest(
@@ -1570,7 +1533,6 @@ def run_multimodal_gated_ingest(
     from datawarehouse_code_spark.sources.bucketed import (
         read_keyed_table,
         replace_keyed_auto,
-        upsert_auto,
     )
 
     # the combined fingerprint map's band schema pins grid=8 (the
@@ -1853,7 +1815,7 @@ def run_multimodal_gated_ingest(
             quarantined.select("media_id")
         ).distinct()
         survivors = batch.join(dropped, "media_id", "left_anti")
-        upsert_auto(
+        replace_keyed_auto(
             sp, target_path, survivors, ["media_id"], n_buckets=n_buckets,
             owner=checkpoint_dir,
         )
@@ -1899,7 +1861,4 @@ def run_multimodal_gated_ingest(
             owner=checkpoint_dir,
         )
 
-    writer = feed.writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    _drain(feed, _apply, checkpoint_dir)

@@ -1,6 +1,6 @@
-"""ACID adapter (sources/acid.py): the parquet fallback paths run
-everywhere; the Delta branches are skip-marked on jar absence (this
-container ships no Delta jar) and run wherever one exists.
+"""Atomic parquet writes (sources/acid.py): keyed replace (and its
+``keys=None`` keyed-upsert form), SCD2 apply, staged-swap crash
+recovery and the whole-table lane's writer lease.
 """
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.scd import scd2_init
-from datawarehouse_code_spark.sources.acid import delta_available, scd2_apply, upsert
+from datawarehouse_code_spark.sources.acid import replace_keyed, scd2_apply
 
 
 def _base(spark):
@@ -20,17 +20,12 @@ def _base(spark):
 
 
 def test_upsert_parquet_fallback(spark, tmp_path):
-    # skip BEFORE calling: on a Delta-enabled session upsert() would
-    # take the Delta branch against a plain parquet dir and error
-    if delta_available(spark):
-        pytest.skip("Delta present; fallback branch not taken")
     path = str(tmp_path / "t")
     _base(spark).write.parquet(path)
     updates = spark.createDataFrame(
         [(2, "b", 25.0), (4, "d", 40.0)], "id BIGINT, name STRING, bal DOUBLE"
     )
-    ran = upsert(spark, path, updates, ["id"])
-    assert ran == "parquet"
+    replace_keyed(spark, path, updates, ["id"])
     got = {
         (r.id, r.name, r.bal) for r in spark.read.parquet(path).collect()
     }
@@ -40,16 +35,13 @@ def test_upsert_parquet_fallback(spark, tmp_path):
 
 
 def test_scd2_apply_parquet_fallback(spark, tmp_path):
-    if delta_available(spark):
-        pytest.skip("Delta present; fallback branch not taken")
     path = str(tmp_path / "dim")
     scd2_init(_base(spark), "2023-01-01").write.parquet(path)
     snap = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 99.0), (4, "d", 40.0)],
         "id BIGINT, name STRING, bal DOUBLE",
     )
-    ran = scd2_apply(spark, path, snap, ["id"], ["name", "bal"], "2024-06-01")
-    assert ran == "parquet"
+    scd2_apply(spark, path, snap, ["id"], ["name", "bal"], "2024-06-01")
     dim = spark.read.parquet(path)
     cur = {(r.id, r.bal) for r in dim.filter("is_current").collect()}
     # unchanged 1 + 3 carried, 2 reopened at 99, 4 opened
@@ -58,22 +50,6 @@ def test_scd2_apply_parquet_fallback(spark, tmp_path):
     assert [(r.id, r.bal, str(r.valid_to)) for r in closed] == [
         (2, 20.0, "2024-06-01")
     ]
-
-
-def test_upsert_delta_merge(spark, tmp_path):
-    if not delta_available(spark):
-        pytest.skip("Delta jar/package not available in this container")
-    path = str(tmp_path / "dt")
-    _base(spark).write.format("delta").save(path)
-    updates = spark.createDataFrame(
-        [(2, "b", 25.0), (4, "d", 40.0)], "id BIGINT, name STRING, bal DOUBLE"
-    )
-    assert upsert(spark, path, updates, ["id"]) == "delta"
-    got = {
-        (r.id, r.bal)
-        for r in spark.read.format("delta").load(path).collect()
-    }
-    assert got == {(1, 10.0), (2, 25.0), (3, 30.0), (4, 40.0)}
 
 
 # --- staged-swap crash recovery (recover_interrupted_swap) ----------
@@ -154,8 +130,6 @@ def test_table_exists_reads_midswap_as_exists(spark, tmp_path):
     """The probe repairs the crash state first, so an upsert after a
     mid-swap crash MERGES with the recovered table instead of
     re-creating it from one batch (the data-loss scenario)."""
-    if delta_available(spark):
-        pytest.skip("Delta present; fallback branch not taken")
     target = tmp_path / "t"
     _base(spark).write.parquet(str(target))
     # complete staged copy of the same table, then the first rename
@@ -164,40 +138,36 @@ def test_table_exists_reads_midswap_as_exists(spark, tmp_path):
 
     assert table_exists(spark, str(target))  # recovered, not 'absent'
     updates = spark.createDataFrame([(4, "d", 40.0)], "id BIGINT, name STRING, bal DOUBLE")
-    assert upsert(spark, str(target), updates, ["id"]) == "parquet"
+    replace_keyed(spark, str(target), updates, ["id"])
     assert _ids(spark, target) == {1, 2, 3, 4}  # nothing lost
 
 
 def test_upsert_with_file_uri_target(spark, tmp_path):
     """The Hadoop-FS swap works against a `file:` URI, which the old
     pathlib/os.path implementation could not handle."""
-    if delta_available(spark):
-        pytest.skip("Delta present; fallback branch not taken")
     uri = f"file:{tmp_path}/t"
     _base(spark).write.parquet(uri)
     updates = spark.createDataFrame(
         [(2, "b", 25.0), (4, "d", 40.0)], "id BIGINT, name STRING, bal DOUBLE"
     )
     assert table_exists(spark, uri)
-    assert upsert(spark, uri, updates, ["id"]) == "parquet"
+    replace_keyed(spark, uri, updates, ["id"])
     got = {(r.id, r.bal) for r in spark.read.parquet(uri).collect()}
     assert got == {(1, 10.0), (2, 25.0), (3, 30.0), (4, 40.0)}
     assert not (tmp_path / "t._staging").exists()
     assert not (tmp_path / "t._old").exists()
 
 
-# --- Delta-MERGE equivalence (jar absent in this container) ---------
+# --- keyed upsert vs an independent simulated MERGE -----------------
 #
-# The Delta branch of upsert() cannot execute here, so its SEMANTICS
-# are pinned instead: the same multi-round upsert sequence replays
-# through (a) the shipped anti-join fallback and (b) an independent
-# file-level simulated MERGE that mimics what Delta's
-# whenMatchedUpdateAll/whenNotMatchedInsertAll does physically —
+# The same multi-round upsert sequence replays through (a) the shipped
+# anti-join keyed replace (replace_keyed with keys=None) and (b) an
+# independent file-level simulated MERGE that does physically what a
+# table format's whenMatchedUpdateAll/whenNotMatchedInsertAll does —
 # rewrite ONLY the files containing matched keys, append one file for
-# the inserts.  Byte-identical tables after every round means the two
-# code paths of upsert() implement the same operation, so a
-# production user flipping from the fallback to Delta sees no
-# behavior change.
+# the inserts.  Identical tables after every round pin the parquet
+# lane's upsert semantics against a reference that shares no code
+# with it.
 
 
 def _simulated_file_merge(table_dir: Path, updates: "list[tuple]", cols):
@@ -230,11 +200,9 @@ def _simulated_file_merge(table_dir: Path, updates: "list[tuple]", cols):
 
 def test_upsert_fallback_equals_simulated_merge(spark, tmp_path):
     """Three rounds of overlapping upserts: after each, the anti-join
-    fallback table equals the file-level simulated MERGE table."""
+    keyed-replace table equals the file-level simulated MERGE table."""
     import pandas as pd
 
-    if delta_available(spark):
-        pytest.skip("Delta present; fallback branch not taken")
     cols = ["id", "name", "bal"]
     seed = [(i, chr(97 + i % 26), float(i) * 10) for i in range(1, 41)]
     seed_df = spark.createDataFrame(seed, "id BIGINT, name STRING, bal DOUBLE")
@@ -257,7 +225,7 @@ def test_upsert_fallback_equals_simulated_merge(spark, tmp_path):
     ]
     for ups in rounds:
         upd_df = spark.createDataFrame(ups, "id BIGINT, name STRING, bal DOUBLE")
-        assert upsert(spark, a, upd_df, ["id"]) == "parquet"
+        replace_keyed(spark, a, upd_df, ["id"])
         _simulated_file_merge(b, ups, cols)
 
         got_a = {tuple(r) for r in spark.read.parquet(a).collect()}
@@ -272,19 +240,18 @@ def test_upsert_fallback_equals_simulated_merge(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# scd2_apply's Delta branch is the one MERGE shape the upsert replay
-# above does not cover: a 2-branch source (close-rows match their open
-# target version, open-rows match nothing) merged on (key, valid_from).
-# Same doctrine: replay a multi-round SCD2 load through (a) the shipped
-# parquet fallback (full scd2_merge + staged overwrite) and (b) an
-# independent file-level simulated MERGE that does physically what
-# Delta's whenMatchedUpdateAll/whenNotMatchedInsertAll would — rewrite
-# only files containing matched (key, valid_from) rows, append one file
-# for the inserts — with the change set computed EXACTLY as the Delta
-# branch computes it (sources/acid.py scd2_apply: merged filtered to
-# valid_to == load_date OR valid_from == load_date).  Equality after
-# every round pins fallback ≡ MERGE; a same-date replay pins the
-# documented idempotence claim.
+# The SCD2 load as a MERGE is the one shape the upsert replay above
+# does not cover: a 2-branch source (close-rows match their open target
+# version, open-rows match nothing) merged on (key, valid_from).  Same
+# doctrine: replay a multi-round SCD2 load through (a) the shipped
+# scd2_apply (full scd2_merge + staged overwrite) and (b) an
+# independent file-level simulated MERGE that does physically what a
+# table format's whenMatchedUpdateAll/whenNotMatchedInsertAll would —
+# rewrite only files containing matched (key, valid_from) rows, append
+# one file for the inserts — fed only the change rows (merged filtered
+# to valid_to == load_date OR valid_from == load_date).  Equality after
+# every round pins scd2_apply ≡ MERGE; a same-date replay pins the
+# idempotence claim.
 
 
 def _scd2_arrow_schema():
@@ -332,13 +299,10 @@ def _simulated_scd2_file_merge(table_dir: Path, changes: "list[dict]", cols):
 
 def test_scd2_apply_fallback_equals_simulated_merge(spark, tmp_path):
     """Three SCD2 loads (changes + new keys + an unchanged majority),
-    then a same-date replay: after every step the parquet-fallback
-    table equals the file-level simulated 2-branch MERGE table."""
+    then a same-date replay: after every step the scd2_apply table
+    equals the file-level simulated 2-branch MERGE table."""
     from datawarehouse_code_spark.operators.scd import scd2_init, scd2_merge
     from datawarehouse_code_spark.sources.acid import scd2_apply
-
-    if delta_available(spark):
-        pytest.skip("Delta present; fallback branch not taken")
 
     def snap_df(rows):
         return spark.createDataFrame(rows, "id BIGINT, city STRING, tier STRING")
@@ -379,11 +343,9 @@ def test_scd2_apply_fallback_equals_simulated_merge(spark, tmp_path):
     ]
     for load_date, rows in rounds:
         snapshot = snap_df(rows)
-        assert scd2_apply(
-            spark, a, snapshot, ["id"], ["city", "tier"], load_date
-        ) == "parquet"
+        scd2_apply(spark, a, snapshot, ["id"], ["city", "tier"], load_date)
 
-        # the change set, computed exactly as the Delta branch does
+        # the change set: only the closed and the opened versions
         sim_dim = spark.read.parquet(str(b))
         merged = scd2_merge(sim_dim, snapshot, ["id"], ["city", "tier"], load_date)
         ld = F.to_date(F.lit(load_date))
@@ -412,8 +374,6 @@ def test_replace_keyed_drops_stale_one_to_many_rows(spark, tmp_path):
     leaves no residue from its earlier delivery (the stale-chunk-index
     hazard a (doc_id, chunk_idx)-keyed upsert cannot close), while
     untouched keys keep every row."""
-    from datawarehouse_code_spark.sources.acid import replace_keyed
-
     path = str(tmp_path / "idx")
     spark.createDataFrame(
         [(1, 0, "a"), (1, 1, "b"), (1, 2, "c"), (2, 0, "x"), (2, 1, "y")],
@@ -423,7 +383,7 @@ def test_replace_keyed_drops_stale_one_to_many_rows(spark, tmp_path):
     updates = spark.createDataFrame(
         [(1, 0, "a2")], ["doc_id", "chunk_idx", "chunk_hash"]
     )
-    assert replace_keyed(spark, path, updates, ["doc_id"]) == "parquet"
+    replace_keyed(spark, path, updates, ["doc_id"])
     got = {
         (r["doc_id"], r["chunk_idx"], r["chunk_hash"])
         for r in spark.read.parquet(path).collect()
@@ -443,8 +403,6 @@ def test_replace_keyed_explicit_keys_covers_zero_update_rows(
     min-word chunking or too-short-to-fingerprint media, pass the
     batch's unfiltered id set so a re-delivery that filters down to
     nothing still cleans up)."""
-    from datawarehouse_code_spark.sources.acid import replace_keyed
-
     path = str(tmp_path / "idx")
     spark.createDataFrame(
         [(1, 0, "a"), (1, 1, "b"), (2, 0, "x"), (3, 0, "p"), (3, 1, "q")],
@@ -457,10 +415,7 @@ def test_replace_keyed_explicit_keys_covers_zero_update_rows(
         [(1, 0, "a2")], ["doc_id", "chunk_idx", "chunk_hash"]
     )
     batch_keys = spark.createDataFrame([(1,), (2,)], ["doc_id"])
-    assert (
-        replace_keyed(spark, path, updates, ["doc_id"], keys=batch_keys)
-        == "parquet"
-    )
+    replace_keyed(spark, path, updates, ["doc_id"], keys=batch_keys)
     got = {
         (r["doc_id"], r["chunk_idx"], r["chunk_hash"])
         for r in spark.read.parquet(path).collect()
@@ -475,7 +430,7 @@ def test_replace_keyed_explicit_keys_covers_zero_update_rows(
 def test_whole_table_lane_enforces_single_writer(spark, tmp_path):
     """r16 continuation: the whole-table swap lane enforces the
     single-writer contract like the bucketed lane — two concurrent
-    _staged_overwrite/upsert/replace_keyed writers would race on the
+    _staged_overwrite/replace_keyed writers would race on the
     same ._staging/._old names and can interleave the swap renames
     into a mixed or vanished table, so the second raises
     ConcurrentWriterError while a foreign lease is fresh (and a
@@ -484,14 +439,8 @@ def test_whole_table_lane_enforces_single_writer(spark, tmp_path):
     import os
     import time
 
-    from datawarehouse_code_spark.sources.acid import (
-        ConcurrentWriterError,
-        replace_keyed,
-        upsert,
-    )
+    from datawarehouse_code_spark.sources.acid import ConcurrentWriterError
 
-    if delta_available(spark):
-        pytest.skip("parquet-lane lease semantics")
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
     df.write.parquet(path)
@@ -500,15 +449,15 @@ def test_whole_table_lane_enforces_single_writer(spark, tmp_path):
     lease = tmp_path / "t._wlock"
     lease.write_text(json.dumps({"owner": "other-writer", "nonce": "x"}))
     with pytest.raises(ConcurrentWriterError, match="live writer lease"):
-        upsert(spark, path, upd, ["id"])
-    with pytest.raises(ConcurrentWriterError, match="live writer lease"):
         replace_keyed(spark, path, upd, ["id"])
+    with pytest.raises(ConcurrentWriterError, match="live writer lease"):
+        replace_keyed(spark, path, upd, ["id"], keys=upd.select("id"))
     assert spark.read.parquet(path).count() == 2  # untouched
 
     # a crashed writer's stale lease is stolen and the write proceeds
     old = time.time() - 2000
     os.utime(lease, (old, old))
-    assert upsert(spark, path, upd, ["id"]) == "parquet"
+    replace_keyed(spark, path, upd, ["id"])
     got = {(r["id"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "b2"), (3, "c")}
     assert not lease.exists()  # released on commit

@@ -10,7 +10,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from datawarehouse_code_spark.operators.multimodal import dhash_raster
 from datawarehouse_code_spark.sources.bucketed import (
     BUCKET_COL,
     bucket_expr,
@@ -20,6 +19,7 @@ from datawarehouse_code_spark.sources.bucketed import (
     replace_keyed_bucketed,
     write_bucketed,
 )
+from tests.conftest import seeded_raster
 
 N = 8
 
@@ -289,15 +289,10 @@ def test_dhash_index_ingest_bucketed_stream_equals_batch(spark, tmp_path):
         build_dhash_index,
         dhash_matches_incremental,
     )
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.streaming.jobs import run_dhash_index_ingest
     from tests.test_streaming import _media_landing
 
-    def raster(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
-    rows = [(i, "image/pgm", raster(i)) for i in range(9)]
+    rows = [(i, "image/pgm", seeded_raster(i)) for i in range(9)]
     land = _media_landing(tmp_path, rows)
     schema = "media_id BIGINT, media_type STRING, content BINARY"
     index_path = str(tmp_path / "dhash_index_b")
@@ -326,7 +321,7 @@ def test_dhash_index_ingest_bucketed_stream_equals_batch(spark, tmp_path):
         map(tuple, read_bucketed(spark, index_path).collect())
     ) == got
 
-    copy = spark.createDataFrame([(99, "image/pgm", raster(3))], schema)
+    copy = spark.createDataFrame([(99, "image/pgm", seeded_raster(3))], schema)
     matches = dhash_matches_incremental(
         copy, read_bucketed(spark, index_path)
     ).collect()
@@ -607,18 +602,12 @@ def test_dhash_gated_ingest_bucketed_same_decisions(spark, tmp_path):
 
     import pandas as pd
 
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.streaming.jobs import run_dhash_gated_ingest
 
-    def raster(seed, shift=0):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
-        return encode_gray_pgm(9, 8, pixels)
-
-    rows0 = [(1, "image/pgm", raster(3)),
-             (2, "image/pgm", raster(3, shift=5))]
-    rows1 = [(10, "image/pgm", raster(3, shift=9)),
-             (11, "image/pgm", raster(17))]
+    rows0 = [(1, "image/pgm", seeded_raster(3)),
+             (2, "image/pgm", seeded_raster(3, shift=5))]
+    rows1 = [(10, "image/pgm", seeded_raster(3, shift=9)),
+             (11, "image/pgm", seeded_raster(17))]
     land = tmp_path / "land"
     land.mkdir()
     now = time.time() - 600
@@ -667,15 +656,9 @@ def test_multimodal_gate_bucketed_all_tables(spark, tmp_path):
 
     import pandas as pd
 
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.streaming.jobs import (
         run_multimodal_gated_ingest,
     )
-
-    def raster(seed, shift=0):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
-        return encode_gray_pgm(9, 8, pixels)
 
     text = (
         "the quick brown fox jumps over the lazy dog near the old "
@@ -684,8 +667,8 @@ def test_multimodal_gate_bucketed_all_tables(spark, tmp_path):
     )
     rows = [
         (1, "text/plain", None, text),
-        (2, "image/pgm", raster(3), None),
-        (3, "image/pgm", raster(3, shift=5), None),  # dup of 2 -> reject
+        (2, "image/pgm", seeded_raster(3), None),
+        (3, "image/pgm", seeded_raster(3, shift=5), None),  # dup of 2 -> reject
     ]
     land = tmp_path / "land"
     land.mkdir()
@@ -1692,17 +1675,14 @@ def test_rebuild_fence_refuses_swap_when_lease_stolen(spark, tmp_path, monkeypat
 
 
 def test_auto_helpers_probe_under_the_lease(spark, tmp_path):
-    """r16 continuation: replace_keyed_auto/upsert_auto acquire the
+    """r16 continuation: replace_keyed_auto acquires the
     writer lease BEFORE probing existence/layout — probing outside it
     was a check-then-act gap where two maintainers racing the create
     lane could both read 'missing' and the later one would
     full-rebuild over the earlier one's table.  A foreign live lease
     refuses the call up front, with nothing probed or created."""
     from datawarehouse_code_spark.sources.acid import ConcurrentWriterError
-    from datawarehouse_code_spark.sources.bucketed import (
-        replace_keyed_auto,
-        upsert_auto,
-    )
+    from datawarehouse_code_spark.sources.bucketed import replace_keyed_auto
 
     path = str(tmp_path / "t")
     lease = tmp_path / "t._wlock"
@@ -1710,8 +1690,6 @@ def test_auto_helpers_probe_under_the_lease(spark, tmp_path):
     upd = _frame(spark, range(3))
     with pytest.raises(ConcurrentWriterError, match="live writer lease"):
         replace_keyed_auto(spark, path, upd, ["doc_id"], n_buckets=N)
-    with pytest.raises(ConcurrentWriterError, match="live writer lease"):
-        upsert_auto(spark, path, upd, ["doc_id"], n_buckets=N)
     assert not (tmp_path / "t").exists()  # nothing created by a loser
     lease.unlink()
     # with the lease free the same call creates normally

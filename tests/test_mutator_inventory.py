@@ -199,9 +199,9 @@ def test_known_leased_mutators_detected_as_guarded():
         ("operators/rollup.py", "_leased_partition_delete"),
         ("operators/similarity.py", "_forget_from_table"),
         ("pipeline.py", "compact_parquet"),
-        ("sources/acid.py", "_staged_overwrite_locked"),
-        ("sources/bucketed.py", "_replace_keyed_bucketed_locked"),
-        ("sources/bucketed.py", "_write_bucketed_locked"),
+        ("sources/acid.py", "_staged_overwrite"),
+        ("sources/bucketed.py", "replace_keyed_bucketed"),
+        ("sources/bucketed.py", "write_bucketed"),
     ]:
         assert key in found, f"expected mutator not found: {key}"
         assert found[key][2], f"expected lease-guarded: {key}"

@@ -117,7 +117,7 @@ def test_stream_source_feeds_upsert_sink(spark, tmp_path):
     An availableNow drain of a SIMPLE stream reader processes one
     prefetched batch per run, so the 500 rows are pulled through FIVE
     successive runs sharing one checkpoint: run 1 exercises the
-    staged-create branch, runs 2-5 exercise acid.upsert against the
+    staged-create branch, runs 2-5 exercise acid.replace_keyed against the
     existing table, and every restart resumes from the committed
     offset (the regression the offset-state rewrite fixed)."""
     from datawarehouse_code_spark.streaming.jobs import run_upsert_to_table

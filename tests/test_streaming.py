@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import shutil
 
-from datawarehouse_code_spark.operators.multimodal import dhash_raster
 from datawarehouse_code_spark.plans.streaming_queries import (
     _events_session_window,
     _events_tumbling_10min,
@@ -20,7 +19,7 @@ from datawarehouse_code_spark.streaming.jobs import (
     session_counts_stream,
     tumbling_counts_stream,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, seeded_raster
 
 
 def _stream_dir(tmp_path):
@@ -219,7 +218,7 @@ def test_click_attribution_stream_equals_batch(spark, tmp_path):
 
 
 def test_stream_upsert_to_table(spark, tmp_path):
-    """foreachBatch + acid.upsert sink: three forced micro-batches with
+    """foreachBatch + keyed-upsert sink: three forced micro-batches with
     overlapping event_ids land as one keyed table — the latest batch's
     row wins per key, within-batch duplicates collapse by ts first."""
     import os
@@ -1027,14 +1026,9 @@ def test_dhash_index_ingest_stream_equals_batch(spark, tmp_path):
         build_dhash_index,
         dhash_matches_incremental,
     )
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.streaming.jobs import run_dhash_index_ingest
 
-    def raster(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
-    rows = [(i, "image/pgm", raster(i)) for i in range(9)]
+    rows = [(i, "image/pgm", seeded_raster(i)) for i in range(9)]
     land = _media_landing(tmp_path, rows)
     schema = "media_id BIGINT, media_type STRING, content BINARY"
     index_path = str(tmp_path / "dhash_index")
@@ -1058,7 +1052,7 @@ def test_dhash_index_ingest_stream_equals_batch(spark, tmp_path):
                            checkpoint_dir=str(tmp_path / "ckpt"))
     assert sorted(map(tuple, spark.read.parquet(index_path).collect())) == got
 
-    copy = spark.createDataFrame([(99, "image/pgm", raster(3))], schema)
+    copy = spark.createDataFrame([(99, "image/pgm", seeded_raster(3))], schema)
     matches = dhash_matches_incremental(
         copy, spark.read.parquet(index_path)
     ).collect()
@@ -1072,7 +1066,6 @@ def test_video_fp_ingest_stream_equals_batch(spark, tmp_path):
     from datawarehouse_code_spark.operators.media_dedup import (  # noqa: F401
         dhash_bits,
     )
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.operators.video_dedup import (
         build_video_fp_index,
         encode_video,
@@ -1080,15 +1073,11 @@ def test_video_fp_ingest_stream_equals_batch(spark, tmp_path):
     )
     from datawarehouse_code_spark.streaming.jobs import run_video_fp_ingest
 
-    def frame(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
-    base = [frame(s) for s in range(8)]
+    base = [seeded_raster(s) for s in range(8)]
     rows = [
         (1, "video/vid0", encode_video(base)),
-        (2, "video/vid0", encode_video([frame(s) for s in range(10, 16)])),
-        (3, "video/vid0", encode_video([frame(s) for s in range(20, 26)])),
+        (2, "video/vid0", encode_video([seeded_raster(s) for s in range(10, 16)])),
+        (3, "video/vid0", encode_video([seeded_raster(s) for s in range(20, 26)])),
     ]
     land = _media_landing(tmp_path, rows)
     schema = "media_id BIGINT, media_type STRING, content BINARY"
@@ -1134,7 +1123,6 @@ def test_index_ingest_redelivery_with_zero_rows_sheds_stale(
 
     import pandas as pd
 
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.operators.video_dedup import encode_video
     from datawarehouse_code_spark.streaming.jobs import (
         run_cdc_index_ingest,
@@ -1171,16 +1159,12 @@ def test_index_ingest_redelivery_with_zero_rows_sheds_stale(
     assert idx.filter("doc_id = 8").count() > 0
 
     # --- video fp index: id 5 re-delivered as a 1-frame video ---
-    def frame(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
     vland = tmp_path / "video_landing"
     vland.mkdir()
     vrows = [
-        [(5, "video/vid0", encode_video([frame(s) for s in range(6)])),
-         (6, "video/vid0", encode_video([frame(s) for s in range(10, 16)]))],
-        [(5, "video/vid0", encode_video([frame(0)]))],  # 1 frame: no gram
+        [(5, "video/vid0", encode_video([seeded_raster(s) for s in range(6)])),
+         (6, "video/vid0", encode_video([seeded_raster(s) for s in range(10, 16)]))],
+        [(5, "video/vid0", encode_video([seeded_raster(0)]))],  # 1 frame: no gram
     ]
     for i, rows in enumerate(vrows):
         f = vland / f"batch-{i}.parquet"
@@ -1212,24 +1196,18 @@ def test_dhash_gated_ingest_rejects_perceptual_copies(spark, tmp_path):
     through the maintained index); within one batch the larger id of
     a near-dup pair is rejected; unrelated images survive; and a
     checkpoint replay changes nothing."""
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.streaming.jobs import run_dhash_gated_ingest
-
-    def raster(seed, shift=0):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
-        return encode_gray_pgm(9, 8, pixels)
 
     # batch 0: ids 1, 2 (2 is a batch-internal copy of 1 -> rejected);
     # batch 1: 10 = brightness-shifted copy of 1 (cross-batch reject),
     #          11 = unrelated survivor
     rows0 = [
-        (1, "image/pgm", raster(3)),
-        (2, "image/pgm", raster(3, shift=5)),
+        (1, "image/pgm", seeded_raster(3)),
+        (2, "image/pgm", seeded_raster(3, shift=5)),
     ]
     rows1 = [
-        (10, "image/pgm", raster(3, shift=9)),
-        (11, "image/pgm", raster(17)),
+        (10, "image/pgm", seeded_raster(3, shift=9)),
+        (11, "image/pgm", seeded_raster(17)),
     ]
     import os
     import time
@@ -1280,7 +1258,6 @@ def test_audio_and_video_gated_ingest_reject_shifted_copies(spark, tmp_path):
     import pandas as pd
 
     from datawarehouse_code_spark.operators.multimodal import (
-        encode_gray_pgm,
         encode_pcm_wav,
     )
     from datawarehouse_code_spark.operators.video_dedup import encode_video
@@ -1294,10 +1271,6 @@ def test_audio_and_video_gated_ingest_reject_shifted_copies(spark, tmp_path):
 
     def base_samples(seed, n=120):
         return [((seed * 37 + i * 211) % 4096) - 2048 for i in range(n)]
-
-    def frame(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
 
     schema = "media_id BIGINT, media_type STRING, content BINARY"
 
@@ -1329,11 +1302,11 @@ def test_audio_and_video_gated_ingest_reject_shifted_copies(spark, tmp_path):
     assert {r["media_id"] for r in spark.read.parquet(at).collect()} == {1, 11}
 
     # video: 20 = two-frame-trimmed copy of 2 (reject), 21 unrelated
-    vb = [frame(s) for s in range(8)]
+    vb = [seeded_raster(s) for s in range(8)]
     v_land = land("v_land", [
         [(2, "video/vid0", encode_video(vb))],
         [(20, "video/vid0", encode_video(vb[2:])),
-         (21, "video/vid0", encode_video([frame(s) for s in range(10, 16)]))],
+         (21, "video/vid0", encode_video([seeded_raster(s) for s in range(10, 16)]))],
     ])
     vt, vi = str(tmp_path / "v_tbl"), str(tmp_path / "v_idx")
     run_video_gated_ingest(
@@ -1428,7 +1401,6 @@ def test_multimodal_gated_ingest_mixed_feed(spark, tmp_path):
     from tests.test_cdc_winnowing import _vocab
 
     from datawarehouse_code_spark.operators.multimodal import (
-        encode_gray_pgm,
         encode_pcm_wav,
     )
     from datawarehouse_code_spark.operators.video_dedup import encode_video
@@ -1436,40 +1408,35 @@ def test_multimodal_gated_ingest_mixed_feed(spark, tmp_path):
         run_multimodal_gated_ingest,
     )
 
-    def raster(seed, shift=0):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        pixels = bytes(v + shift for v in dhash_raster(row_bytes))
-        return encode_gray_pgm(9, 8, pixels)
-
     def base_samples(seed, n=144):
         return [((seed * 37 + i * 211) % 4096) - 2048 for i in range(n)]
 
     b, n = _vocab(6, True), _vocab(60, False)
     boiler = [b[0], n[0], n[1], n[2], b[1], n[3], n[4], n[5], b[4]]
     audio = base_samples(1)
-    vframes = [raster(s) for s in range(40, 48)]
+    vframes = [seeded_raster(s) for s in range(40, 48)]
 
     batch0 = [
         (1, "text/plain", None, " ".join(n[10:14] + boiler + n[14:16])),
-        (2, "image/pgm", raster(3), None),
+        (2, "image/pgm", seeded_raster(3), None),
         (3, "audio/wav", encode_pcm_wav(8000, [audio[:120]]), None),
         (4, "video/vid0", encode_video(vframes), None),
     ]
     batch1 = [
         # per-modality near-dup copies -> rejected THROUGH the indexes
         (10, "text/plain", None, " ".join(n[33:42] + boiler)),
-        (11, "image/pgm", raster(3, shift=9), None),
+        (11, "image/pgm", seeded_raster(3, shift=9), None),
         (12, "audio/wav", encode_pcm_wav(8000, [audio[16:136]]), None),
         (13, "video/vid0", encode_video(vframes[2:]), None),
         # quarantine lanes: undecodable image (truncated raster),
         # unrouteable type, NULL media_type (must not bypass the gate)
-        (14, "image/pgm", raster(3)[:-20], None),
+        (14, "image/pgm", seeded_raster(3)[:-20], None),
         (15, "application/pdf", b"%PDF-", None),
         (18, None, b"mystery", None),
         # unrelated survivors, one per modality
         (16, "text/plain", None,
          " ".join(f"u16w{i}" for i in range(14))),
-        (17, "image/pgm", raster(19), None),
+        (17, "image/pgm", seeded_raster(19), None),
     ]
 
     land = tmp_path / "mm_landing"
@@ -1588,10 +1555,6 @@ def test_multimodal_gate_phash_and_cross_modal_legs(spark, tmp_path):
     def up2(a):
         return np.repeat(np.repeat(a, 2, axis=0), 2, axis=1)
 
-    def frame9x8(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
     b = base32("mmgate-b")
     img_a = encode_gray_pgm(64, 64, up2(b).tobytes())      # the original
     img_b = encode_gray_pgm(32, 32, b.tobytes())           # its 2x downscale
@@ -1608,13 +1571,13 @@ def test_multimodal_gate_phash_and_cross_modal_legs(spark, tmp_path):
 
     batch0 = [
         (1, "image/pgm", img_a, None),
-        (2, "video/vid0", encode_video([frame9x8(40), frame9x8(41)]), None),
+        (2, "video/vid0", encode_video([seeded_raster(40), seeded_raster(41)]), None),
     ]
     batch1 = [
         (10, "image/pgm", img_b, None),                  # pHash reject
-        (11, "image/pgm", frame9x8(40), None),           # in video 2's frames
+        (11, "image/pgm", seeded_raster(40), None),           # in video 2's frames
         (12, "video/vid0", encode_video([img_a, img_a]), None),  # 2 known
-        (13, "video/vid0", encode_video([img_a, frame9x8(77)]), None),  # 1
+        (13, "video/vid0", encode_video([img_a, seeded_raster(77)]), None),  # 1
         (14, "image/pgm",
          encode_gray_pgm(32, 32, base32("mmgate-u").tobytes()), None),
         # EXACT copy of the ingested original: rejected by the dHash
@@ -1718,17 +1681,13 @@ def test_phash_and_frame_index_ingest_stream_equals_batch(spark, tmp_path):
         )
         return encode_gray_pgm(32, 32, raster.tobytes())
 
-    def frame(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
     schema = "media_id BIGINT, media_type STRING, content BINARY"
 
     # ---- pHash maintainer: two hashable images + one below the grid
     img_rows = [
         (0, "image/pgm", big("pidx-0")),
         (1, "image/pgm", big("pidx-1")),
-        (2, "image/pgm", frame(5)),  # 9x8 -> no pHash rows
+        (2, "image/pgm", seeded_raster(5)),  # 9x8 -> no pHash rows
     ]
     (tmp_path / "pi").mkdir()
     land_i = _media_landing(tmp_path / "pi", img_rows)
@@ -1754,8 +1713,8 @@ def test_phash_and_frame_index_ingest_stream_equals_batch(spark, tmp_path):
 
     # ---- frame maintainer
     vid_rows = [
-        (0, "video/vid0", encode_video([frame(3), frame(4)])),
-        (1, "video/vid0", encode_video([frame(8)])),
+        (0, "video/vid0", encode_video([seeded_raster(3), seeded_raster(4)])),
+        (1, "video/vid0", encode_video([seeded_raster(8)])),
     ]
     (tmp_path / "fv").mkdir()
     land_v = _media_landing(tmp_path / "fv", vid_rows)
@@ -1780,7 +1739,7 @@ def test_phash_and_frame_index_ingest_stream_equals_batch(spark, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(f_idx).collect())) == got_f
 
     probe = spark.createDataFrame(
-        [(100, "image/pgm", frame(8))], schema
+        [(100, "image/pgm", seeded_raster(8))], schema
     )
     hits = image_video_matches(
         image_dhash(probe), spark.read.parquet(f_idx)
@@ -1798,20 +1757,15 @@ def test_multimodal_gate_same_batch_cross_modal(spark, tmp_path):
 
     import pandas as pd
 
-    from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
     from datawarehouse_code_spark.operators.video_dedup import encode_video
     from datawarehouse_code_spark.streaming.jobs import (
         run_multimodal_gated_ingest,
     )
 
-    def frame9x8(seed):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
     batch0 = [
-        (1, "image/pgm", frame9x8(3), None),  # contained in video 2
-        (2, "video/vid0", encode_video([frame9x8(3), frame9x8(4)]), None),
-        (3, "image/pgm", frame9x8(20), None),  # unrelated survivor
+        (1, "image/pgm", seeded_raster(3), None),  # contained in video 2
+        (2, "video/vid0", encode_video([seeded_raster(3), seeded_raster(4)]), None),
+        (3, "image/pgm", seeded_raster(20), None),  # unrelated survivor
     ]
     land = tmp_path / "sb_landing"
     land.mkdir()

@@ -8,10 +8,7 @@ import hashlib
 import pytest
 
 from datawarehouse_code_spark.operators.media_dedup import dhash_bits
-from datawarehouse_code_spark.operators.multimodal import (
-    dhash_raster,
-    encode_gray_pgm,
-)
+from datawarehouse_code_spark.operators.multimodal import encode_gray_pgm
 from datawarehouse_code_spark.operators.video_dedup import (
     build_video_fp_index,
     decode_video_frames,
@@ -21,17 +18,11 @@ from datawarehouse_code_spark.operators.video_dedup import (
     video_matches_incremental,
     video_near_dup_pairs,
 )
-
-
-def _frame(seed: int) -> bytes:
-    """9x8 PGM whose dHash bits are the deterministic row bytes
-    ((seed*8 + r)*37 mod 256) — the media_dedup test construction."""
-    row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-    return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
+from tests.conftest import seeded_raster
 
 
 def test_container_roundtrip_and_loud_failures():
-    frames = [_frame(s) for s in range(3)]
+    frames = [seeded_raster(s) for s in range(3)]
     data = encode_video(frames)
     assert decode_video_frames(data) == frames
     with pytest.raises(ValueError, match="magic"):
@@ -47,7 +38,7 @@ def test_container_roundtrip_and_loud_failures():
 
 
 def test_fp_strings_match_independent_computation():
-    frames = [_frame(s) for s in range(4)]
+    frames = [seeded_raster(s) for s in range(4)]
     got = video_fp_strings(frames, gram=2)
     keys = []
     for s in range(4):
@@ -71,12 +62,12 @@ def test_frame_trim_shift_robustness(spark):
     """Copies missing leading frames share every gram of the overlap
     (8-frame base, trims of 1 and 2 -> 6 and 5 shared grams); an
     unrelated video shares nothing."""
-    base = [_frame(s) for s in range(8)]
+    base = [seeded_raster(s) for s in range(8)]
     rows = [
         (0, "video/vid0", encode_video(base)),
         (1, "video/vid0", encode_video(base[1:])),
         (2, "video/vid0", encode_video(base[2:])),
-        (3, "video/vid0", encode_video([_frame(s) for s in range(50, 56)])),
+        (3, "video/vid0", encode_video([seeded_raster(s) for s in range(50, 56)])),
     ]
     media = spark.createDataFrame(rows, ["media_id", "media_type", "content"])
     pairs = {
@@ -90,7 +81,7 @@ def test_frame_trim_shift_robustness(spark):
 def test_hot_gram_cap(spark):
     """A black-frame loop shared by more media than the cap is
     dropped before the self-join."""
-    loop = encode_video([_frame(0)] * 4)
+    loop = encode_video([seeded_raster(0)] * 4)
     media = spark.createDataFrame(
         [(i, "video/vid0", loop) for i in range(8)],
         ["media_id", "media_type", "content"],
@@ -105,13 +96,13 @@ def test_hot_gram_cap(spark):
 def test_video_incremental_and_rtbf(spark, tmp_path):
     from datawarehouse_code_spark.operators.corpus import forget_index_rows
 
-    base = [_frame(s) for s in range(8)]
+    base = [seeded_raster(s) for s in range(8)]
     corpus = spark.createDataFrame(
         [
             (1, "video/vid0", encode_video(base)),
             # seeds stay distinct mod 32: the _frame row-byte rule is
             # ((seed*8 + r)*37) % 256, periodic in seed with period 32
-            (2, "video/vid0", encode_video([_frame(s) for s in range(10, 18)])),
+            (2, "video/vid0", encode_video([seeded_raster(s) for s in range(10, 18)])),
         ],
         ["media_id", "media_type", "content"],
     )
@@ -152,7 +143,7 @@ def test_null_payload_yields_no_rows(spark):
 
 
 def _seed_bands(seed: int) -> tuple[int, ...]:
-    """Closed-form dHash bands of _frame(seed)."""
+    """Closed-form dHash bands of seeded_raster(seed)."""
     return tuple(
         ((seed * 8 + 2 * k) * 37) % 256
         | ((((seed * 8 + 2 * k + 1) * 37) % 256) << 8)
@@ -168,7 +159,7 @@ def test_video_frame_dhashes_construction(spark):
     )
 
     media = spark.createDataFrame(
-        [(7, "video/vid0", encode_video([_frame(3), _frame(5)]))],
+        [(7, "video/vid0", encode_video([seeded_raster(3), seeded_raster(5)]))],
         ["media_id", "media_type", "content"],
     )
     got = {
@@ -192,25 +183,18 @@ def test_video_image_matches_closes_the_blind_spot(spark):
         video_image_matches,
     )
 
-    def _frame_hamming(seed, flip_bits):
-        # _frame with the low `flip_bits` bits of row 0 flipped:
-        # hamming = flip_bits against the unmodified frame
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        row_bytes[0] ^= (1 << flip_bits) - 1
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
     images = spark.createDataFrame(
         [
-            (100, "image/pgm", _frame(3)),          # exact re-use
-            (101, "image/pgm", _frame_hamming(5, 2)),  # near-dup of frame 5
-            (102, "image/pgm", _frame(60)),          # unrelated
+            (100, "image/pgm", seeded_raster(3)),          # exact re-use
+            (101, "image/pgm", seeded_raster(5, flip_bits=2)),  # near-dup of frame 5
+            (102, "image/pgm", seeded_raster(60)),          # unrelated
         ],
         ["media_id", "media_type", "content"],
     )
     videos = spark.createDataFrame(
         [
-            (1, "video/vid0", encode_video([_frame(3)])),  # 1-frame video
-            (2, "video/vid0", encode_video([_frame(4), _frame(5)])),
+            (1, "video/vid0", encode_video([seeded_raster(3)])),  # 1-frame video
+            (2, "video/vid0", encode_video([seeded_raster(4), seeded_raster(5)])),
         ],
         ["media_id", "media_type", "content"],
     )
@@ -245,11 +229,11 @@ def test_video_image_matches_caps_hot_index_bands(spark):
     )
 
     images = spark.createDataFrame(
-        [(i, "image/pgm", _frame(0)) for i in range(6)],
+        [(i, "image/pgm", seeded_raster(0)) for i in range(6)],
         ["media_id", "media_type", "content"],
     )
     videos = spark.createDataFrame(
-        [(1, "video/vid0", encode_video([_frame(0)]))],
+        [(1, "video/vid0", encode_video([seeded_raster(0)]))],
         ["media_id", "media_type", "content"],
     )
     idx = build_dhash_index(None, hashes=image_dhash(images))
@@ -269,23 +253,18 @@ def test_image_video_matches_reverse_direction(spark):
         video_frame_dhashes,
     )
 
-    def _frame_hamming(seed, flip_bits):
-        row_bytes = [((seed * 8 + r) * 37) % 256 for r in range(8)]
-        row_bytes[0] ^= (1 << flip_bits) - 1
-        return encode_gray_pgm(9, 8, dhash_raster(row_bytes))
-
     videos = spark.createDataFrame(
         [
-            (1, "video/vid0", encode_video([_frame(3)])),
-            (2, "video/vid0", encode_video([_frame(4), _frame(5)])),
+            (1, "video/vid0", encode_video([seeded_raster(3)])),
+            (2, "video/vid0", encode_video([seeded_raster(4), seeded_raster(5)])),
         ],
         ["media_id", "media_type", "content"],
     )
     images = spark.createDataFrame(
         [
-            (100, "image/pgm", _frame(3)),             # contained in video 1
-            (101, "image/pgm", _frame_hamming(5, 2)),  # near frame (2, 1)
-            (102, "image/pgm", _frame(60)),            # unrelated
+            (100, "image/pgm", seeded_raster(3)),             # contained in video 1
+            (101, "image/pgm", seeded_raster(5, flip_bits=2)),  # near frame (2, 1)
+            (102, "image/pgm", seeded_raster(60)),            # unrelated
         ],
         ["media_id", "media_type", "content"],
     )
@@ -315,11 +294,11 @@ def test_image_video_matches_caps_hot_frame_bands(spark):
     )
 
     videos = spark.createDataFrame(
-        [(i, "video/vid0", encode_video([_frame(0)])) for i in range(6)],
+        [(i, "video/vid0", encode_video([seeded_raster(0)])) for i in range(6)],
         ["media_id", "media_type", "content"],
     )
     images = spark.createDataFrame(
-        [(100, "image/pgm", _frame(0))],
+        [(100, "image/pgm", seeded_raster(0))],
         ["media_id", "media_type", "content"],
     )
     frame_index = build_frame_dhash_index(video_frame_dhashes(videos))
@@ -344,7 +323,7 @@ def test_combined_frames_map_matches_single_purpose_maps(spark):
 
     media = spark.createDataFrame(
         [
-            (1, "video/vid0", encode_video([_frame(s) for s in range(3)])),
+            (1, "video/vid0", encode_video([seeded_raster(s) for s in range(3)])),
             (2, "video/vid0", b"JUNKJUNK"),
         ],
         ["media_id", "media_type", "content"],
@@ -392,8 +371,8 @@ def test_rtbf_closes_over_the_frame_index(spark, tmp_path):
 
     videos = spark.createDataFrame(
         [
-            (1, "video/vid0", encode_video([_frame(3), _frame(4)])),
-            (2, "video/vid0", encode_video([_frame(8), _frame(9)])),
+            (1, "video/vid0", encode_video([seeded_raster(3), seeded_raster(4)])),
+            (2, "video/vid0", encode_video([seeded_raster(8), seeded_raster(9)])),
         ],
         ["media_id", "media_type", "content"],
     )
@@ -401,7 +380,7 @@ def test_rtbf_closes_over_the_frame_index(spark, tmp_path):
     build_frame_dhash_index(video_frame_dhashes(videos)).write.parquet(path)
 
     probe = spark.createDataFrame(
-        [(100, "image/pgm", _frame(3))],
+        [(100, "image/pgm", seeded_raster(3))],
         ["media_id", "media_type", "content"],
     )
     before = image_video_matches(
@@ -465,7 +444,7 @@ def test_frame_phash_catches_rescaled_image_in_video_both_directions(spark):
         [(100, "image/pgm", img32)], ["media_id", "media_type", "content"]
     )
     videos = spark.createDataFrame(
-        [(1, "video/vid0", encode_video([img64, _frame(7)]))],
+        [(1, "video/vid0", encode_video([img64, seeded_raster(7)]))],
         ["media_id", "media_type", "content"],
     )
 
