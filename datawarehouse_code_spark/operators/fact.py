@@ -31,19 +31,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.functions.scalars import date_key, surrogate_hash_key128
+from datawarehouse_code_spark.operators.dimensions import SEGMENT_TO_COMPANY_TYPE, _case_map
 from datawarehouse_code_spark.sources.acid import _Lease, _staged_overwrite
 
 
-def build_fact(lineitem: DataFrame, orders: DataFrame, customer: DataFrame) -> DataFrame:
-    """transportfact stand-in: (id, product_id, client_id, date_id,
-    country_id, quantity, price, year) — warehouse.py:172-187 schema,
-    O15 FK projection with B6 resolved (real measures)."""
+def fact_lines(lineitem: DataFrame, orders: DataFrame, customer: DataFrame) -> DataFrame:
+    """lineitem ⋈ orders ⋈ customer, one row per fact line: the one
+    definition the fact and the cube both read.  `date` is the order
+    date, NULL kept; `company_type` is O7's CASE (NULL when unmapped)."""
     ord_proj = orders.select(
         "o_orderkey",
         "o_custkey",
-        F.to_date("o_orderdate").alias("order_date"),
+        F.to_date("o_orderdate").alias("date"),
     )
-    cust_proj = customer.select("c_custkey", "c_nationkey")
+    cust_proj = customer.select("c_custkey", "c_nationkey", "c_name", "c_mktsegment")
     return (
         lineitem.join(ord_proj, lineitem["l_orderkey"] == ord_proj["o_orderkey"], "inner")
         .join(cust_proj, F.col("o_custkey") == cust_proj["c_custkey"], "inner")
@@ -58,12 +59,25 @@ def build_fact(lineitem: DataFrame, orders: DataFrame, customer: DataFrame) -> D
             ).alias("id"),
             F.col("l_partkey").alias("product_id"),
             F.col("o_custkey").alias("client_id"),
-            date_key(F.col("order_date")).alias("date_id"),
+            F.col("c_name").alias("company_name"),
+            _case_map(F.col("c_mktsegment"), SEGMENT_TO_COMPANY_TYPE, "string").alias(
+                "company_type"
+            ),
             F.col("c_nationkey").alias("country_id"),
+            "date",
             F.col("l_quantity").alias("quantity"),
             F.col("l_extendedprice").alias("price"),
-            F.year("order_date").cast("int").alias("year"),
         )
+    )
+
+
+def build_fact(lineitem: DataFrame, orders: DataFrame, customer: DataFrame) -> DataFrame:
+    """transportfact stand-in: (id, product_id, client_id, date_id,
+    country_id, quantity, price, year) — warehouse.py:172-187 schema,
+    O15 FK projection with B6 resolved (real measures)."""
+    return fact_lines(lineitem, orders, customer).select(
+        "id", "product_id", "client_id", date_key(F.col("date")).alias("date_id"),
+        "country_id", "quantity", "price", F.year("date").cast("int").alias("year"),
     )
 
 

@@ -42,7 +42,7 @@ from datawarehouse_code_spark.operators.dimensions import (
     build_dim_product_subcategory,
     insert_if_not_exists_report,
 )
-from datawarehouse_code_spark.operators.fact import build_fact, write_fact
+from datawarehouse_code_spark.operators.fact import build_fact, fact_lines, write_fact
 from datawarehouse_code_spark.sources.acid import _staged_overwrite, leased_append
 from datawarehouse_code_spark.sources.catalog import read_table
 
@@ -61,6 +61,9 @@ class Warehouse:
     dim_date_year: DataFrame
     fact: DataFrame
     cube: DataFrame
+    fact_lines: DataFrame  # with part and nation, incremental_cube's inputs
+    part: DataFrame
+    nation: DataFrame
 
 
 _WAREHOUSE_CACHE: dict[tuple[str, str], Warehouse] = {}
@@ -68,6 +71,11 @@ _WAREHOUSE_CACHE: dict[tuple[str, str], Warehouse] = {}
 
 def build_warehouse(spark: SparkSession, sf_dir: str) -> Warehouse:
     """Build every warehouse table as a lazy DataFrame graph.
+
+    The fact and the cube read one definition of a fact line
+    (`fact_lines`, with the 128-bit id), so the cube's fact_id cannot
+    drift from the fact's id; the cube joins only part and nation to
+    it and reads none of the dims (operators/cube.py).
 
     Memoized per (session, sf_dir): the Warehouse is a bundle of
     immutable lazy plans, so re-building it for every registry query
@@ -96,10 +104,7 @@ def build_warehouse(spark: SparkSession, sf_dir: str) -> Warehouse:
     dim_year = build_dim_date_year(orders)
     dim_month = build_dim_date_month(spark)
     dim_date = build_dim_date(orders, dim_year)
-    fact = build_fact(lineitem, orders, customer)
-    cube = build_cube(
-        fact, dim_product, dim_sub, dim_client, dim_date, dim_month, dim_year, dim_country
-    )
+    lines = fact_lines(lineitem, orders, customer)
     wh = Warehouse(
         dim_client=dim_client,
         dim_product=dim_product,
@@ -109,8 +114,11 @@ def build_warehouse(spark: SparkSession, sf_dir: str) -> Warehouse:
         dim_date=dim_date,
         dim_date_month=dim_month,
         dim_date_year=dim_year,
-        fact=fact,
-        cube=cube,
+        fact=build_fact(lineitem, orders, customer),
+        cube=build_cube(lines, part, nation),
+        fact_lines=lines,
+        part=part,
+        nation=nation,
     )
     _WAREHOUSE_CACHE[cache_key] = wh
     return wh
@@ -192,8 +200,8 @@ def run_pipeline_incremental(
     - each dim: append only rows whose natural key is absent;
     - fact: append only rows whose 128-bit id is absent (partitioned
       append through write_fact preserves year pruning);
-    - cube: append incremental_cube's rows, the facts absent from the
-      existing cube joined with the dims.
+    - cube: append incremental_cube's rows, the fact lines absent from
+      the existing cube joined with part and nation.
 
     The dims commit concurrently, in no fixed order among themselves,
     all of them before the fact, and the fact before the cube; a
@@ -223,9 +231,7 @@ def run_pipeline_incremental(
             if name == "cube":
                 report = Observation()
                 delta = incremental_cube(
-                    existing, wh.fact, wh.dim_product,
-                    wh.dim_product_subcategory, wh.dim_client, wh.dim_date,
-                    wh.dim_date_month, wh.dim_date_year, wh.dim_country,
+                    existing, wh.fact_lines, wh.part, wh.nation
                 ).observe(report, F.count(F.lit(1)).alias("inserted"))
             else:  # a dim on its natural key, the fact on its 128-bit id
                 delta, report = insert_if_not_exists_report(

@@ -7,6 +7,7 @@ warehouse.py:307-314).
 from __future__ import annotations
 
 import os
+from datetime import date, datetime
 
 from pyspark.sql import functions as F
 
@@ -95,10 +96,8 @@ def test_run_pipeline_incremental_noop_then_catchup(spark, tmp_path):
     # 2) rebuild out_dir with a fact/cube PREFIX, then catch up
     old_fact = wh.fact.filter(F.col("year") <= 1995)
     write_fact(old_fact, f"{out}/fact")
-    old_cube = build_cube(
-        old_fact, wh.dim_product, wh.dim_product_subcategory, wh.dim_client,
-        wh.dim_date, wh.dim_date_month, wh.dim_date_year, wh.dim_country,
-    )
+    old_lines = wh.fact_lines.filter(F.year("date") <= 1995)
+    old_cube = build_cube(old_lines, wh.part, wh.nation)
     old_cube.write.mode("overwrite").parquet(f"{out}/cube")
 
     reports = run_pipeline_incremental(spark, wh, out)
@@ -131,21 +130,90 @@ def test_incremental_cube_equals_full_rebuild(spark):
     from datawarehouse_code_spark.operators.cube import build_cube, incremental_cube
 
     wh = build_warehouse(spark, SF_DIR)
-    dims = (
-        wh.dim_product, wh.dim_product_subcategory, wh.dim_client,
-        wh.dim_date, wh.dim_date_month, wh.dim_date_year, wh.dim_country,
-    )
-    old_fact = wh.fact.filter(F.col("year") <= 1995)
-    old_cube = build_cube(old_fact, *dims)
+    old_lines = wh.fact_lines.filter(F.year("date") <= 1995)
+    old_cube = build_cube(old_lines, wh.part, wh.nation)
     assert 0 < old_cube.count() < wh.cube.count()
 
-    delta = incremental_cube(old_cube, wh.fact, *dims)
+    delta = incremental_cube(old_cube, wh.fact_lines, wh.part, wh.nation)
     inc = old_cube.unionByName(delta)
     assert inc.count() == wh.cube.count()
     assert inc.exceptAll(wh.cube).count() == 0
     assert wh.cube.exceptAll(inc).count() == 0
     # idempotent: a second delivery of the same delta appends nothing
-    assert incremental_cube(inc, wh.fact, *dims).count() == 0
+    assert incremental_cube(inc, wh.fact_lines, wh.part, wh.nation).count() == 0
+
+
+# A few hand-built rows per source table, each one a case the cube's
+# joins must drop or keep: part 11 has a null p_type, order 102 a null
+# o_orderdate, lineitem (100, 3) names a part that does not exist,
+# customer 2 has an unmapped c_mktsegment and customer 3 a nation that
+# does not exist.
+_EDGE_TABLES = {
+    "region": [(0, "AFRICA"), (1, "AMERICA")],
+    "nation": [(0, "ALGERIA", 0), (1, "BRAZIL", 1)],
+    "customer": [
+        (1, "Customer#1", 0, 10.0, "MACHINERY"),
+        (2, "Customer#2", 1, 20.0, "HOUSEHOLD"),
+        (3, "Customer#3", 7, 30.0, "BUILDING"),
+    ],
+    "part": [
+        (10, "part ten", "Brand#1", "STANDARD BRASS", 1, 1.0),
+        (11, "part eleven", "Brand#2", None, 2, 2.0),
+        (12, "part twelve", "Brand#3", "LARGE TIN", 3, 3.0),
+    ],
+    "orders": [
+        (100, 1, "O", 1.0, datetime(1995, 3, 4), "1-URGENT"),
+        (101, 2, "F", 2.0, datetime(1996, 12, 31), "2-HIGH"),
+        (102, 1, "O", 3.0, None, "3-MEDIUM"),
+        (103, 3, "F", 4.0, datetime(1997, 1, 1), "4-LOW"),
+    ],
+    "lineitem": [
+        (100, 10, 1, 1, 2.0, 20.0, 0.0, 0.0, "N", "O", datetime(1995, 3, 5)),
+        (100, 11, 1, 2, 3.0, 30.0, 0.0, 0.0, "N", "O", datetime(1995, 3, 5)),
+        (100, 99, 1, 3, 4.0, 40.0, 0.0, 0.0, "N", "O", datetime(1995, 3, 5)),
+        (101, 12, 2, 1, 5.0, 50.0, 0.0, 0.0, "R", "F", datetime(1997, 1, 2)),
+        (101, 10, 2, 2, 6.0, 60.0, 0.0, 0.0, "R", "F", datetime(1997, 1, 2)),
+        (102, 10, 1, 1, 7.0, 70.0, 0.0, 0.0, "N", "O", None),
+        (103, 12, 1, 1, 8.0, 80.0, 0.0, 0.0, "A", "F", datetime(1997, 1, 3)),
+    ],
+}
+
+
+def test_cube_drops_rows_the_star_join_dropped(spark, tmp_path):
+    """The cube keeps a fact line only if its order has a date, its
+    part exists with a non-null p_type and its customer's nation
+    exists; an unmapped segment keeps the line with a null
+    company_type.  The expected rows are those the reference's 7-join
+    star produced on this input; the fact keeps all seven lines."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from datawarehouse_code_spark.sources.schemas import SCHEMAS
+
+    arrow = {
+        T.IntegerType(): pa.int32(), T.LongType(): pa.int64(),
+        T.DoubleType(): pa.float64(), T.StringType(): pa.string(),
+        T.TimestampNTZType(): pa.timestamp("us"),
+    }
+    for name, rows in _EDGE_TABLES.items():
+        schema = pa.schema([(f.name, arrow[f.dataType]) for f in SCHEMAS[name].fields])
+        table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
+        pq.write_table(table, f"{tmp_path}/{name}.parquet")
+
+    wh = build_warehouse(spark, str(tmp_path))
+    assert wh.fact.count() == 7
+    assert sorted(tuple(r) for r in wh.cube.collect()) == [
+        ("1b999a56596aeb866f274cfd0fbeb6a2", 10, "STANDARD BRASS", "part ten",
+         "STANDARD BRASS", "Brand#1", 2, "Customer#2", None, "BRAZIL",
+         date(1996, 12, 31), 31, 12, 1996, 6.0, 60.0),
+        ("545740b389e146ffd5228ccd67f2f727", 12, "LARGE TIN", "part twelve",
+         "LARGE TIN", "Brand#3", 2, "Customer#2", None, "BRAZIL",
+         date(1996, 12, 31), 31, 12, 1996, 5.0, 50.0),
+        ("94f7afe3e02a9dd8e436947b3d9e5460", 10, "STANDARD BRASS", "part ten",
+         "STANDARD BRASS", "Brand#1", 1, "Customer#1", "mechanic_company",
+         "ALGERIA", date(1995, 3, 4), 4, 3, 1995, 2.0, 20.0),
+    ]
 
 
 def test_write_fact_append_mode(spark, tmp_path):

@@ -89,19 +89,17 @@ def test_read_jdbc_builder_reaches_load(spark):
 
 def test_cube_broadcast_hints_only_on_bounded_dims(spark):
     """Regression guard for the round-1 scale defect: the cube plan
-    must carry broadcast HINTS only for the five domain-bounded dims
-    (subcategory, date, month, year, country) — never for dim_product
-    or dim_client, which scale with data size (a hint overrides AQE's
-    size check and OOMs at 100 TB)."""
+    must carry a broadcast HINT only for the domain-bounded nation
+    table — never for part or customer, which scale with data size (a
+    hint overrides AQE's size check and OOMs at 100 TB)."""
     from datawarehouse_code_spark.pipeline import build_warehouse
 
     cube = build_warehouse(spark, SF_DIR).cube
     logical = cube._jdf.queryExecution().analyzed().toString()
-    # 5 hints in the cube join + 3 inherited from dim builders
-    # (subcategory in dim_product, region in subregion path is absent
-    # here, year in dim_date) — count hints attached to scaling tables
-    # instead: none may hint customer- or part-derived plans directly.
-    assert logical.count("ResolvedHint") >= 5
+    # exactly one hint, on nation; the loop below also rejects any hint
+    # whose subtree holds customer- or part-derived columns
+    hints = logical.split("ResolvedHint")[1:]
+    assert len(hints) == 1 and "n_nationkey" in hints[0][:400], logical
     for marker in ("c_mktsegment", "p_retailprice"):
         for block in logical.split("ResolvedHint")[1:]:
             # each hint block's immediate subtree (up to the next join)
