@@ -25,6 +25,9 @@ verified EXACTLY afterwards: candidates are re-checked with the full
 Scale shape (the 100 TB story):
 - Hashing is a narrow Arrow-batched map over the media table; pixels
   never leave the worker — only (media_id, 4 band ints, hash) does.
+  Every hash and fingerprint lane here is a row function handed to
+  multimodal._media_map, the one decode map, which also owns the one
+  bad-payload policy (fail-loud vs quarantine).
 - The pair join buckets on (band_idx, band_val) with a hot-band cap
   (distinct media per bucket ≤ `band_cap`): a constant-color artifact
   class (tracking pixels, solid thumbnails) all hash to dhash 0 and
@@ -43,13 +46,15 @@ surface for LLM training-data curation, built Spark-first.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.iterative import cut_lineage
+from datawarehouse_code_spark.operators.multimodal import (
+    _media_map,
+    decode_audio,
+    decode_image,
+)
 
 DHASH_SCHEMA = (
     "media_id BIGINT, b0 INT, b1 INT, b2 INT, b3 INT, dhash BIGINT"
@@ -238,98 +243,47 @@ def image_phash(media: DataFrame, skip_small: bool = False) -> DataFrame:
     the 32x32 grid (r13 ADVICE — a `size=` knob that raised on every
     value but 32 was dead API surface; phash_bits keeps the real
     parameter for other grids)."""
-    import numpy as np
 
-    from datawarehouse_code_spark.operators.multimodal import decode_image
+    def rows(content: bytes):
+        w, h, ch, px = decode_image(content)
+        if skip_small and (w < PHASH_SIZE or h < PHASH_SIZE):
+            return []
+        bands = phash_bits(w, h, ch, px)
+        return [(*bands, _pack64(bands))]
 
-    size = PHASH_SIZE
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, bands = [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                w, h, ch, px = decode_image(bytes(content))
-                if skip_small and (w < size or h < size):
-                    continue
-                ids.append(media_id)
-                bands.append(phash_bits(w, h, ch, px, size=size))
-            b = np.array(bands, dtype=np.uint64).reshape(len(ids), 4)
-            ph = (
-                b[:, 0]
-                | (b[:, 1] << np.uint64(16))
-                | (b[:, 2] << np.uint64(32))
-                | (b[:, 3] << np.uint64(48))
-            ).view(np.int64)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "b0": pd.Series(b[:, 0].astype(np.int32), dtype="int32"),
-                    "b1": pd.Series(b[:, 1].astype(np.int32), dtype="int32"),
-                    "b2": pd.Series(b[:, 2].astype(np.int32), dtype="int32"),
-                    "b3": pd.Series(b[:, 3].astype(np.int32), dtype="int32"),
-                    "phash": pd.Series(ph, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, PHASH_SCHEMA)
+    return _media_map(media, rows, PHASH_SCHEMA)
 
 
-def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
+def _pack64(bands) -> int:
+    """The 64-bit hash of four 16-bit band values, band 0 in the low
+    16 bits, as a signed BIGINT (bit 63 set reads negative)."""
+    u = sum(b << (16 * k) for k, b in enumerate(bands))
+    return u - (1 << 64) if u >> 63 else u
+
+
+def _dhash_rows(content: bytes):
+    """The one dHash row of a payload: (b0..b3, dhash)."""
+    w, h, ch, px = decode_image(content)
+    bands = dhash_bits(w, h, ch, px)
+    return [(*bands, _pack64(bands))]
+
+
+def image_dhash(media: DataFrame) -> DataFrame:
     """Per-media dHash over REAL decoded pixels: decode_image each
     payload (operators/multimodal.py — PNM/BMP/JPEG/PNG or Pillow),
     compute the four 16-bit band values and the combined 64-bit hash.
     A narrow Arrow-batched map, no shuffle; NULL payloads yield no row
     (route through the quarantine stats lane first in a production
     pipeline).  `dhash` packs the bands little-endian (band 0 in the
-    low 16 bits) through an unsigned view, so bit 63 set reads as a
-    negative BIGINT — compare hashes via the band columns when a
+    low 16 bits) as a signed BIGINT, so bit 63 set reads as a
+    negative value — compare hashes via the band columns when a
     cross-engine oracle is in play.
 
-    The DataFrame surface (schema, four 16-bit bands, the 64-bit
-    pack) is fixed at grid=8 — the parameter exists so dhash_bits is
-    reusable at other grids, but this table's band layout is a
-    contract shared with the index, the matchers and the oracles, so
-    any other value fails loudly here rather than mis-packing."""
-    import numpy as np
-
-    from datawarehouse_code_spark.operators.multimodal import decode_image
-
-    if grid != 8:
-        raise ValueError(
-            f"image_dhash's band schema is fixed at grid=8 (got {grid}); "
-            "use dhash_bits directly for other grids"
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, bands = [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                w, h, ch, px = decode_image(bytes(content))
-                ids.append(media_id)
-                bands.append(dhash_bits(w, h, ch, px, grid=grid))
-            b = np.array(bands, dtype=np.uint64).reshape(len(ids), 4)
-            dh = (
-                b[:, 0]
-                | (b[:, 1] << np.uint64(16))
-                | (b[:, 2] << np.uint64(32))
-                | (b[:, 3] << np.uint64(48))
-            ).view(np.int64)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "b0": pd.Series(b[:, 0].astype(np.int32), dtype="int32"),
-                    "b1": pd.Series(b[:, 1].astype(np.int32), dtype="int32"),
-                    "b2": pd.Series(b[:, 2].astype(np.int32), dtype="int32"),
-                    "b3": pd.Series(b[:, 3].astype(np.int32), dtype="int32"),
-                    "dhash": pd.Series(dh, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, DHASH_SCHEMA)
+    The grid is dhash_bits' default 8, not a parameter: the schema's
+    four 16-bit bands and 64-bit pack are a contract shared with the
+    index, the matchers and the oracles (use dhash_bits directly for
+    other grids)."""
+    return _media_map(media, _dhash_rows, DHASH_SCHEMA)
 
 
 def _explode_bands(hashes: DataFrame) -> DataFrame:
@@ -415,7 +369,6 @@ def dhash_near_dup_pairs(
 
 def build_dhash_index(
     media: DataFrame | None,
-    grid: int = 8,
     hashes: DataFrame | None = None,
 ) -> DataFrame:
     """The persisted perceptual index of a media corpus: one row per
@@ -431,7 +384,7 @@ def build_dhash_index(
     image_dhash output) shares a materialized hash table across
     consumers, as the CDC operators' chunks= pass-through."""
     if hashes is None:
-        hashes = image_dhash(media, grid=grid)
+        hashes = image_dhash(media)
     return _explode_bands(hashes)
 
 
@@ -440,7 +393,6 @@ def dhash_matches_incremental(
     index: DataFrame,
     max_hamming: int = 6,
     band_cap: int = 50,
-    grid: int = 8,
     new_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """Perceptual matches between an increment and a PERSISTED dHash
@@ -449,11 +401,11 @@ def dhash_matches_incremental(
     increment shape: the increment is decoded and hashed fresh, the
     corpus is never re-read beyond the band equi-join, so cost scales
     with |increment|.  Hot index buckets are capped at `band_cap`
-    distinct corpus media before the join.  `grid` must match the
-    index build.  `new_hashes` (an image_dhash output of the
-    increment) shares a materialized hash table."""
+    distinct corpus media before the join.  `new_hashes` (an
+    image_dhash output of the increment) shares a materialized hash
+    table."""
     if new_hashes is None:
-        new_hashes = image_dhash(new_media, grid=grid)
+        new_hashes = image_dhash(new_media)
     inc = _explode_bands(new_hashes).select(
         F.col("media_id").alias("d_new"), "band_idx", "band_val",
         "b0", "b1", "b2", "b3",
@@ -519,6 +471,20 @@ def audio_fp_strings(
     ]
 
 
+def _audio_fp_rows(win: int, hop: int, gram: int, qshift: int):
+    """The row function of both audio fingerprint lanes: one (fp,)
+    row per distinct fingerprint of channel 0."""
+
+    def rows(content: bytes):
+        _rate, _ch, _n, arr = decode_audio(content)
+        return [
+            (fp,)
+            for fp in set(audio_fp_strings(arr[:, 0], win, hop, gram, qshift))
+        ]
+
+    return rows
+
+
 def audio_fingerprints(
     media: DataFrame,
     win: int = 16,
@@ -532,30 +498,9 @@ def audio_fingerprints(
     narrow Arrow-batched map + one distinct; samples never leave the
     worker.  (win, hop, gram, qshift) are the index contract —
     increments must pass the same values."""
-    import pandas as pd  # noqa: F811 — worker-side import
-
-    from datawarehouse_code_spark.operators.multimodal import decode_audio
-
-    def batches(it):
-        for pdf in it:
-            ids, fps = [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                _rate, _ch, _n, arr = decode_audio(bytes(content))
-                for fp in set(
-                    audio_fp_strings(arr[:, 0], win, hop, gram, qshift)
-                ):
-                    ids.append(media_id)
-                    fps.append(fp)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, AUDIO_FP_SCHEMA).distinct()
+    return _media_map(
+        media, _audio_fp_rows(win, hop, gram, qshift), AUDIO_FP_SCHEMA
+    ).distinct()
 
 
 def _cap_hot_fps(
@@ -655,7 +600,7 @@ DHASH_QUARANTINE_SCHEMA = DHASH_SCHEMA + ", decode_error STRING"
 FP_QUARANTINE_SCHEMA = AUDIO_FP_SCHEMA + ", decode_error STRING"
 
 
-def image_dhash_quarantine(media: DataFrame, grid: int = 8) -> DataFrame:
+def image_dhash_quarantine(media: DataFrame) -> DataFrame:
     """image_dhash with a QUARANTINE lane — the production shape for
     dirty crawls (the decoded_image_stats_quarantine doctrine): a
     payload the decoder rejects (ValueError) or cannot cover
@@ -663,47 +608,9 @@ def image_dhash_quarantine(media: DataFrame, grid: int = 8) -> DataFrame:
     the error string instead of killing the batch job; healthy rows
     carry decode_error NULL.  Filter on decode_error IS NULL before
     the pair join; route the rest to the quarantine table."""
-    import numpy as np
-
-    from datawarehouse_code_spark.operators.multimodal import decode_image
-
-    def batches(it):
-        for pdf in it:
-            rows = {k: [] for k in
-                    ("media_id", "b0", "b1", "b2", "b3", "dhash", "err")}
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(media_id)
-                err, bands, dh = None, (None,) * 4, None
-                if content is None:
-                    err = "null payload"
-                else:
-                    try:
-                        w, h, ch, px = decode_image(bytes(content))
-                        bands = dhash_bits(w, h, ch, px, grid=grid)
-                        u = np.uint64(0)
-                        for k, b in enumerate(bands):
-                            u |= np.uint64(b) << np.uint64(16 * k)
-                        dh = int(u.view(np.int64))
-                    except (ValueError, NotImplementedError) as e:
-                        err = f"{type(e).__name__}: {e}"
-                        bands, dh = (None,) * 4, None
-                for k in range(4):
-                    rows[f"b{k}"].append(bands[k])
-                rows["dhash"].append(dh)
-                rows["err"].append(err)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "b0": pd.array(rows["b0"], dtype="Int32"),
-                    "b1": pd.array(rows["b1"], dtype="Int32"),
-                    "b2": pd.array(rows["b2"], dtype="Int32"),
-                    "b3": pd.array(rows["b3"], dtype="Int32"),
-                    "dhash": pd.array(rows["dhash"], dtype="Int64"),
-                    "decode_error": pd.Series(rows["err"], dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, DHASH_QUARANTINE_SCHEMA)
+    return _media_map(
+        media, _dhash_rows, DHASH_QUARANTINE_SCHEMA, quarantine=True
+    )
 
 
 IMAGE_FPS_QUARANTINE_SCHEMA = (
@@ -734,66 +641,18 @@ def image_fingerprints_quarantine(media: DataFrame) -> DataFrame:
     4x16-bit bands, which pins the 8-px dHash grid and the
     PHASH_SIZE downsample — a knob that raised on every other value
     was dead API surface."""
-    import numpy as np
 
-    from datawarehouse_code_spark.operators.multimodal import decode_image
+    def rows(content: bytes):
+        w, h, ch, px = decode_image(content)
+        db = dhash_bits(w, h, ch, px)
+        if w < PHASH_SIZE or h < PHASH_SIZE:
+            return [(*db, _pack64(db)) + (None,) * 5]
+        pb = phash_bits(w, h, ch, px)
+        return [(*db, _pack64(db), *pb, _pack64(pb))]
 
-    grid, size = 8, PHASH_SIZE
-
-    def _pack64(bands) -> int:
-        u = np.uint64(0)
-        for k, b in enumerate(bands):
-            u |= np.uint64(b) << np.uint64(16 * k)
-        return int(u.view(np.int64))
-
-    def batches(it):
-        for pdf in it:
-            rows = {
-                k: []
-                for k in (
-                    "media_id", "b0", "b1", "b2", "b3", "dhash",
-                    "p0", "p1", "p2", "p3", "phash", "err",
-                )
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(media_id)
-                err = None
-                db, dh = (None,) * 4, None
-                pb, ph = (None,) * 4, None
-                if content is None:
-                    err = "null payload"
-                else:
-                    try:
-                        w, h, ch, px = decode_image(bytes(content))
-                        db = dhash_bits(w, h, ch, px, grid=grid)
-                        dh = _pack64(db)
-                        if w >= size and h >= size:
-                            pb = phash_bits(w, h, ch, px, size=size)
-                            ph = _pack64(pb)
-                    except (ValueError, NotImplementedError) as e:
-                        err = f"{type(e).__name__}: {e}"
-                        db, dh, pb, ph = (None,) * 4, None, (None,) * 4, None
-                for k in range(4):
-                    rows[f"b{k}"].append(db[k])
-                    rows[f"p{k}"].append(pb[k])
-                rows["dhash"].append(dh)
-                rows["phash"].append(ph)
-                rows["err"].append(err)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    **{
-                        c: pd.array(rows[c], dtype="Int32")
-                        for c in ("b0", "b1", "b2", "b3",
-                                  "p0", "p1", "p2", "p3")
-                    },
-                    "dhash": pd.array(rows["dhash"], dtype="Int64"),
-                    "phash": pd.array(rows["phash"], dtype="Int64"),
-                    "decode_error": pd.Series(rows["err"], dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, IMAGE_FPS_QUARANTINE_SCHEMA)
+    return _media_map(
+        media, rows, IMAGE_FPS_QUARANTINE_SCHEMA, quarantine=True
+    )
 
 
 def phash_view(fps: DataFrame) -> DataFrame:
@@ -821,36 +680,7 @@ def audio_fingerprints_quarantine(
     string; healthy media yield their distinct fingerprints with
     decode_error NULL (a fingerprint-less healthy item — too short
     for one window — yields no row, same as the fail-loud variant)."""
-    from datawarehouse_code_spark.operators.multimodal import decode_audio
-
-    def batches(it):
-        for pdf in it:
-            ids, fps, errs = [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append("null payload")
-                    continue
-                try:
-                    _r, _c, _n, arr = decode_audio(bytes(content))
-                except (ValueError, NotImplementedError) as e:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-                    continue
-                for fp in set(
-                    audio_fp_strings(arr[:, 0], win, hop, gram, qshift)
-                ):
-                    ids.append(media_id)
-                    fps.append(fp)
-                    errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                    "decode_error": pd.Series(errs, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, FP_QUARANTINE_SCHEMA).distinct()
+    return _media_map(
+        media, _audio_fp_rows(win, hop, gram, qshift), FP_QUARANTINE_SCHEMA,
+        quarantine=True,
+    ).distinct()

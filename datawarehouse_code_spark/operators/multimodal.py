@@ -7,6 +7,13 @@ Doctrine for image/audio/video at 100 TB:
 - decode / feature-extraction / frame-sampling run as `mapInPandas`
   stages: Arrow batches in, Arrow batches out, one Python worker per
   partition — a narrow map, so it scales like any projection;
+- every decode lane here and in media_dedup / video_dedup is a row
+  function handed to ONE map, `_media_map`, which owns the only copy
+  of the bad-payload policy: fail-loud lanes drop NULL payloads and
+  raise on decode errors, quarantine lanes turn a NULL payload or a
+  ValueError / NotImplementedError into one all-NULL row carrying
+  `decode_error`.  `extract_features` keeps its own map: its NULL
+  payload yields an all-NULL feature row, which no other lane does;
 - `decode_image` has REAL executable branches, all pure
   Python/numpy: binary PNM (PPM "P6" RGB / PGM "P5" grayscale),
   uncompressed 24-bit BMP, baseline JPEG (SOF0), and non-interlaced
@@ -1153,6 +1160,65 @@ def decode_image(data: bytes) -> tuple[int, int, int, bytes]:
     )
 
 
+# pandas dtype per DDL type of a decode-map output column: nullable
+# integers over Python ints, so a batch holding a NULL never routes a
+# 64-bit hash through float64 (2**53 + 1 would come back rounded)
+_MAP_DTYPES = {"BIGINT": "Int64", "INT": "Int32", "STRING": object,
+               "BINARY": object}
+
+
+def _media_map(
+    media: DataFrame, rows, schema: str, quarantine: bool = False
+) -> DataFrame:
+    """THE Arrow decode map every media lane rides: `rows(content)`
+    returns the output tuples of one payload (without media_id) and
+    this map owns the only copy of the bad-payload policy.
+
+    Fail-loud (`quarantine=False`): a NULL payload gives no row and
+    every decode error raises.  Quarantine (`schema` ends in
+    `decode_error STRING`): a NULL payload gives one row of NULLs plus
+    'null payload'; a ValueError / NotImplementedError (the decoders'
+    worker-safety contract) gives one row of NULLs plus
+    'ErrorType: message'; a healthy payload gives its rows with a NULL
+    decode_error; any other exception still raises.  A payload's rows
+    are materialized inside the try, so a video whose third frame
+    fails yields only its error row, never partial output.
+
+    A narrow map, no shuffle: payloads and pixels never leave the
+    worker, only the schema's small columns do."""
+    cols = [
+        (name, _MAP_DTYPES[ddl.upper()])
+        for name, ddl in (c.split() for c in schema.split(","))
+    ]
+    blank = (None,) * (len(cols) - 2)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for media_id, content in zip(pdf["media_id"], pdf["content"]):
+                if content is None:
+                    if quarantine:
+                        out.append((media_id, *blank, "null payload"))
+                    continue
+                if not quarantine:
+                    out.extend((media_id, *r) for r in rows(bytes(content)))
+                    continue
+                try:
+                    got = list(rows(bytes(content)))
+                except (ValueError, NotImplementedError) as e:
+                    out.append((media_id, *blank, f"{type(e).__name__}: {e}"))
+                    continue
+                out.extend((media_id, *r, None) for r in got)
+            yield pd.DataFrame(
+                {
+                    name: pd.array([r[i] for r in out], dtype=dtype)
+                    for i, (name, dtype) in enumerate(cols)
+                }
+            )
+
+    return media.mapInPandas(batches, schema)
+
+
 def media_from_documents(documents: DataFrame) -> DataFrame:
     """Derive a media table from the documents fixture: the UTF-8 bytes
     of the text stand in for an encoded media payload."""
@@ -1236,32 +1302,9 @@ def decoded_image_stats(media: DataFrame) -> DataFrame:
     map, no shuffle; pixels never leave the worker, only the
     fixed-width stats row does.  NULL payloads yield no row (a real
     decode pipeline routes them to a quarantine instead)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, srs, sgs, sbs = [], [], [], [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                w, h, sr, sg, sb = _payload_stats(bytes(content))
-                ids.append(media_id)
-                ws.append(w)
-                hs.append(h)
-                srs.append(sr)
-                sgs.append(sg)
-                sbs.append(sb)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "sum_r": pd.Series(srs, dtype="int64"),
-                    "sum_g": pd.Series(sgs, dtype="int64"),
-                    "sum_b": pd.Series(sbs, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, DECODED_STATS_SCHEMA)
+    return _media_map(
+        media, lambda c: [_payload_stats(c)], DECODED_STATS_SCHEMA
+    )
 
 
 QUARANTINE_STATS_SCHEMA = (
@@ -1285,77 +1328,29 @@ def decoded_image_stats_quarantine(media: DataFrame) -> DataFrame:
 
     Same scale shape as the fail-loud variant: a narrow Arrow-batched
     map, no shuffle, pixels never leave the worker."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in
-                   ("media_id", "width", "height", "sum_r", "sum_g", "sum_b",
-                    "decode_error")}
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                out["media_id"].append(media_id)
-                err = None
-                w = h = sr = sg = sb = None
-                if content is None:
-                    err = "null payload"
-                else:
-                    try:
-                        w, h, sr, sg, sb = _payload_stats(bytes(content))
-                    except (ValueError, NotImplementedError) as e:
-                        w = h = sr = sg = sb = None
-                        err = f"{type(e).__name__}: {e}"
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-                out["decode_error"].append(err)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out["media_id"], dtype="int64"),
-                    "width": pd.array(out["width"], dtype="Int32"),
-                    "height": pd.array(out["height"], dtype="Int32"),
-                    "sum_r": pd.array(out["sum_r"], dtype="Int64"),
-                    "sum_g": pd.array(out["sum_g"], dtype="Int64"),
-                    "sum_b": pd.array(out["sum_b"], dtype="Int64"),
-                    "decode_error": pd.Series(out["decode_error"], dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, QUARANTINE_STATS_SCHEMA)
+    return _media_map(
+        media, lambda c: [_payload_stats(c)], QUARANTINE_STATS_SCHEMA,
+        quarantine=True,
+    )
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """One-to-many frame sampling via mapInPandas: each payload is cut
-    into `n_frames` evenly-spaced slices (the batch shape a real video
-    frame-sampler produces: input row → multiple output rows)."""
+    """One-to-many frame sampling through the decode map: each payload
+    is cut into `n_frames` evenly-spaced slices (the batch shape a
+    real video frame-sampler produces: input row → multiple output
+    rows)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, out_idx, out_bytes, out_len = [], [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue  # no payload, no frames
-                size = len(content)
-                step = max(size // n_frames, 1)
-                for i in range(n_frames):
-                    start = i * step
-                    if start >= size:
-                        break
-                    frame = bytes(content[start : start + step])
-                    out_ids.append(media_id)
-                    out_idx.append(i)
-                    out_bytes.append(frame)
-                    out_len.append(len(frame))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out_ids, dtype="int64"),
-                    "frame_idx": pd.Series(out_idx, dtype="int32"),
-                    "frame_bytes": pd.Series(out_bytes, dtype=object),
-                    "frame_len": pd.Series(out_len, dtype="int32"),
-                }
-            )
+    def rows(content: bytes):
+        size = len(content)
+        step = max(size // n_frames, 1)
+        for i in range(n_frames):
+            start = i * step
+            if start >= size:
+                break
+            frame = content[start: start + step]
+            yield i, frame, len(frame)
 
-    return media.mapInPandas(batches, FRAME_SCHEMA)
+    return _media_map(media, rows, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1563,32 +1558,9 @@ def decoded_audio_stats(media: DataFrame) -> DataFrame:
     channel-0 zero crossings).  Same scale shape: narrow map, no
     shuffle, samples never leave the worker.  NULL payloads yield no
     row (the quarantine variant is the production posture)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {k: [] for k in (
-                "media_id", "sample_rate", "n_channels", "n_frames",
-                "sum_abs", "peak_abs", "n_zero_cross",
-            )}
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                r, ch, nf, sa, pk, zc = _audio_payload_stats(bytes(content))
-                for k, v in zip(cols, (media_id, r, ch, nf, sa, pk, zc)):
-                    cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(cols["media_id"], dtype="int64"),
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "n_channels": pd.Series(cols["n_channels"], dtype="int32"),
-                    "n_frames": pd.Series(cols["n_frames"], dtype="int64"),
-                    "sum_abs": pd.Series(cols["sum_abs"], dtype="int64"),
-                    "peak_abs": pd.Series(cols["peak_abs"], dtype="int32"),
-                    "n_zero_cross": pd.Series(cols["n_zero_cross"], dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, AUDIO_STATS_SCHEMA)
+    return _media_map(
+        media, lambda c: [_audio_payload_stats(c)], AUDIO_STATS_SCHEMA
+    )
 
 
 def decoded_audio_stats_quarantine(media: DataFrame) -> DataFrame:
@@ -1597,41 +1569,7 @@ def decoded_audio_stats_quarantine(media: DataFrame) -> DataFrame:
     decode_error, failures carry NULL stats and the decoder's message
     (ValueError / NotImplementedError, the same worker-safety
     contract the image fuzz pins)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    rows.append((media_id,) + (None,) * 6 + ("null payload",))
-                    continue
-                try:
-                    rows.append(
-                        (media_id,)
-                        + _audio_payload_stats(bytes(content))
-                        + (None,)
-                    )
-                except (ValueError, NotImplementedError) as e:
-                    rows.append(
-                        (media_id,) + (None,) * 6
-                        + (f"{type(e).__name__}: {e}",)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_channels", "n_frames",
-                    "sum_abs", "peak_abs", "n_zero_cross", "decode_error",
-                ],
-            ).astype(
-                {
-                    "media_id": "int64",
-                    "sample_rate": "Int32",
-                    "n_channels": "Int32",
-                    "n_frames": "Int64",
-                    "sum_abs": "Int64",
-                    "peak_abs": "Int32",
-                    "n_zero_cross": "Int64",
-                }
-            )
-
-    return media.mapInPandas(batches, AUDIO_QUARANTINE_SCHEMA)
+    return _media_map(
+        media, lambda c: [_audio_payload_stats(c)], AUDIO_QUARANTINE_SCHEMA,
+        quarantine=True,
+    )

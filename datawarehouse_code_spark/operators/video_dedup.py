@@ -17,6 +17,13 @@ never leave the worker, fingerprints are the only output), not
 container realism; a real demuxer slots in behind decode_video_frames
 exactly like Pillow slots in behind decode_image.
 
+Every video lane (grams, frame dHash / pHash rows, their quarantine
+twins) is a row function handed to multimodal._media_map, the one
+decode map; it owns the one bad-payload policy, including the
+all-or-nothing rule: a payload's rows are built in full before any is
+emitted, so a video with one undecodable frame yields only its error
+row in a quarantine lane.
+
 Fingerprints are TEMPORAL GRAMS of per-frame dHashes (the video twin
 of the audio energy grams): md5 over `gram` consecutive frame-hash
 band tuples, matched by VALUE — a copy missing m leading/trailing
@@ -35,6 +42,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.iterative import cut_lineage
+from datawarehouse_code_spark.operators.media_dedup import (
+    PHASH_SIZE,
+    _cap_hot_bands,
+    _cap_hot_fps,
+    _explode_bands,
+    _hamming64,
+    dhash_bits,
+    phash_bits,
+)
+from datawarehouse_code_spark.operators.multimodal import _media_map, decode_image
 
 VIDEO_MAGIC = b"VID0"
 VIDEO_MAX_FRAMES = 4096
@@ -107,9 +124,6 @@ def video_frame_band_tuples(
     both from the same tuples guarantees a video's grams and its
     frame index rows can never disagree about what a frame hashes
     to."""
-    from datawarehouse_code_spark.operators.media_dedup import dhash_bits
-    from datawarehouse_code_spark.operators.multimodal import decode_image
-
     out = []
     for payload in frames:
         w, h, ch, px = decode_image(payload)
@@ -140,42 +154,24 @@ def video_fp_strings(frames: list[bytes], gram: int = 2) -> list[str]:
     return _gram_strings(video_frame_band_tuples(frames), gram)
 
 
+def _video_fp_rows(gram: int):
+    """The row function of both video fingerprint lanes: one (fp,)
+    row per distinct temporal gram of the container's frames."""
+
+    def rows(content: bytes):
+        frames = decode_video_frames(content)
+        return [(fp,) for fp in set(video_fp_strings(frames, gram))]
+
+    return rows
+
+
 def video_fingerprints(media: DataFrame, gram: int = 2) -> DataFrame:
     """Per-media DISTINCT video fingerprints: container walk +
     per-frame image decode + dHash + temporal grams, all inside one
     narrow Arrow-batched map — frames and pixels never leave the
     worker, only (media_id, fp) does.  `gram` is the index contract —
     increments must pass the same value."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            ids, fps = [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                frames = decode_video_frames(bytes(content))
-                for fp in set(video_fp_strings(frames, gram)):
-                    ids.append(media_id)
-                    fps.append(fp)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FP_SCHEMA).distinct()
-
-
-def _cap_hot(fps: DataFrame, cap: int) -> DataFrame:
-    """Distinct-carrier hot-fingerprint cap (the black-frame-loop
-    guard) — delegates to media_dedup._cap_hot_fps, the ONE cap
-    implementation, so the grain can never drift between modalities
-    (r13 consolidation)."""
-    from datawarehouse_code_spark.operators.media_dedup import _cap_hot_fps
-
-    return _cap_hot_fps(fps, cap)
+    return _media_map(media, _video_fp_rows(gram), VIDEO_FP_SCHEMA).distinct()
 
 
 def video_near_dup_pairs(
@@ -192,7 +188,9 @@ def video_near_dup_pairs(
     both join sides) and is materialized once, the winnowing
     precedent — without it the container walk and every
     frame decode re-run per consumer."""
-    fps = _cap_hot(cut_lineage(video_fingerprints(media, gram)), hot_cap)
+    fps = _cap_hot_fps(
+        cut_lineage(video_fingerprints(media, gram)), hot_cap
+    )
     a = fps.select(F.col("media_id").alias("d1"), "fp")
     b = fps.select(F.col("media_id").alias("d2"), "fp")
     return (
@@ -226,7 +224,7 @@ def video_matches_incremental(
     inc = video_fingerprints(new_media, gram).select(
         F.col("media_id").alias("d_new"), "fp"
     )
-    idx = _cap_hot(index, hot_cap).select(
+    idx = _cap_hot_fps(index, hot_cap).select(
         F.col("media_id").alias("d_corpus"), "fp"
     )
     return (
@@ -243,41 +241,6 @@ VIDEO_FRAME_DHASH_SCHEMA = (
 )
 
 
-def _frame_rows_map(media: DataFrame, tuples_fn) -> DataFrame:
-    """The shared frame-row map both per-frame hash lanes ride:
-    `tuples_fn(frames) -> [(frame_idx, band_tuple)]` is the only
-    difference between the dHash and pHash variants, so the container
-    walk, the narrow Arrow shape and the output schema live in
-    exactly one place (a fix to either lane cannot desynchronize the
-    frame alignment the cross-modal matrix assumes)."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            ids, idxs, bands = [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for j, t in tuples_fn(
-                    decode_video_frames(bytes(content))
-                ):
-                    ids.append(media_id)
-                    idxs.append(j)
-                    bands.append(t)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "b0": pd.Series([b[0] for b in bands], dtype="int32"),
-                    "b1": pd.Series([b[1] for b in bands], dtype="int32"),
-                    "b2": pd.Series([b[2] for b in bands], dtype="int32"),
-                    "b3": pd.Series([b[3] for b in bands], dtype="int32"),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FRAME_DHASH_SCHEMA)
-
-
 def video_frame_dhashes(media: DataFrame) -> DataFrame:
     """Per-FRAME dHash rows from VID0 containers: (media_id,
     frame_idx, b0..b3) — one row per decoded frame, the frame-grain
@@ -289,10 +252,12 @@ def video_frame_dhashes(media: DataFrame) -> DataFrame:
     (video_image_matches below).  A narrow Arrow-batched map — frames
     and pixels never leave the worker, only 6 small ints per frame do;
     the loud-failure decode contract is the container walk's."""
-    return _frame_rows_map(
-        media,
-        lambda frames: list(enumerate(video_frame_band_tuples(frames))),
-    )
+
+    def rows(content: bytes):
+        bands = video_frame_band_tuples(decode_video_frames(content))
+        return [(j, *t) for j, t in enumerate(bands)]
+
+    return _media_map(media, rows, VIDEO_FRAME_DHASH_SCHEMA)
 
 
 def video_image_matches(
@@ -316,11 +281,6 @@ def video_image_matches(
     replay-idempotent), so a constant-color frame meets at most
     `band_cap` images per band.  Bucket-then-verify: band collisions
     only propose candidates, the exact 64-bit hamming filter decides."""
-    from datawarehouse_code_spark.operators.media_dedup import (
-        _cap_hot_bands,
-        _hamming64,
-    )
-
     frames = frame_hashes.select(
         F.col("media_id").alias("video_id"), "frame_idx",
         "b0", "b1", "b2", "b3",
@@ -355,38 +315,10 @@ def video_fingerprints_quarantine(
     with fp NULL and the error string — a video is fingerprinted
     all-or-nothing (partial fingerprints would under-match silently);
     healthy media yield their distinct grams with decode_error NULL."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            ids, fps, errs = [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append("null payload")
-                    continue
-                try:
-                    frames = decode_video_frames(bytes(content))
-                    grams = set(video_fp_strings(frames, gram))
-                except (ValueError, NotImplementedError) as e:
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-                    continue
-                for fp in grams:
-                    ids.append(media_id)
-                    fps.append(fp)
-                    errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "fp": pd.Series(fps, dtype=object),
-                    "decode_error": pd.Series(errs, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FP_QUARANTINE_SCHEMA).distinct()
+    return _media_map(
+        media, _video_fp_rows(gram), VIDEO_FP_QUARANTINE_SCHEMA,
+        quarantine=True,
+    ).distinct()
 
 
 def build_frame_dhash_index(frame_hashes: DataFrame) -> DataFrame:
@@ -428,12 +360,6 @@ def image_video_matches(
     capped at `band_cap` distinct VIDEOS before the join (a
     black-frame loop across the corpus is the hot key); band
     collisions only propose, the exact 64-bit hamming decides."""
-    from datawarehouse_code_spark.operators.media_dedup import (
-        _cap_hot_bands,
-        _explode_bands,
-        _hamming64,
-    )
-
     inc = _explode_bands(new_hashes).select(
         F.col("media_id").alias("image_id"), "band_idx", "band_val",
         "b0", "b1", "b2", "b3",
@@ -479,52 +405,15 @@ def video_fingerprints_frames_quarantine(
     fingerprints would under-match silently).  Healthy rows are
     already distinct per media: grams are set()-deduped in the
     worker, frame rows are unique by (media_id, frame_idx)."""
-    import pandas as pd
 
-    def batches(it):
-        for pdf in it:
-            rows = {k: [] for k in
-                    ("media_id", "fp", "frame_idx", "b0", "b1", "b2", "b3",
-                     "err")}
+    def rows(content: bytes):
+        bands = video_frame_band_tuples(decode_video_frames(content))
+        grams = [(fp,) + (None,) * 5 for fp in set(_gram_strings(bands, gram))]
+        return grams + [(None, j, *t) for j, t in enumerate(bands)]
 
-            def emit(media_id, fp=None, frame_idx=None, bands=(None,) * 4,
-                     err=None):
-                rows["media_id"].append(media_id)
-                rows["fp"].append(fp)
-                rows["frame_idx"].append(frame_idx)
-                for k in range(4):
-                    rows[f"b{k}"].append(bands[k])
-                rows["err"].append(err)
-
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    emit(media_id, err="null payload")
-                    continue
-                try:
-                    tuples = video_frame_band_tuples(
-                        decode_video_frames(bytes(content))
-                    )
-                except (ValueError, NotImplementedError) as e:
-                    emit(media_id, err=f"{type(e).__name__}: {e}")
-                    continue
-                for fp in set(_gram_strings(tuples, gram)):
-                    emit(media_id, fp=fp)
-                for j, t in enumerate(tuples):
-                    emit(media_id, frame_idx=j, bands=t)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "fp": pd.Series(rows["fp"], dtype=object),
-                    "frame_idx": pd.array(rows["frame_idx"], dtype="Int32"),
-                    **{
-                        c: pd.array(rows[c], dtype="Int32")
-                        for c in ("b0", "b1", "b2", "b3")
-                    },
-                    "decode_error": pd.Series(rows["err"], dtype=object),
-                }
-            )
-
-    return media.mapInPandas(batches, VIDEO_FPS_FRAMES_QUARANTINE_SCHEMA)
+    return _media_map(
+        media, rows, VIDEO_FPS_FRAMES_QUARANTINE_SCHEMA, quarantine=True
+    )
 
 
 def video_frame_phashes(media: DataFrame) -> DataFrame:
@@ -541,19 +430,11 @@ def video_frame_phashes(media: DataFrame) -> DataFrame:
     image_video_matches / video_image_matches — the band machinery is
     layout-generic; keep pHash frame indexes SEPARATE from dHash
     frame indexes (unrelated band spaces)."""
-    from datawarehouse_code_spark.operators.media_dedup import (
-        PHASH_SIZE,
-        phash_bits,
-    )
-    from datawarehouse_code_spark.operators.multimodal import decode_image
 
-    def tuples(frames):
-        out = []
-        for j, payload in enumerate(frames):
+    def rows(content: bytes):
+        for j, payload in enumerate(decode_video_frames(content)):
             w, h, ch, px = decode_image(payload)
-            if w < PHASH_SIZE or h < PHASH_SIZE:
-                continue
-            out.append((j, phash_bits(w, h, ch, px)))
-        return out
+            if w >= PHASH_SIZE and h >= PHASH_SIZE:
+                yield (j, *phash_bits(w, h, ch, px))
 
-    return _frame_rows_map(media, tuples)
+    return _media_map(media, rows, VIDEO_FRAME_DHASH_SCHEMA)

@@ -17,6 +17,7 @@ is simply re-run — no cross-table transaction needed (SURVEY.md §7.1).
 from __future__ import annotations
 
 import logging
+import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -43,8 +44,8 @@ from datawarehouse_code_spark.operators.dimensions import (
     insert_if_not_exists_report,
 )
 from datawarehouse_code_spark.operators.fact import build_fact, fact_lines, write_fact
-from datawarehouse_code_spark.sources.acid import _staged_overwrite, leased_append
-from datawarehouse_code_spark.sources.catalog import read_table
+from datawarehouse_code_spark.sources.acid import _fs_for, _staged_overwrite, leased_append
+from datawarehouse_code_spark.sources.catalog import read_table, table_path
 
 
 @dataclass
@@ -66,7 +67,32 @@ class Warehouse:
     nation: DataFrame
 
 
-_WAREHOUSE_CACHE: dict[tuple[str, str], Warehouse] = {}
+_WAREHOUSE_CACHE: dict[tuple[str, str], tuple[tuple, Warehouse]] = {}
+_SOURCE_TABLES = ("customer", "part", "nation", "region", "orders", "lineitem")
+
+
+def _source_listing(spark: SparkSession, sf_dir: str) -> tuple:
+    """(path, length, modification time) of every file under the six
+    source tables, read through the Hadoop FS API: a batch appended to
+    a directory-form table, or a table rewritten in place, changes it.
+    A missing table or `sf_dir` is left out; read_table raises for
+    it.  One listStatus of `sf_dir` plus one per table directory: a
+    memo hit pays a few py4j round trips, not a located listing."""
+    fs, root = _fs_for(spark, sf_dir)
+    if not fs.exists(root):
+        return ()
+    names = {os.path.basename(table_path(sf_dir, t)) for t in _SOURCE_TABLES}
+    pending = [st for st in fs.listStatus(root) if st.getPath().getName() in names]
+    listing = []
+    while pending:
+        st = pending.pop()
+        if st.isDirectory():
+            pending.extend(fs.listStatus(st.getPath()))
+        else:
+            listing.append(
+                (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            )
+    return tuple(sorted(listing))
 
 
 def build_warehouse(spark: SparkSession, sf_dir: str) -> Warehouse:
@@ -83,18 +109,19 @@ def build_warehouse(spark: SparkSession, sf_dir: str) -> Warehouse:
     13× per run (VERDICT r1 "What's wrong" #4).  Keyed on the Spark
     applicationId, not id(spark): CPython reuses freed object ids, so
     an id-keyed cache could hand a new session plans bound to a
-    stopped SparkContext.
+    stopped SparkContext.  A plan keeps the file listing it was built
+    with, so a hit is served only while the source tables' listing
+    (_source_listing) is unchanged; a batch landing in a source
+    directory rebuilds the entry.
     """
     cache_key = (spark.sparkContext.applicationId, sf_dir)
+    listing = _source_listing(spark, sf_dir)
     cached = _WAREHOUSE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    customer = read_table(spark, "customer", sf_dir)
-    part = read_table(spark, "part", sf_dir)
-    nation = read_table(spark, "nation", sf_dir)
-    region = read_table(spark, "region", sf_dir)
-    orders = read_table(spark, "orders", sf_dir)
-    lineitem = read_table(spark, "lineitem", sf_dir)
+    if cached is not None and cached[0] == listing:
+        return cached[1]
+    customer, part, nation, region, orders, lineitem = (
+        read_table(spark, t, sf_dir) for t in _SOURCE_TABLES
+    )
 
     dim_client = build_dim_client(customer)
     dim_sub = build_dim_product_subcategory(part)
@@ -120,7 +147,7 @@ def build_warehouse(spark: SparkSession, sf_dir: str) -> Warehouse:
         part=part,
         nation=nation,
     )
-    _WAREHOUSE_CACHE[cache_key] = wh
+    _WAREHOUSE_CACHE[cache_key] = (listing, wh)
     return wh
 
 

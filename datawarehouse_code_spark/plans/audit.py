@@ -59,3 +59,10 @@ def audit_plan(df: DataFrame) -> dict:
         "pushed_filters": pushed,
         "partition_filters": part_filters,
     }
+
+
+def executed_plan(df: DataFrame) -> str:
+    """The physical plan Spark runs for `df` (its `executedPlan`), as
+    text — the one accessor for it, so callers never reach into
+    `_jdf` themselves."""
+    return df._jdf.queryExecution().executedPlan().toString()

@@ -615,7 +615,6 @@ def _dhash_gate_rejects(
     index_path: str,
     max_hamming: int,
     band_cap: int,
-    grid: int,
 ) -> DataFrame:
     """The perceptual image gate's per-batch reject set (media_id
     rows): the larger id of every batch-internal dHash near-dup pair
@@ -639,7 +638,7 @@ def _dhash_gate_rejects(
         cross = (
             dhash_matches_incremental(
                 None, read_keyed_table(sp, index_path),
-                max_hamming=max_hamming, band_cap=band_cap, grid=grid,
+                max_hamming=max_hamming, band_cap=band_cap,
                 new_hashes=hashes,
             )
             .select(F.col("d_new").alias("media_id"))
@@ -1135,20 +1134,19 @@ def run_dhash_index_ingest(
     media: DataFrame,
     index_path: str,
     checkpoint_dir: str | None = None,
-    grid: int = 8,
     n_buckets: int | None = None,
 ) -> None:
     """Exactly-once streaming maintenance of the persisted perceptual
     dHash band index (operators/media_dedup.py build_dhash_index /
     dhash_matches_incremental) — the image sibling of
-    run_cdc_index_ingest.  `grid` is the index contract."""
+    run_cdc_index_ingest."""
     from datawarehouse_code_spark.operators.media_dedup import (
         build_dhash_index,
     )
 
     _run_media_index_ingest(
         media, index_path,
-        lambda b: build_dhash_index(b, grid=grid), checkpoint_dir,
+        build_dhash_index, checkpoint_dir,
         n_buckets=n_buckets,
     )
 
@@ -1255,7 +1253,6 @@ def run_dhash_gated_ingest(
     checkpoint_dir: str | None = None,
     max_hamming: int = 6,
     band_cap: int = 50,
-    grid: int = 8,
     n_buckets: int | None = None,
 ) -> None:
     """Streaming media ingest with a PERCEPTUAL NEAR-DUP GATE — the
@@ -1295,9 +1292,9 @@ def run_dhash_gated_ingest(
         # decode + hash the batch ONCE; every leg below (internal
         # pairs, cross-match, index extend) rides the materialized
         # hash table through the hashes=/new_hashes= pass-throughs
-        hashes = cut_lineage(image_dhash(batch, grid=grid))
+        hashes = cut_lineage(image_dhash(batch))
         rejected = _dhash_gate_rejects(
-            sp, hashes, index_path, max_hamming, band_cap, grid
+            sp, hashes, index_path, max_hamming, band_cap
         )
         survivors = batch.join(rejected, "media_id", "left_anti")
         replace_keyed_auto(
@@ -1305,7 +1302,7 @@ def run_dhash_gated_ingest(
             owner=checkpoint_dir,
         )
         kept_rows = build_dhash_index(
-            None, grid=grid,
+            None,
             hashes=hashes.join(
                 survivors.select("media_id"), "media_id", "left_semi"
             ),
@@ -1535,12 +1532,6 @@ def run_multimodal_gated_ingest(
         replace_keyed_auto,
     )
 
-    # the combined fingerprint map's band schema pins grid=8 (the
-    # image_dhash/image_phash contract) — not a parameter (r13
-    # ADVICE: a knob that raised on every value but 8 was dead API
-    # surface)
-    grid = 8
-
     def _modality(col: F.Column) -> F.Column:
         return F.split(col, "/").getItem(0)
 
@@ -1621,12 +1612,12 @@ def run_multimodal_gated_ingest(
             )
             rejected_parts.append(
                 _dhash_gate_rejects(
-                    sp, ihashes, image_index_path, max_hamming, band_cap, grid
+                    sp, ihashes, image_index_path, max_hamming, band_cap
                 ).select("media_id", F.lit("image").alias("modality"))
             )
             index_extends.append(
                 (image_index_path,
-                 build_dhash_index(None, grid=grid, hashes=ihashes),
+                 build_dhash_index(None, hashes=ihashes),
                  images.select("media_id"), "media_id")
             )
             if image_phash_index_path is not None:
@@ -1634,12 +1625,12 @@ def run_multimodal_gated_ingest(
                 rejected_parts.append(
                     _dhash_gate_rejects(
                         sp, iphashes, image_phash_index_path,
-                        max_hamming, band_cap, grid,
+                        max_hamming, band_cap,
                     ).select("media_id", F.lit("image").alias("modality"))
                 )
                 index_extends.append(
                     (image_phash_index_path,
-                     build_dhash_index(None, grid=grid, hashes=iphashes),
+                     build_dhash_index(None, hashes=iphashes),
                      images.select("media_id"), "media_id")
                 )
             if (
@@ -1734,9 +1725,7 @@ def run_multimodal_gated_ingest(
                     rejected_parts.append(
                         video_image_matches(
                             vframes,
-                            build_dhash_index(
-                                None, grid=grid, hashes=ihashes
-                            ),
+                            build_dhash_index(None, hashes=ihashes),
                             max_hamming=max_hamming, band_cap=band_cap,
                         )
                         .select(F.col("image_id").alias("media_id"))

@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.plans.audit import executed_plan
 from datawarehouse_code_spark.sources.bucketed import (
     BUCKET_COL,
     bucket_expr,
@@ -133,7 +134,7 @@ def test_maintenance_scan_is_partition_pruned(spark, tmp_path):
     path = str(tmp_path / "t")
     write_bucketed(spark, _frame(spark, range(40)), path, ["doc_id"], N)
     pruned = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin([1, 2]))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(pruned)
     assert "PartitionFilters" in plan and f"{BUCKET_COL}#" in plan.split(
         "PartitionFilters", 1
     )[1].split("]", 1)[0]

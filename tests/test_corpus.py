@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.corpus import clean_corpus, write_clean_corpus
 from datawarehouse_code_spark.operators.text import near_dup_pairs_exact
-from datawarehouse_code_spark.plans.audit import formatted_plan
+from datawarehouse_code_spark.plans.audit import executed_plan, formatted_plan
 from datawarehouse_code_spark.sources.catalog import read_table
 from tests.conftest import SF_DIR
 
@@ -631,8 +631,7 @@ def test_weighted_sample_k_matches_python_and_is_weight_sensitive(spark):
     heavy = sum(1 for i in got if i % 10 == 0)
     assert heavy > 25
 
-    plan = weighted_sample_k(df, "doc_id", "w", 50)._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = executed_plan(weighted_sample_k(df, "doc_id", "w", 50))
     assert "TakeOrderedAndProject" in plan
 
     with pytest.raises(ValueError, match="k must be"):

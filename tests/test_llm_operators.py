@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from datawarehouse_code_spark.plans.audit import executed_plan
 from datawarehouse_code_spark.plans.llm_queries import (
     _dedup_minhash_lsh,
     _dedup_near_jaccard,
@@ -461,7 +462,7 @@ def test_ivf_index_build_query_extend(spark, tmp_path):
 
     # partition pruning: the assignments scan must carry cent_id
     # partition filters (probed subset), not read-all-then-filter
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(got)
     import re
 
     m = re.search(r"PartitionFilters: \[[^\]]*cent_id[^\]]*\]", plan)

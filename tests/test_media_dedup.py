@@ -422,15 +422,6 @@ def test_dhash_grid_contract_is_loud():
         dhash_bits(10, 7, 1, bytes(70), grid=7)
 
 
-def test_image_dhash_rejects_non_default_grid(spark):
-    media = spark.createDataFrame(
-        [(1, "image/ppm", encode_const_ppm(20, 18, (1, 2, 3)))],
-        "media_id BIGINT, media_type STRING, content BINARY",
-    )
-    with pytest.raises(ValueError, match="grid=8"):
-        image_dhash(media, grid=16)
-
-
 # ---------------------------------------------------------------- pHash
 
 def _xblock_raster(seed: int, size: int = 32, scale: int = 1) -> bytes:
@@ -536,28 +527,40 @@ def test_image_fingerprints_quarantine_combined(spark):
     dHash columns equal image_dhash's and its pHash columns (via
     phash_view) equal image_phash's; a healthy image SMALLER than the
     32x32 pHash grid keeps dHash with pHash NULL and no error; a
-    corrupt payload quarantines the whole row."""
+    corrupt payload quarantines the whole row.
+
+    One partition, so the corrupt row and the pHash-less row share an
+    Arrow batch with the healthy ones: a NULL in a batch must not
+    route the 64-bit hash columns through float64 (ROWS_A's dHash has
+    bit 63 set and magnitude above 2**53, so a float round trip would
+    change it).  image_dhash_quarantine gets the same checks."""
     from datawarehouse_code_spark.operators.media_dedup import (
+        image_dhash_quarantine,
         image_fingerprints_quarantine,
         image_phash,
         phash_view,
     )
+    from datawarehouse_code_spark.operators.multimodal import decode_image
 
+    small = encode_gray_pgm(9, 8, dhash_raster(ROWS_A))
     media = spark.createDataFrame(
         [
             (1, "image/pgm", encode_gray_pgm(32, 32, _xblock_raster(3))),
-            (2, "image/pgm",
-             encode_gray_pgm(9, 8, dhash_raster(ROWS_A))),
+            (2, "image/pgm", small),
             (3, "image/pgm", b"NOT AN IMAGE"),
         ],
         ["media_id", "media_type", "content"],
-    )
+    ).coalesce(1)
     combined = image_fingerprints_quarantine(media).localCheckpoint()
     rows = {r["media_id"]: r for r in combined.collect()}
 
     healthy = media.filter("media_id <= 2")
     want_d = {r["media_id"]: (r["b0"], r["b1"], r["b2"], r["b3"], r["dhash"])
               for r in image_dhash(healthy).collect()}
+    bands = dhash_bits(*decode_image(small))
+    packed = sum(b << (16 * k) for k, b in enumerate(bands)) - (1 << 64)
+    assert want_d[2] == (*bands, packed)
+    assert packed < -(1 << 53) and float(packed) != packed
     got_d = {m: (r["b0"], r["b1"], r["b2"], r["b3"], r["dhash"])
              for m, r in rows.items() if m <= 2}
     assert got_d == want_d
@@ -569,9 +572,16 @@ def test_image_fingerprints_quarantine_combined(spark):
     assert set(got_p) == {1}
     assert got_p[1][:4] == want_p[1][:4]
     assert got_p[1][4] == want_p[1][4]
+    assert float(want_p[1][4]) != want_p[1][4]
 
     assert rows[2]["phash"] is None and rows[2]["p0"] is None
     assert rows[2]["decode_error"] is None
 
     assert rows[3]["decode_error"] is not None
     assert rows[3]["dhash"] is None and rows[3]["phash"] is None
+
+    dq = {r["media_id"]: r for r in image_dhash_quarantine(media).collect()}
+    assert {m: (r["b0"], r["b1"], r["b2"], r["b3"], r["dhash"])
+            for m, r in dq.items() if m <= 2} == want_d
+    assert all(dq[m]["decode_error"] is None for m in (1, 2))
+    assert dq[3]["decode_error"] is not None and dq[3]["dhash"] is None

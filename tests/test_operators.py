@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.dimensions import insert_if_not_exists
 from datawarehouse_code_spark.operators.fact import build_fact
+from datawarehouse_code_spark.plans.audit import executed_plan
 from datawarehouse_code_spark.sources.catalog import (
     read_csv,
     read_json,
@@ -353,7 +354,7 @@ def test_fuzzy_prefix_join_contract(spark):
     # id 3 matches nothing within distance 2
     assert got == {(1, 10): 0, (1, 11): 1}
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -12,6 +12,7 @@ from datetime import date, datetime
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.pipeline import build_warehouse, run_pipeline
+from datawarehouse_code_spark.plans.audit import executed_plan
 from tests.conftest import SF_DIR
 
 
@@ -33,7 +34,7 @@ def test_run_pipeline_materializes_and_reads_back(spark, tmp_path):
 
     # partition pruning actually happens on a year filter
     fact_back = spark.read.parquet(f"{out}/fact")
-    plan = fact_back.filter(F.col("year") == 1995)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(fact_back.filter(F.col("year") == 1995))
     assert "PartitionFilters" in plan and "year" in plan
 
     # O22/O26: the overwritten cube read back equals the in-memory cube
@@ -214,6 +215,27 @@ def test_cube_drops_rows_the_star_join_dropped(spark, tmp_path):
          "STANDARD BRASS", "Brand#1", 1, "Customer#1", "mechanic_company",
          "ALGERIA", date(1995, 3, 4), 4, 3, 1995, 2.0, 20.0),
     ]
+
+
+def test_build_warehouse_sees_a_batch_landing_in_a_source_dir(spark, tmp_path):
+    """build_warehouse is memoized per (session, sf_dir), but a plan
+    keeps the file listing it was built with: lineitem rows appended
+    to a directory-form table as a new file must reach the next
+    build_warehouse of the same directory."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    for name in ("customer", "part", "nation", "region", "orders"):
+        shutil.copy(f"{SF_DIR}/{name}.parquet", tmp_path / f"{name}.parquet")
+    lines = pq.read_table(f"{SF_DIR}/lineitem.parquet")
+    n, held = lines.num_rows, lines.num_rows // 10
+    (tmp_path / "lineitem.parquet").mkdir()
+    pq.write_table(lines.slice(0, n - held), tmp_path / "lineitem.parquet/part-0.parquet")
+
+    assert build_warehouse(spark, str(tmp_path)).fact.count() == n - held
+    pq.write_table(lines.slice(n - held), tmp_path / "lineitem.parquet/part-1.parquet")
+    assert build_warehouse(spark, str(tmp_path)).fact.count() == n
 
 
 def test_write_fact_append_mode(spark, tmp_path):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.plans.audit import executed_plan
 from tests.conftest import SF_DIR
 
 NF = 1 << 16
@@ -101,7 +102,7 @@ def test_score_is_narrow_no_shuffle(spark, docs):
         num_features=NF, max_iter=5,
     )
     scored = quality_classifier_score(docs, model, num_features=NF)
-    plan = scored._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(scored)
     assert "Exchange" not in plan, plan[:2000]
     assert scored.count() == docs.count()
 

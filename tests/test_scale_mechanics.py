@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.dimensions import insert_if_not_exists_report
 from datawarehouse_code_spark.operators.layout import write_bucketed_table
+from datawarehouse_code_spark.plans.audit import executed_plan
 from datawarehouse_code_spark.sources.catalog import read_table, register_views
 from tests.conftest import SF_DIR
 
@@ -35,7 +36,7 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
         try:
             joined = a.join(b, "l_orderkey")
             assert joined.count() > 0
-            plan = joined._jdf.queryExecution().executedPlan().toString()
+            plan = executed_plan(joined)
             assert "SortMergeJoin" in plan
             assert "Exchange" not in plan, "bucketed join still shuffles:\n" + plan
         finally:
@@ -116,7 +117,7 @@ def test_filter_pushdown_reaches_scan(spark):
     from datawarehouse_code_spark.plans.registry import SUPPLEMENTARY_QUERIES
 
     df = SUPPLEMENTARY_QUERIES["filter_orders_predicates"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "PushedFilters" in plan
     assert "GreaterThan" in plan or "In(o_orderstatus" in plan
 
@@ -220,7 +221,7 @@ def test_asof_join_single_shuffle_no_join_node(spark):
     from datawarehouse_code_spark.plans.registry import QUERIES
 
     df = QUERIES["asof_join_events"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert plan.count("Exchange") == 1
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
@@ -234,7 +235,7 @@ def test_vocab_topk_compiles_to_take_ordered(spark):
     from datawarehouse_code_spark.plans.registry import SUPPLEMENTARY_QUERIES
 
     df = SUPPLEMENTARY_QUERIES["vocab_top_terms"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "TakeOrderedAndProject" in plan
 
 
@@ -245,7 +246,7 @@ def test_contamination_check_broadcasts_holdout(spark):
     from datawarehouse_code_spark.plans.registry import QUERIES
 
     df = QUERIES["contamination_check"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -260,7 +261,7 @@ def test_scd2_merge_is_single_join(spark):
     from datawarehouse_code_spark.plans.registry import QUERIES
 
     df = QUERIES["dim_client_scd2"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     n_joins = len(re.findall(r"Join", plan))
     assert n_joins == 1, f"expected 1 physical join, found {n_joins}"
     assert "BroadcastNestedLoop" not in plan
@@ -279,7 +280,7 @@ def test_repetition_stats_single_doc_shuffle(spark):
 
     df = repetition_stats(read_table(spark, "documents", SF_DIR))
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("REPARTITION_BY_COL") == 1
     # at most one more exchange (the tiny narrow branch when AQE does

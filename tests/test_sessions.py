@@ -8,6 +8,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from datawarehouse_code_spark.operators.sessions import sessionize
+from datawarehouse_code_spark.plans.audit import executed_plan
 from datawarehouse_code_spark.sources.catalog import read_table
 from tests.conftest import SF_DIR
 
@@ -74,7 +75,7 @@ def test_sessionize_single_exchange_plan(spark):
     out = sessionize(events, ["user_id"], "ts", gap="30 minutes",
                      tiebreak="event_id")
     out.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 exchange, got {n_exchanges}:\n{plan}"
 
@@ -261,7 +262,7 @@ def test_funnel_cap_keeps_single_exchange(spark):
         events, ["view", "click", "purchase"], max_events_per_user=10**6
     )
     out.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     n = plan.count("Exchange hashpartitioning")
     # one exchange for the per-user pass + the final tiny rollup on
     # step ordinals (<= k rows) — the user-keyed data moves ONCE

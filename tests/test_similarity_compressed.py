@@ -12,6 +12,7 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from datawarehouse_code_spark.plans.audit import executed_plan, formatted_plan
 from tests.conftest import SF_DIR
 
 
@@ -115,7 +116,7 @@ def test_int8_rerank_pushes_id_list_into_vectors_scan(spark, emb, tmp_path):
     got = query_ivf_index(
         spark, path, emb.filter(F.col("vec_id") < 10), k=3, n_probes=2
     )
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(got)
     import re
 
     assert re.search(r"PartitionFilters: \[[^\]]*cent_id[^\]]*\]", plan), plan[:3000]
@@ -393,7 +394,7 @@ def test_filtered_query_ivf_keeps_partition_pruning(
         spark, path, emb.filter(F.col("vec_id") < 50),
         k=5, n_probes=2, allowed=allowed_en,
     )
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(got)
     assert re.search(r"PartitionFilters: \[[^\]]*cent_id[^\]]*\]", plan), plan[:3000]
     allowed_ids = {r["doc_id"] for r in allowed_en.collect()}
     rows = got.collect()
@@ -435,13 +436,7 @@ def test_attr_predicate_pushdown_matches_allowed_semi_join(
         # executedPlan().toString() truncates long scan lines, so use
         # the formatted explain
         if compress is None:
-            import contextlib
-            import io
-
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                via_pred.explain("formatted")
-            plan = buf.getvalue()
+            plan = formatted_plan(via_pred)
             assert re.search(r"PartitionFilters: \[[^\]]*cent_id", plan)
             assert re.search(
                 r"PushedFilters: \[[^\]]*EqualTo\(lang,en\)", plan
